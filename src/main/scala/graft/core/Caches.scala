@@ -51,10 +51,9 @@ object Caches {
     *
     * Why: cached plans are pinned to their physical partitioning when
     * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
-    * false (the engine's default posture — the feature pipeline's
-    * stage-1 cache must keep its entity layout for the as-of merge), so
-    * a small descriptor table cached off a 128-partition exchange makes
-    * EVERY consumer stage schedule 128 near-empty tasks. Coalescing to
+    * false (the engine's default posture), so a small descriptor table
+    * cached off a 128-partition exchange makes EVERY consumer stage
+    * schedule 128 near-empty tasks. Coalescing to
     * `defaultParallelism` (= cores locally, executor slots on a
     * cluster) keeps one task per slot — scale-adaptive, not a tuned
     * constant.

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.operators.{AsOf, Sessionize, Windows}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,12 +18,12 @@ import org.apache.spark.sql.functions._
   * ts, so no feature ever sees a point later than the row it lands on.
   *
   * Scale notes (SURVEY.md §7.5): the per-entity layout shuffle happens
-  * once (hash `repartition(entity)` + in-partition (entity, ts) sort —
-  * the layout the sessionize window consumes exchange-free); window
-  * features use the
-  * bucket-decomposed equi-groupBy (map-side combinable, no range-join
-  * rescans); the as-of join is the union+running-last trick (one shuffle,
-  * no join explosion); AQE splits skewed entities.
+  * once (hash `repartition(entity)` + in-partition (entity, ts) sort),
+  * and every later stage reads it exchange-free: the sessionize window,
+  * the bucket rollup of the window features (two groupBys clustered by
+  * entity, no range-join rescans) and the native as-of merge. Skew is
+  * NOT split: a hot entity is one task through all three stages (AQE
+  * splits skew only in sort-merge joins, and the pipeline plans none).
   */
 object FeaturePipeline {
 
@@ -39,9 +39,10 @@ object FeaturePipeline {
     *                      semantics (AsOfNativeSpec), sorts each side
     *                      separately instead of the interleaved union
     * @param tieCols       columns breaking (entity, ts) ordering ties in
-    *                      the sessionize stage — pass the source's unique
-    *                      id (e.g. event_id) whenever timestamps can
-    *                      repeat per entity, or session assignment is
+    *                      the sessionize and successive-difference
+    *                      windows — pass the source's unique id (e.g.
+    *                      event_id) whenever timestamps can repeat per
+    *                      entity, or session ids and rmssd are
     *                      retry-nondeterministic (same hazard the
     *                      q_sessionize/q_backfill queries close)
     */
@@ -56,10 +57,9 @@ object FeaturePipeline {
     * windows (shuffle volume = overlap·|points|), points first collapse
     * into TUMBLING buckets of width wstep — a map-side-combinable
     * groupBy producing |span|/wstep rows per entity — and each window
-    * k then combines its R = wsize/wstep consecutive buckets. Shuffle
-    * volume drops from overlap·|points| to ~|points|/avg_bucket_size +
-    * R·|buckets|; at 100 TB that is the difference between reshuffling
-    * the table R times over and reshuffling a per-mille-scale summary.
+    * k then combines its R = wsize/wstep consecutive buckets. Both
+    * levels group by entity first, so over an entity-clustered input
+    * (the pipeline's stage-1 layout) neither level shuffles at all.
     *
     * Decomposability: count/sum/sumsq/min/max combine trivially. The
     * rmssd pair gate (both endpoints inside the window) decomposes by
@@ -69,6 +69,8 @@ object FeaturePipeline {
     * picks dcum[b − k] — exact slice semantics, no approximation.
     * (Equality with [[windowFeatures]] is asserted in PipelineSpec.)
     *
+    * Emits only windows that hold a point; [[windowFeatures]] also
+    * emits the empty grid windows (n_points = 0).
     * Requires wsize % wstep == 0 (integral overlap degree R).
     */
   def windowFeaturesRolled(points: DataFrame, entityCol: String,
@@ -78,7 +80,10 @@ object FeaturePipeline {
       "rolled path needs wsize = R * wstep, R >= 1")
     val r = (cfg.wsize / cfg.wstep).toInt
     val s = cfg.wstep
-    val w = Window.partitionBy(col(entityCol)).orderBy(col(tsCol))
+    // ties ordered as in sessionize: tied (entity, ts) rows must not
+    // take their successive differences from shuffle fetch order
+    val w = Window.partitionBy(col(entityCol))
+      .orderBy(col(tsCol) +: cfg.tieCols.map(col): _*)
     val we = Window.partitionBy(col(entityCol))
     val pts = points.select(col(entityCol), col(tsCol),
       col(valueCol).as("__v"),
@@ -112,50 +117,34 @@ object FeaturePipeline {
       .groupBy(col(entityCol), col("__b"))
       .agg(bucketAggs.head, bucketAggs.tail: _*)
 
-    // level 2: densify buckets to the full per-entity range, then
-    // combine each window's R consecutive buckets as a SUM OF LEADS
-    // window expression: window k (anchored at bucket k) takes bucket
-    // k+j's stats — and its lag<=j cumulative pair sums — via lead(_, j).
-    // Crucially this PRESERVES hash(entity) partitioning (groupBy on
-    // (entity, k) would not), so the downstream as-of join needs no
-    // exchange of either side. Dense rows make lead offsets == bucket
-    // offsets even across empty buckets, and give empty windows their
-    // grid row for free.
-    val bounds = buckets.groupBy(col(entityCol)).agg(
-      min(col("__first")).as("__first"), max(col("__last")).as("__last"))
-      .where(col("__last") > col("__first"))
-    val dense = bounds
-      .withColumn("__b", explode(sequence(lit(0L),
-        floor((col("__last") - col("__first")) / s).cast("long"))))
-      .join(buckets.drop("__first", "__last"),
-        Seq(entityCol, "__b"), "left")
-    val wLead = Window.partitionBy(col(entityCol)).orderBy(col("__b"))
-    def atJ(name: String, j: Int): Column =
-      if (j == 0) col(name) else lead(col(name), j).over(wLead)
-    def sumJ(f: Int => Column): Column =
-      (0 until r).map(f).reduce(_ + _)
-    val nPts = sumJ(j => coalesce(atJ("__cnt", j), lit(0L)))
-    val s1 = sumJ(j => coalesce(atJ("__s1", j), lit(0.0)))
-    val s2 = sumJ(j => coalesce(atJ("__s2", j), lit(0.0)))
-    val mns = (0 until r).map(j => atJ("__mn", j))
-    val mxs = (0 until r).map(j => atJ("__mx", j))
-    val mn = if (r == 1) mns.head else least(mns: _*)
-    val mx = if (r == 1) mxs.head else greatest(mxs: _*)
-    val d2 = sumJ(j => coalesce(atJ(s"__d2_$j", j), lit(0.0)))
-    val cEff = sumJ(j => coalesce(atJ(s"__c_$j", j), lit(0L)))
+    // level 2: explode each bucket b to the R windows k = b − j (j < R)
+    // that contain it, carrying its lag<=j cumulative pair sums, and
+    // combine them with ONE groupBy(entity, k). hash(entity) already
+    // satisfies ClusteredDistribution(entity, k), so this level plans
+    // no exchange, no join and no broadcast.
     val kGridMax = floor((col("__last") - col("__first") - 1) / s)
+    val anchors = inline(array((0 until r).map(j => struct(lit(j).as("__j"),
+      col(s"__d2_$j").as("__d2"), col(s"__c_$j").as("__c"))): _*))
+    val (nPts, s1, s2) = (col("n_points"), col("__s1"), col("__s2"))
     val nOk = nPts >= cfg.minWindowLen
-    dense.select(col(entityCol),
-      (col("__first") + col("__b") * s).as("window_start"),
-      col("__b"), kGridMax.as("__kmax"),
-      nPts.as("n_points"),
-      when(nOk, s1 / nPts).as("f_mean"),
-      when(nOk, sqrt(s2 / nPts - (s1 / nPts) * (s1 / nPts))).as("f_std"),
-      when(nOk, mn).as("f_min"),
-      when(nOk, mx).as("f_max"),
-      when(nOk && cEff > 0, sqrt(d2 / cEff)).as("f_rmssd"))
-      .where(col("__b") <= col("__kmax"))
-      .drop("__b", "__kmax")
+    buckets.select(col("*"), anchors)
+      .withColumn("__k", col("__b") - col("__j"))
+      .where(col("__k") >= 0 && col("__k") <= kGridMax)
+      .groupBy(col(entityCol), col("__k"))
+      .agg(first(col("__first")).as("__first"),
+        sum(col("__cnt")).as("n_points"),
+        sum(col("__s1")).as("__s1"), sum(col("__s2")).as("__s2"),
+        min(col("__mn")).as("__mn"), max(col("__mx")).as("__mx"),
+        sum(col("__d2")).as("__d2"), sum(col("__c")).as("__c"))
+      .select(col(entityCol),
+        (col("__first") + col("__k") * s).as("window_start"),
+        nPts,
+        when(nOk, s1 / nPts).as("f_mean"),
+        when(nOk, sqrt(s2 / nPts - (s1 / nPts) * (s1 / nPts))).as("f_std"),
+        when(nOk, col("__mn")).as("f_min"),
+        when(nOk, col("__mx")).as("f_max"),
+        when(nOk && col("__c") > 0, sqrt(col("__d2") / col("__c")))
+          .as("f_rmssd"))
   }
 
   /** Stage 2 (reference path): per-(entity, window) features over the
@@ -164,7 +153,8 @@ object FeaturePipeline {
     * inside the window (numpy slice semantics). */
   def windowFeatures(points: DataFrame, entityCol: String, tsCol: String,
                      valueCol: String, cfg: Config): DataFrame = {
-    val w = Window.partitionBy(col(entityCol)).orderBy(col(tsCol))
+    val w = Window.partitionBy(col(entityCol))
+      .orderBy(col(tsCol) +: cfg.tieCols.map(col): _*)
     val pts = points.select(col(entityCol), col(tsCol),
       col(valueCol).as("__v"),
       lag(col(tsCol), 1).over(w).as("__prev_ts"),
@@ -194,8 +184,7 @@ object FeaturePipeline {
     */
   def run(spark: SparkSession, points: DataFrame, entityCol: String,
           tsCol: String, valueCol: String, cfg: Config,
-          checkpoint: Option[String] = None,
-          numRangePartitions: Int = 0): DataFrame = {
+          checkpoint: Option[String] = None): DataFrame = {
 
     def stage(name: String)(df: => DataFrame): DataFrame = checkpoint match {
       case Some(root) => Pipeline.stage(spark, root, name)(df)
@@ -206,34 +195,20 @@ object FeaturePipeline {
     // the sessionize window requires ClusteredDistribution(entity), so
     // hash(entity) partitioning is reused exchange-free, and the
     // within-partition sort on (entity, ts, ties) satisfies the
-    // window's required ordering. (Rounds 1–5 range-partitioned on
-    // (entity, ts) first — but RangePartitioning(entity, ts) does NOT
-    // satisfy the window's entity clustering (an entity can straddle a
-    // range boundary), so Catalyst inserted a second full exchange
-    // right after it: the physical plan shuffled every point TWICE
-    // before the first window. Plan evidence:
-    // plans/r06/flagship_s1_{before,after}.txt. Skew is unchanged — a
-    // hot entity always lands in one window partition either way —
-    // and guide §2.4 is the motivation: two operations keyed the same
-    // way share one exchange.)
-    val laidPlan = stage("s1_sessionized") {
-      val base =
-        if (numRangePartitions > 0)
-          points.repartition(numRangePartitions, col(entityCol))
-        else points.repartition(col(entityCol))
+    // window's required ordering. (A range layout on (entity, ts) does
+    // not satisfy the entity clustering and cost a second full exchange:
+    // plans/r06/flagship_s1_{before,after}.txt.) Both consumers, the
+    // stage-2 rollup and the as-of left side, read this one exchange —
+    // the second as a ReusedExchange — so nothing is cached. The
+    // partition count is pinned to the session's shuffle partitions so
+    // AQE cannot coalesce the layout below one task per slot.
+    val laid = stage("s1_sessionized") {
+      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       Sessionize.withSessionId(
-        base.sortWithinPartitions(
+        points.repartition(parts, col(entityCol)).sortWithinPartitions(
           col(entityCol) +: col(tsCol) +: cfg.tieCols.map(col): _*),
         entityCol, tsCol, cfg.sessionGap, tieCols = cfg.tieCols)
     }
-    // Stage 1 feeds THREE consumers (window features, grid bounds, the
-    // as-of left side); without a checkpoint the lazy plan would re-run
-    // the explode+shuffle per consumer — persist instead (checkpointed
-    // runs already re-read the materialized parquet).
-    val laid =
-      if (checkpoint.isDefined) laidPlan
-      else graft.core.Caches.persisted(laidPlan,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Stage 2: windowed features on the anchored per-entity grid — via
     // the bucket rollup whenever the grid is regular (wsize = R·wstep),
@@ -259,11 +234,9 @@ object FeaturePipeline {
       if (cfg.nativeAsOf) {
         // native operator drops the right keys; carry the availability
         // ts explicitly as payload for provenance
-        val prefixed = feats.columns
-          .filterNot(Set(entityCol, tsCol))
-          .foldLeft(feats.withColumn("feature_ts", col(tsCol))) {
-            (df, c) => df.withColumnRenamed(c, s"f_$c")
-          }
+        val prefixed = feats.select(feats.columns.toSeq.map(c =>
+          if (c == entityCol || c == tsCol) col(c) else col(c).as(s"f_$c")
+        ) :+ col(tsCol).as("feature_ts"): _*)
         graft.plans.AsOfJoinNative.joinBackward(spark, laid, prefixed,
           entityCol, tsCol, cfg.maxStaleness)
       } else {

@@ -135,12 +135,24 @@ class PipelineSpec extends SparkSpec {
             case x => x.toString
           }).mkString("|")
       }.toSeq
-    val direct = canon(FeaturePipeline.windowFeatures(
-      points, "entity_id", "ts", "value", cfg))
-    val rolled = canon(FeaturePipeline.windowFeaturesRolled(
-      points, "entity_id", "ts", "value", cfg))
-    assert(rolled.size == direct.size)
-    rolled.zip(direct).foreach { case (a, b) => assert(a == b, s"$a != $b") }
+    // for R = 1, 2 and 3, with one more entity whose span (150) is a
+    // multiple of wstep: its last point's bucket anchors a window past
+    // the grid (the kmax cut), and the gap before it leaves empty windows
+    val aligned = Seq(0L, 3L, 7L, 12L, 30L, 31L, 40L, 45L, 59L, 61L, 88L,
+      150L).map(t => ("aligned", t, ((t * 7) % 23).toDouble))
+    val input = (pointRows ++ aligned).toDF("entity_id", "ts", "value")
+    Seq(1, 2, 3).foreach { r =>
+      val c = cfg.copy(wsize = r * cfg.wstep)
+      // the rollup emits no row for a window without points
+      val direct = canon(FeaturePipeline.windowFeatures(
+        input, "entity_id", "ts", "value", c).where($"n_points" >= 1))
+      val rolled = canon(FeaturePipeline.windowFeaturesRolled(
+        input, "entity_id", "ts", "value", c))
+      assert(rolled.size == direct.size, s"R = $r")
+      rolled.zip(direct).foreach { case (a, b) =>
+        assert(a == b, s"R = $r: $a != $b")
+      }
+    }
   }
 
   test("checkpointed stages write per-partition lineage and resume " +
@@ -206,22 +218,22 @@ class PipelineSpec extends SparkSpec {
     }
     val df = dupRows.toDF("entity_id", "ts", "value", "pos")
     val cfgT = cfg.copy(tieCols = Seq("pos"))
-    def runWith(input: org.apache.spark.sql.DataFrame): Map[(String, Long,
-      Double, Long), Int] =
+    def runWith(input: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
       FeaturePipeline.run(spark, input, "entity_id", "ts", "value", cfgT)
-        .select(col("entity_id"), col("ts"), col("value"),
-          col("session_id"))
+        .select(Seq("entity_id", "ts", "value", "session_id", "f_n",
+          "f_mean", "f_std", "f_vmin", "f_vmax", "f_rmssd",
+          "feature_ts").map(col): _*)
         .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getLong(3)))
+        .map(_.toSeq)
         .groupBy(identity).view.mapValues(_.length).toMap
     // different physical layouts = a retry/speculative-execution proxy:
-    // the window ordering (ts, pos) is total, so session ids must not
-    // depend on how the shuffle happened to order tied rows
+    // the window ordering (ts, pos) is total, so neither session ids
+    // nor the successive-difference features may depend on how the
+    // shuffle happened to order tied rows
     val a = runWith(df.repartition(7))
     val b = runWith(df.repartition(3, col("value")))
-    assert(a == b, "session ids changed across partitionings")
-    assert(a.keys.map(_._4).toSet.size > 1, "fixture produced 1 session")
+    assert(a == b, "session ids or features changed across partitionings")
+    assert(a.keys.map(_(3)).toSet.size > 1, "fixture produced 1 session")
     // and the collisions were real: some (entity, ts) pair repeats
     assert(dupRows.groupBy(r => (r._1, r._2)).exists(_._2.size > 1),
       "fixture produced no duplicate (entity, ts) keys")

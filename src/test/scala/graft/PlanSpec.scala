@@ -20,8 +20,9 @@ class PlanSpec extends SparkSpec {
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
-  private def exchanges(plan: String): Int =
-    "\\(\\d+\\) Exchange".r.findAllIn(plan).length
+  /** Exchange nodes in a plan tree (ReusedExchange not counted). */
+  private def exchanges(tree: String): Int =
+    " Exchange \\(\\d+\\)".r.findAllIn(tree).length
 
   // The only queries allowed a BroadcastNestedLoopJoin: each scores a
   // CONSTANT-size broadcast side against the big side (all-pairs geo
@@ -58,17 +59,26 @@ class PlanSpec extends SparkSpec {
 
   test("flagship pipeline: native as-of join, bounded exchange count, " +
     "no sort-merge join") {
-    val plan = planOf(
-      graft.queries.PipelineQueries.qFeaturePipeline(spark, sf))
+    val df = graft.queries.PipelineQueries.qFeaturePipeline(spark, sf)
+    df.collect() // only the final AQE plan shows which exchange is reused
+    val plan = planOf(df)
+    val finalTree = plan.substring(plan.indexOf("== Final Plan =="),
+      plan.indexOf("== Initial Plan =="))
     assert(plan.contains("AsOfJoin"),
       "native as-of operator missing from the flagship plan")
     assert(!plan.contains("SortMergeJoin"),
       "flagship should not need a sort-merge join")
-    // 6 as of round 3: range layout, bucket rollup partials/merge,
-    // grid bounds, as-of input sorts, final orderBy. A SEVENTH exchange
-    // means a partitioning-preserving rewrite broke.
-    val n = exchanges(plan)
-    assert(n <= 6, s"flagship plan grew to $n exchanges (was 6):\n$plan")
+    assert(!plan.contains("BroadcastExchange"),
+      s"flagship broadcasts a table:\n$plan")
+    assert(!plan.contains("InMemoryRelation"),
+      s"flagship caches a table:\n$plan")
+    assert(finalTree.contains("ReusedExchange"),
+      s"the stage-1 layout is not shared by its two consumers:\n$plan")
+    // the stage-1 layout and the final orderBy; the rollup and the as-of
+    // merge read the layout exchange-free. A THIRD exchange means a
+    // partitioning-preserving rewrite broke.
+    val n = exchanges(finalTree)
+    assert(n <= 2, s"flagship plan grew to $n exchanges (was 2):\n$plan")
   }
 
   test("embedding top-k: the 20-row query side is broadcast, scan " +
