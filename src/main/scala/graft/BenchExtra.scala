@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * (every stage is a scheduling barrier; every job is a driver
   * round-trip). Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_BENCH_REPS (timed reps after one warm-up, default 1),
-  * SPARK_GRAFT_QUERIES (comma list; default all).
+  * SPARK_GRAFT_QUERIES (comma list; default all). A query that throws
+  * in any pass prints `<name>,failed` with no numbers, and the run
+  * exits nonzero.
   */
 object BenchExtra {
 
@@ -49,32 +51,39 @@ object BenchExtra {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         spark.sparkContext.setJobDescription(name)
-        def one(): Double = {
+        /** elapsed seconds, or None when the query threw */
+        def one(): Option[Double] = {
           val t0 = System.nanoTime()
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[extra] $name failed: ${e.getMessage}") }
+          val ok =
+            try {
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              true
+            } catch { case e: Throwable =>
+              System.err.println(s"[extra] $name failed: ${e.getMessage}")
+              false
+            }
           val s = (System.nanoTime() - t0) / 1e9
           graft.core.Caches.drain()
-          s
+          if (ok) Some(s) else None
         }
-        one() // warm-up (JIT + codegen + store staging)
-        val (j0, s0, k0) = (tally.jobs, tally.stages, tally.tasks)
-        val (times, delta) = {
-          val (ts, d) = shuffle.measure(spark.sparkContext) {
+        // warm-up (JIT + codegen + store staging); a failed query is
+        // reported as failed, never timed
+        val row = one().flatMap { _ =>
+          val (j0, s0, k0) = (tally.jobs, tally.stages, tally.tasks)
+          val (times, delta) = shuffle.measure(spark.sparkContext) {
             (1 to reps).map(_ => one())
           }
-          (ts, d)
+          val (j1, s1, k1) = (tally.jobs, tally.stages, tally.tasks)
+          if (times.exists(_.isEmpty)) None
+          else Some(f"${times.flatten.min}%.2f,${(j1 - j0) / reps}," +
+            f"${(s1 - s0) / reps},${(k1 - k0) / reps}," +
+            f"${delta.shuffleWriteBytes / 1e6 / reps}%.2f")
         }
-        val (j1, s1, k1) = (tally.jobs, tally.stages, tally.tasks)
-        (name, times.min,
-          (j1 - j0) / reps, (s1 - s0) / reps, (k1 - k0) / reps,
-          delta.shuffleWriteBytes / 1e6 / reps)
+        (name, row)
       }
     println("query,secs_min,jobs,stages,tasks,shuffle_mb")
-    rows.foreach { case (n, t, j, s, k, sh) =>
-      println(f"$n,$t%.2f,$j,$s,$k,$sh%.2f")
-    }
+    rows.foreach { case (n, r) => println(s"$n,${r.getOrElse("failed")}") }
     spark.stop()
+    if (rows.exists(_._2.isEmpty)) sys.exit(1)
   }
 }

@@ -35,11 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Rounds executed by the most recent [[minLabel]] call (the last of
-    * which is the fixpoint-confirming round) — observability for the
-    * convergence behaviour; written once per call, read by specs/tools. */
-  @volatile private[graft] var lastRounds: Int = 0
-
   /** Labels every node of `pairs` (columns a_id, b_id) with the minimum
     * node id reachable along undirected edges (propagated to fixpoint,
     * at most `rounds` hops). Returns (id, component).
@@ -84,7 +79,6 @@ object Components {
       prev = cur
       round += 1
     }
-    lastRounds = round
     labels
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.operators.{AsOf, Sessionize, Windows}
+import graft.operators.{Sessionize, Windows}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,11 +33,6 @@ object FeaturePipeline {
     * @param sessionGap    gap threshold for sessionize / backfill gating
     * @param maxStaleness  as-of tolerance: a feature older than this is
     *                      not carried forward (gap-aware fill limit)
-    * @param nativeAsOf    use the custom Catalyst merge operator
-    *                      (plans.AsOfJoinNative) for stage 3 instead of
-    *                      the union+window composition — identical
-    *                      semantics (AsOfNativeSpec), sorts each side
-    *                      separately instead of the interleaved union
     * @param tieCols       columns breaking (entity, ts) ordering ties in
     *                      the sessionize and successive-difference
     *                      windows — pass the source's unique id (e.g.
@@ -48,7 +43,6 @@ object FeaturePipeline {
     */
   final case class Config(wsize: Long, wstep: Long, minWindowLen: Long,
                           sessionGap: Long, maxStaleness: Option[Long],
-                          nativeAsOf: Boolean = true,
                           tieCols: Seq[String] = Nil)
 
   /** Stage 2 (scale path): two-level bucket rollup.
@@ -231,19 +225,13 @@ object FeaturePipeline {
 
     // Stage 3: point-in-time join + staleness-gated carry-forward.
     stage("s3_vectors") {
-      if (cfg.nativeAsOf) {
-        // native operator drops the right keys; carry the availability
-        // ts explicitly as payload for provenance
-        val prefixed = feats.select(feats.columns.toSeq.map(c =>
-          if (c == entityCol || c == tsCol) col(c) else col(c).as(s"f_$c")
-        ) :+ col(tsCol).as("feature_ts"): _*)
-        graft.plans.AsOfJoinNative.joinBackward(spark, laid, prefixed,
-          entityCol, tsCol, cfg.maxStaleness)
-      } else {
-        AsOf.joinBackward(laid, feats, entityCol, tsCol,
-          tolerance = cfg.maxStaleness, rightPrefix = "f_")
-          .withColumnRenamed("f_ts", "feature_ts")
-      }
+      // native operator drops the right keys; carry the availability
+      // ts explicitly as payload for provenance
+      val prefixed = feats.select(feats.columns.toSeq.map(c =>
+        if (c == entityCol || c == tsCol) col(c) else col(c).as(s"f_$c")
+      ) :+ col(tsCol).as("feature_ts"): _*)
+      graft.plans.AsOfJoinNative.joinBackward(spark, laid, prefixed,
+        entityCol, tsCol, cfg.maxStaleness)
     }
   }
 }

@@ -1,7 +1,8 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.functions.Hash64
+import graft.operators.Banded
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,8 +23,9 @@ import org.apache.spark.sql.functions._
   * dominant shuffle (128 MB of 320 MB at sf0.1 in round 4).
   *
   * Scale design: LSH is the 100-TB path — candidate generation is an
-  * EQUI-join on (band index, band key); shuffle-partitionable, AQE-
-  * splittable, no all-pairs blowup; the exact-verify step runs only on
+  * EQUI-join on (band index, band key), run by the one shared operator
+  * [[graft.operators.Banded]]; shuffle-partitionable, AQE-splittable,
+  * no all-pairs blowup; each kernel's exact-verify step runs only on
   * candidates. The brute-force pair scans here exist to verify recall
   * and are capped to small doc subsets.
   */
@@ -33,44 +35,10 @@ object DedupQueries {
   private val Bands = 4   // LSH bands (rows per band = K/Bands = 4)
   private val RowsPerBand = K / Bands
 
-  /** Candidate-generation blowup control, two levels (both replayed
-    * verbatim by the DuckDB oracles, so the gate hashes stay exact):
-    *
-    * 1. EXACT-FINGERPRINT COLLAPSE. Within-bucket pair generation is
-    *    quadratic in occupancy, and the measured quadratic mass at
-    *    every sf is identical-fingerprint clusters (162-doc clusters =
-    *    66k pairs at sf0.1; a degenerate corpus of 10⁶ boilerplate-
-    *    identical docs would emit ~10¹² pairs). So docs are first
-    *    grouped by their FULL signature/fingerprint; the minimum
-    *    doc_id is the cluster representative, every other member
-    *    emits one (rep, member) link — O(n) per cluster, and the
-    *    links are sound by construction (identical fingerprint ⇒
-    *    Hamming 0; identical signature ⇒ near-certain dup, still
-    *    exact-verified on the MinHash path). Banding then runs over
-    *    DISTINCT fingerprints only, where it stays pair-level
-    *    LOSSLESS: connected components of the output equal those of
-    *    the uncapped all-pairs graph (every member reaches its rep at
-    *    distance 0, reps carry the cross-cluster edges).
-    *
-    * 2. BACKSTOP RANK-CAP. An adversarial corpus can still flood one
-    *    band bucket with DISTINCT fingerprints (10⁶ docs differing in
-    *    one token). Members are ranked by doc_id inside each (band,
-    *    key) bucket; ALL pairs are generated among the first Cap
-    *    members, and every overflow member pairs only with the bucket
-    *    representative (rank 1) — O(Cap² + n) per bucket. The cap is
-    *    sized (1024) far above the worst measured legitimate
-    *    occupancy (2 for minhash, 312 for 16-bit simhash at sf0.1),
-    *    so it NEVER fires at gate scales and is purely the
-    *    adversarial bound; when it does fire it deliberately trades
-    *    recall (overflow members keep only their rank-1 edge) for a
-    *    bounded shuffle. DedupSpec drives both regimes through the
-    *    `cap` parameter. */
+  /** Bucket rank cap of every banded kernel — the adversarial backstop
+    * of [[graft.operators.Banded]], which documents both blowup-control
+    * levels. */
   private[queries] val BucketCap = 1024
-
-  /** rank-based capped pair predicate: x before y in the bucket, and
-    * either y is inside the cap window or x is the representative. */
-  private def cappedPair(xRk: Column, yRk: Column, cap: Int): Column =
-    xRk < yRk && (yRk <= cap || xRk === 1)
 
   /** Word 3-shingles per doc, hashed to signed 64-bit ids, distinct:
     * (doc_id, shh). Shingling is per-row array work — a single
@@ -228,7 +196,7 @@ object DedupQueries {
     // cached: minLabel's edge union reads the pair table TWICE (both
     // edge directions) — without the cache the whole verify chain
     // (candidate join + Jaccard verify) executed once per direction
-    val pairs = graft.core.Caches.cachedCompact(
+    val pairs = Caches.cachedCompact(
       minhashVerified(spark, dir).select(col("a_id"), col("b_id")))
     val lbl = graft.operators.Components.minLabel(pairs, rounds = 64)
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
@@ -247,7 +215,7 @@ object DedupQueries {
     * corpus — DedupSpec drives degenerate corpora through both blowup
     * controls with this. */
   def minhashPairs(docs: DataFrame, cap: Int = BucketCap): DataFrame = {
-    val sh = graft.core.Caches.cachedCompact(shingleHashes(docs))
+    val sh = Caches.cachedCompact(shingleHashes(docs))
     minhashPairsFrom(sh, signatures(sh), cap)
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -256,57 +224,25 @@ object DedupQueries {
     * sh = (doc_id, shh), sig = (doc_id, sig0..sig15). */
   private def minhashPairsFrom(sh: DataFrame, sig: DataFrame,
                                cap: Int): DataFrame = {
-    val sigCols = (0 until K).map(i => col(s"sig$i"))
-    // the collapse window partitions by the FULL 16-long signature —
-    // no digest column needed (round 4 md5'd the concatenated sigs)
-    val cw = org.apache.spark.sql.expressions.Window
-      .partitionBy(sigCols: _*).orderBy(col("doc_id"))
-    val repw = org.apache.spark.sql.expressions.Window
-      .partitionBy(sigCols: _*)
-    // signature table is 1 row/doc (tiny at any scale) but the collapse
-    // window, the band self-join and the rep links each consume it
-    val clustered = graft.core.Caches.cachedCompact(sig
-      .withColumn("crk", row_number().over(cw))
-      .withColumn("rep", min(col("doc_id")).over(repw)))
-    // level 1: identical-signature members link to their representative
-    val links = clustered.where(col("crk") > 1)
-      .select(col("rep").as("a_id"), col("doc_id").as("b_id"))
-    // banding over DISTINCT signatures only (the representatives);
-    // band key = the band's 4 raw sig longs (32 bytes) — no digest
-    val bandCols = (0 until Bands).map { b =>
-      val parts = (0 until RowsPerBand).map(r =>
-        col(s"sig${b * RowsPerBand + r}").as(s"k$r"))
-      struct(lit(b).as("band") +: parts: _*)
-    }
-    val keyNames = (0 until RowsPerBand).map(r => s"k$r")
-    val buckets = clustered.where(col("crk") === 1)
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id") +: ("band" +: keyNames)
-        .map(n => col(s"bk.$n").as(n)): _*)
-    // level 2: occupancy rank inside each (band, key) bucket; the window
-    // shuffles on the same key the self-join uses, so the join reuses
-    // the partitioning instead of adding an exchange
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(("band" +: keyNames).map(col): _*).orderBy(col("doc_id"))
-    // cache: both sides of the band self-join consume the ranked-bucket
-    // table — the explode + rank window otherwise run once per side
-    val ranked = graft.core.Caches.cachedCompact(
-      buckets.withColumn("rk", row_number().over(bw)))
-    val joinCond = ("band" +: keyNames)
-      .map(n => col(s"x.$n") === col(s"y.$n")).reduce(_ && _)
+    // the collapse key is the FULL 16-long signature and the band key
+    // the band's 4 raw sig longs (32 bytes) — no digest columns
+    val bands = array((0 until Bands).map { b =>
+      struct(lit(b).as("band") +: (0 until RowsPerBand).map(r =>
+        col(s"sig${b * RowsPerBand + r}").as(s"k$r")): _*)
+    }: _*)
+    val c = Banded.candidates(sig, "doc_id", (0 until K).map(i =>
+      col(s"sig$i")), bands, Nil, cap)
     // candidates are consumed three times (shingle pre-filter, inter
     // count, final assembly) — cache the small pair set, not the data
-    val cand = graft.core.Caches.cachedCompact(ranked.as("x").join(ranked.as("y"),
-      joinCond && cappedPair(col("x.rk"), col("y.rk"), cap))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .union(links)
+    val cand = Caches.cachedCompact(c.pairs
+      .union(c.links.select(col("a_id"), col("b_id")))
       .distinct())
     // exact Jaccard on candidates — set ops over 64-bit shingle ids.
     // Set sizes come from the signature table's nsh (1 row/doc); the
     // shingle table is scanned ONCE, semi-joined down to the docs that
     // actually appear in a candidate pair (AQE broadcasts the id list
     // when small), instead of two full-store joins + a count agg.
-    val na = clustered.select(col("doc_id"), col("nsh").as("n"))
+    val na = c.rows.select(col("doc_id"), col("nsh").as("n"))
     // one cache scan + explode instead of a two-scan union
     val involved = cand
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
@@ -314,7 +250,7 @@ object DedupQueries {
     // cached (spills to disk if large): both sides of the inter join
     // consume it, and its size is bounded by the shingles of candidate
     // docs — data those joins must read anyway
-    val shc = graft.core.Caches.cachedCompact(
+    val shc = Caches.cachedCompact(
       sh.join(involved, Seq("doc_id"), "left_semi"))
     val inter = cand
       .join(shc.select(col("doc_id").as("a_id"), col("shh")), Seq("a_id"))
@@ -352,49 +288,30 @@ object DedupQueries {
     * corpus; identical fingerprints collapse to representative links
     * and band buckets are backstop-capped like the MinHash path. */
   def simhashPairs(docs: DataFrame, cap: Int = BucketCap): DataFrame = {
-    // cache: the fingerprint+cluster table is 1 row/doc (tiny at any
-    // scale) but costs a full word-explode aggregation — the rep links
-    // and the banded self-join would otherwise recompute it per side.
-    val cw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("simhash")).orderBy(col("doc_id"))
-    val repw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("simhash"))
-    val clustered = graft.core.Caches.cachedCompact(simhashFingerprints(docs)
-      .withColumn("crk", row_number().over(cw))
-      .withColumn("rep", min(col("doc_id")).over(repw)))
-    // level 1: identical-fingerprint members link to their rep (Hamming 0)
-    val links = clustered.where(col("crk") > 1)
-      .select(col("rep").as("a_id"), col("doc_id").as("b_id"),
+    // 3 disjoint bands: bits [0,6), [6,11), [11,16)
+    val h = col("simhash")
+    simhashBanded(simhashFingerprints(docs), array(
+      struct(lit(0).as("bi"), h.bitwiseAND(lit(63L)).as("bv")),
+      struct(lit(1).as("bi"), shiftright(h, 6).bitwiseAND(lit(31L)).as("bv")),
+      struct(lit(2).as("bi"), shiftright(h, 11).bitwiseAND(lit(31L)).as("bv"))),
+      maxDist = 2, cap)
+  }
+
+  /** Both SimHash kernels over (doc_id, simhash): banded candidates, the
+    * exact Hamming check, then the identical-fingerprint links (Hamming
+    * 0). The fingerprint table is 1 row/doc but costs a full
+    * word-explode aggregation, so the operator's cache of it matters. */
+  private def simhashBanded(fps: DataFrame, bands: Column, maxDist: Int,
+                            cap: Int): DataFrame = {
+    val c = Banded.candidates(fps, "doc_id", Seq(col("simhash")), bands,
+      Seq(col("simhash")), cap)
+    c.pairs.select(col("a_id"), col("b_id"), col("simhash_a").as("ha"),
+        col("simhash_b").as("hb"), bit_count(col("simhash_a")
+          .bitwiseXOR(col("simhash_b"))).cast("long").as("hamming"))
+      .where(col("hamming") <= maxDist)
+      .union(c.links.select(col("a_id"), col("b_id"),
         col("simhash").as("ha"), col("simhash").as("hb"),
-        lit(0L).as("hamming"))
-    // 3 disjoint bands over DISTINCT fingerprints: bits [0,6), [6,11), [11,16)
-    val bandCols = array(
-      struct(lit(0).as("bi"), col("simhash").bitwiseAND(lit(63L)).as("bv")),
-      struct(lit(1).as("bi"),
-        shiftright(col("simhash"), 6).bitwiseAND(lit(31L)).as("bv")),
-      struct(lit(2).as("bi"),
-        shiftright(col("simhash"), 11).bitwiseAND(lit(31L)).as("bv")))
-    val bands = clustered.where(col("crk") === 1)
-      .select(col("doc_id"), col("simhash"), explode(bandCols).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.bi").as("bi"), col("bk.bv").as("bv"))
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bi"), col("bv")).orderBy(col("doc_id"))
-    // both join sides read the ranked-band table — cache it so the band
-    // explode + rank window run once, not once per side (the plan
-    // otherwise duplicates the whole chain under the self-join)
-    val ranked = graft.core.Caches.cachedCompact(
-      bands.withColumn("rk", row_number().over(bw)))
-    val a = ranked.select(col("doc_id").as("a_id"), col("simhash").as("ha"),
-      col("bi"), col("bv"), col("rk").as("rka"))
-    val b = ranked.select(col("doc_id").as("b_id"), col("simhash").as("hb"),
-      col("bi"), col("bv"), col("rk").as("rkb"))
-    a.join(b, Seq("bi", "bv"))
-      .where(cappedPair(col("rka"), col("rkb"), cap))
-      .select(col("a_id"), col("b_id"), col("ha"), col("hb"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
-      .where(col("hamming") <= 2)
-      .union(links)
+        lit(0L).as("hamming")))
       .distinct() // a pair can collide in several bands
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -427,45 +344,11 @@ object DedupQueries {
   def qSimhash64(spark: SparkSession, dir: String): DataFrame =
     simhash64Pairs(Tables.documents(spark, dir))
 
-  def simhash64Pairs(docs: DataFrame, cap: Int = BucketCap): DataFrame = {
-    val cw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("simhash")).orderBy(col("doc_id"))
-    val repw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("simhash"))
-    val clustered = graft.core.Caches.cachedCompact(simhash64Fingerprints(docs)
-      .withColumn("crk", row_number().over(cw))
-      .withColumn("rep", min(col("doc_id")).over(repw)))
-    val links = clustered.where(col("crk") > 1)
-      .select(col("rep").as("a_id"), col("doc_id").as("b_id"),
-        col("simhash").as("ha"), col("simhash").as("hb"),
-        lit(0L).as("hamming"))
+  def simhash64Pairs(docs: DataFrame, cap: Int = BucketCap): DataFrame =
     // 4 disjoint 16-bit bands; distance <= 3 pigeonholes into >= 1 band
-    val bandCols = array((0 until 4).map(b =>
-      struct(lit(b).as("bi"),
-        shiftrightunsigned(col("simhash"), 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).as("bv"))): _*)
-    val bands = clustered.where(col("crk") === 1)
-      .select(col("doc_id"), col("simhash"), explode(bandCols).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.bi").as("bi"), col("bk.bv").as("bv"))
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bi"), col("bv")).orderBy(col("doc_id"))
-    // cache: both join sides read the ranked-band table (see simhashPairs)
-    val ranked = graft.core.Caches.cachedCompact(
-      bands.withColumn("rk", row_number().over(bw)))
-    val a = ranked.select(col("doc_id").as("a_id"), col("simhash").as("ha"),
-      col("bi"), col("bv"), col("rk").as("rka"))
-    val b = ranked.select(col("doc_id").as("b_id"), col("simhash").as("hb"),
-      col("bi"), col("bv"), col("rk").as("rkb"))
-    a.join(b, Seq("bi", "bv"))
-      .where(cappedPair(col("rka"), col("rkb"), cap))
-      .select(col("a_id"), col("b_id"), col("ha"), col("hb"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
-      .where(col("hamming") <= 3)
-      .union(links)
-      .distinct()
-      .orderBy(col("a_id"), col("b_id"))
-  }
+    simhashBanded(simhash64Fingerprints(docs), array((0 until 4).map(b =>
+      struct(lit(b).as("bi"), shiftrightunsigned(col("simhash"), 16 * b)
+        .bitwiseAND(lit(0xFFFFL)).as("bv"))): _*), maxDist = 3, cap)
 
   /** Per-doc 64-bit fingerprints (bit j sums the sign of bit j across
     * the doc's word hashes, occurrence-weighted like the 16-bit
@@ -567,49 +450,23 @@ object DedupQueries {
                            tables: Int = NeardupLshTables,
                            planes: Int = NeardupLshPlanes)
       : DataFrame = {
-    val cw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("embedding")).orderBy(col("vec_id"))
-    val repw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("embedding"))
-    val clustered = graft.core.Caches.cachedCompact(emb
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("crk", row_number().over(cw))
-      .withColumn("rep", min(col("vec_id")).over(repw)))
-    val links = clustered.where(col("crk") > 1)
-      .select(col("rep").as("a_id"), col("vec_id").as("b_id"),
-        lit(1.0).as("cos_sim"), lit(1L).as("is_dup"))
+    val e = col("embedding")
     val buckets = array((0 until tables).map(t =>
-      struct(lit(t).as("t"),
-        neardupBucket(col("embedding"), t, planes).as("b"))): _*)
+      struct(lit(t).as("t"), neardupBucket(e, t, planes).as("b"))): _*)
     // norms once per vector, BEFORE the 16-way explode (expression
     // tree sqrt(dot(x,x)) unchanged, so the oracle floats match)
-    val bd = clustered.where(col("crk") === 1)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(dotD(col("embedding"), col("embedding"))).as("nrm"),
-        explode(buckets).as("bk"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("bk.t").as("t"), col("bk.b").as("b"))
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("t"), col("b")).orderBy(col("vec_id"))
-    // both join sides read the ranked-bucket table — cache it so the
-    // 16-way explode + rank window run once, not once per side
-    val ranked = graft.core.Caches.cachedCompact(
-      bd.withColumn("rk", row_number().over(bw)))
-    val a = ranked.select(col("vec_id").as("a_id"),
-      col("embedding").as("ea"), col("nrm").as("na"),
-      col("t"), col("b"), col("rk").as("rka"))
-    val b = ranked.select(col("vec_id").as("b_id"),
-      col("embedding").as("eb"), col("nrm").as("nb"),
-      col("t"), col("b"), col("rk").as("rkb"))
-    val cos = round(dotD(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-    a.join(b, Seq("t", "b"))
-      .where(cappedPair(col("rka"), col("rkb"), cap))
-      .select(col("a_id"), col("b_id"), cos.as("cos_sim"))
+    val c = Banded.candidates(emb.select(col("vec_id"), e), "vec_id", Seq(e),
+      buckets, Seq(e, sqrt(dotD(e, e)).as("nrm")), cap)
+    val cos = round(dotD(col("embedding_a"), col("embedding_b")) /
+      (col("nrm_a") * col("nrm_b")), 6)
+    c.pairs.select(col("a_id"), col("b_id"), cos.as("cos_sim"))
       .where(col("cos_sim") >= NeardupFloor)
       .distinct() // a pair can collide in several tables
       .select(col("a_id"), col("b_id"), col("cos_sim"),
         when(col("cos_sim") >= NeardupTau, 1L).otherwise(0L).as("is_dup"))
-      .union(links) // disjoint: link members never appear as reps
+      // disjoint: link members never appear as reps
+      .union(c.links.select(col("a_id"), col("b_id"),
+        lit(1.0).as("cos_sim"), lit(1L).as("is_dup")))
       .orderBy(col("a_id"), col("b_id"))
   }
 

@@ -187,6 +187,39 @@ class DedupSpec extends SparkSpec {
       s"coverage ${touchC.size}/$n docs preserved")
   }
 
+  test("banded candidates: one crowded bucket under cap k yields exactly " +
+    "C(k,2) + (n - k) rep pairs, and exact copies yield only links") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // n = 10 distinct keys (ids 0..9) in ONE band bucket, plus ids 10 and
+    // 11 as exact copies of key 3 — they collapse onto rep 3
+    val n = 10
+    val df = ((0L until n.toLong).map(i => (i, i)) ++
+      Seq((10L, 3L), (11L, 3L))).toDF("id", "key")
+    def run(cap: Int) = graft.operators.Banded.candidates(df, "id",
+      Seq(col("key")), array(struct(lit(0).as("band"))), Seq(col("key")),
+      cap)
+    def ids(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      d.select(col("a_id"), col("b_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val c4 = run(4)
+    val pairs = ids(c4.pairs)
+    // all pairs among ranks 1..4, then each overflow rank pairs with rank 1
+    assert(pairs.size == 4 * 3 / 2 + (n - 4), s"cap-4 pairs: $pairs")
+    assert(pairs.distinct.size == pairs.size)
+    assert(pairs.forall { case (a, b) => a < b })
+    val links = ids(c4.links)
+    assert(links.sorted == Seq((3L, 10L), (3L, 11L)))
+    assert(pairs.forall { case (a, b) => a < n && b < n },
+      "a collapsed member reached the banding")
+    // payload columns carry each side's value
+    c4.pairs.collect().foreach { r =>
+      assert(r.getAs[Long]("key_a") == r.getAs[Long]("a_id") &&
+        r.getAs[Long]("key_b") == r.getAs[Long]("b_id"))
+    }
+    assert(ids(run(n).pairs).size == n * (n - 1) / 2)
+  }
+
   test("embedding near-dup LSH: injected near-dups are found at the " +
     "dedup threshold, exact copies collapse to rep links, output is " +
     "sound vs brute-force cosine") {
@@ -398,9 +431,8 @@ class DedupSpec extends SparkSpec {
   test("min-label fixpoint: a deep path converges under a large cap " +
     "(early exit returns the exact fixpoint, not a truncation)") {
     import spark.implicits._
-    // diameter-20 path driven with cap 64: the round-6 fixpoint probe
-    // must stop at convergence (not run all 64 rounds) AND the result
-    // must equal the true fixpoint — every node labeled 0
+    // diameter-20 path driven with cap 64: the early-exit loop must
+    // return the true fixpoint — every one of the 21 nodes labeled 0
     val path = (0L until 20L).map(i => (i, i + 1))
     val pairs = path.toDF("a_id", "b_id")
     val got = graft.operators.Components.minLabel(pairs, rounds = 64)
