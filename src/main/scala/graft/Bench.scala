@@ -3,6 +3,7 @@ package graft
 import graft.core.TokenGen
 import graft.pipeline.FeaturePipeline
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, posexplode}
 
 /** Benchmark main. Two measurements, one JSON line:
   *
@@ -13,55 +14,31 @@ import org.apache.spark.sql.SparkSession
   *    = (tput_high / tput_low) / (N_HIGH / N_LOW). Target ≥ 0.8.
   *
   * 2. Per-query wall times for every SparkEntry query on
-  *    SPARK_GRAFT_SF_DIR at SPARK_GRAFT_CPUS (driver contract).
+  *    SPARK_GRAFT_SF_DIR at SPARK_GRAFT_CPUS (driver contract). A query
+  *    that throws is never timed: it is listed under `queries_error`
+  *    with the first line of its message instead.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_BENCH_DOCS (default 40000), SPARK_GRAFT_BENCH_LADDER
-  * (default "2,8,32"), SPARK_GRAFT_BENCH_REPS (default 3).
+  * Sessions come from [[Harness.session]]. Env knobs:
+  * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: available
+  * processors), SPARK_GRAFT_BENCH_DOCS (default 40000),
+  * SPARK_GRAFT_BENCH_LADDER (default "max(1, cpus/4),cpus"),
+  * SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_BENCH_QUERIES
+  * (0 = ladder only), SPARK_GRAFT_BENCH_SERVICE_ITERS (default 0).
   */
 object Bench {
 
-  /** NB: shuffle partitions are FIXED across parallelism levels (128) so
-    * the low- and high-core runs execute the IDENTICAL physical plan —
-    * the scaling measurement varies cores only, as a cluster would vary
-    * executors against a fixed partitioning. */
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", 128)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // preserve cached-plan partitioning so the as-of join reuses the
-      // entity layout instead of re-exchanging (Spark 4 default runs AQE
-      // over caches, discarding their partitioning)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Materialize every column without collecting (noop DSv2 sink). */
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   private def flagshipSecs(spark: SparkSession, tokensPath: String): (Long, Double) = {
     val points = spark.read.parquet(tokensPath)
-      .select(org.apache.spark.sql.functions.col("doc_id").as("entity_id"),
-        org.apache.spark.sql.functions.posexplode(
-          org.apache.spark.sql.functions.col("tokens"))
-          .as(Seq("pos", "tok")))
-      .select(org.apache.spark.sql.functions.col("entity_id"),
-        org.apache.spark.sql.functions.col("pos").cast("long").as("ts"),
-        org.apache.spark.sql.functions.col("tok").cast("double").as("value"))
+      .select(col("doc_id").as("entity_id"),
+        posexplode(col("tokens")).as(Seq("pos", "tok")))
+      .select(col("entity_id"), col("pos").cast("long").as("ts"),
+        col("tok").cast("double").as("value"))
     val cfg = FeaturePipeline.Config(wsize = 64L, wstep = 32L,
       minWindowLen = 4L, sessionGap = 8L, maxStaleness = Some(128L))
     val out = FeaturePipeline.run(spark, points, "entity_id", "ts",
       "value", cfg)
     val t0 = System.nanoTime()
-    materialize(out)
+    Harness.noop(out)
     val secs = (System.nanoTime() - t0) / 1e9
     val rows = points.count() // = output vectors (one per entity×ts)
     (rows, secs)
@@ -69,7 +46,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Harness.cores
     // 40k docs ≈ 56M points: large enough that fixed job overheads
     // (~4s/run) don't flatten the low end of the ladder — at 28M the
     // 8-core pass is overhead-bound and eff(2→8) under-reads (0.78 vs
@@ -79,7 +56,7 @@ object Bench {
     // --- write the deterministic tokens table once (not timed) ---
     val tokensPath = s"/tmp/graft_bench_tokens_$nDocs"
     locally {
-      val s = session(cpus)
+      val s = Harness.session(cpus)
       if (!new java.io.File(s"$tokensPath/_SUCCESS").exists()) {
         TokenGen.docs(s, nDocs, skewed = true, numPartitions = cpus * 4)
           .write.mode("overwrite").parquet(tokensPath)
@@ -94,13 +71,13 @@ object Bench {
     // faults stay out of timed regions.
     // This sandbox shows high run-to-run variance (shared host, ~10%
     // steal time), so each level takes the MEDIAN of `reps` timed passes.
-    // The ladder measures the N→4N criterion twice: 2→8 cores (below
-    // the single-box memory-bandwidth saturation point — the honest
-    // proxy for adding executors, which add bandwidth with compute) and
-    // 8→32 (reported too; bandwidth-saturated on one box). Analysis in
-    // BASELINE.md "Measured".
+    // The default ladder is one N→4N step ending at the host's cores, so
+    // no leg oversubscribes the box; a longer ladder reports every
+    // adjacent pair, headlined by the lowest (below memory-bandwidth
+    // saturation). Analysis in BASELINE.md "Measured".
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val ladder = sys.env.getOrElse("SPARK_GRAFT_BENCH_LADDER", "2,8,32")
+    val ladder = sys.env.getOrElse("SPARK_GRAFT_BENCH_LADDER",
+      s"${math.max(1, cpus / 4)},$cpus")
       .split(",").map(_.trim.toInt).toSeq
     var rows = 0L
 
@@ -127,7 +104,7 @@ object Bench {
     }
 
     def measure(cores: Int): Leg = {
-      val s = session(cores)
+      val s = Harness.session(cores)
       try {
         flagshipSecs(s, tokensPath) // warm-up, discarded
         val (st0, tt0) = cpuTicks()
@@ -158,7 +135,7 @@ object Bench {
     val tputLow = tput(ladder.head)
     val runsLow = levels.head._2.runs
     val runsHigh = levels.last._2.runs
-    val sHigh = session(cpus)
+    val sHigh = Harness.session(cpus)
 
     // --- per-query timings on the driver's sf dir ---
     // Each query is timed TWICE in the same session: the first (cold)
@@ -173,33 +150,33 @@ object Bench {
     // scale-step sessions, where the 60-query battery is dead time)
     val runQueries =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES", "1") != "0"
-    val results = (if (runQueries) SparkEntry.queries.toSeq.sortBy(_._1)
-                   else Nil).map { case (name, fn) =>
-      def one(): Double = {
-        val t0 = System.nanoTime()
-        try { materialize(fn(sHigh, sfDir)) }
-        catch { case _: Throwable => () }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // cache hygiene: caches are query-scoped, so the warm pass
-        // rebuilds its own caches (steady-state service semantics, not
-        // a cache-hit rerun) and the battery cannot accrete memory
-        graft.core.Caches.drain()
-        graft.core.Caches.assertEmpty(sHigh)
-        secs
-      }
-      val (cold, delta) = tally.measure(sHigh.sparkContext)(one())
-      val warm = one()
-      (name, cold, warm, delta)
+    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
+    // caches are query-scoped (Harness.run drains them), so the warm pass
+    // rebuilds its own (steady-state service semantics, not a cache-hit
+    // rerun); a query that throws in either pass is reported, not timed
+    val results = (if (runQueries) battery else Nil).map { case (name, fn) =>
+      val (cold, delta) = tally.measure(sHigh.sparkContext)(
+        Harness.run(sHigh, fn(sHigh, sfDir)))
+      name -> (for {
+        c <- cold
+        w <- Harness.run(sHigh, fn(sHigh, sfDir))
+      } yield (c, w, delta))
     }
-    val qs = results.map { case (k, c, _, _) => "\"" + k + f"\":$c%.3f" }
+    val timed = results.collect { case (k, Right((c, w, d))) => (k, c, w, d) }
+    val qs = timed.map { case (k, c, _, _) => "\"" + k + f"\":$c%.3f" }
       .mkString("{", ",", "}")
-    val qsWarm = results.map { case (k, _, w, _) => "\"" + k + f"\":$w%.3f" }
+    val qsWarm = timed.map { case (k, _, w, _) => "\"" + k + f"\":$w%.3f" }
       .mkString("{", ",", "}")
-    val qsShuffle = results.map { case (k, _, _, d) =>
+    val qsShuffle = timed.map { case (k, _, _, d) =>
       "\"" + k + f"\":${d.shuffleWriteBytes / 1e6}%.2f"
     }.mkString("{", ",", "}")
-    val qsSpill = results.filter(_._4.spilledBytes > 0).map { case (k, _, _, d) =>
+    val qsSpill = timed.filter(_._4.spilledBytes > 0).map { case (k, _, _, d) =>
       "\"" + k + f"\":${d.spilledBytes / 1e6}%.1f"
+    }.mkString("{", ",", "}")
+    val qsError = results.collect { case (k, Left(e)) =>
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+      Harness.json(k) + ":" + Harness.json(msg.linesIterator.nextOption()
+        .getOrElse(""))
     }.mkString("{", ",", "}")
     // --- optional sustained-service mode: the full battery looped N
     // more times in this same JVM. With query-scoped caches + the fixed
@@ -221,14 +198,7 @@ object Bench {
     }
     val serviceRuns = (1 to serviceIters).map { _ =>
       val t0 = System.nanoTime()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try materialize(fn(sHigh, sfDir))
-        catch { case _: Throwable => () }
-        finally {
-          graft.core.Caches.drain()
-          graft.core.Caches.assertEmpty(sHigh)
-        }
-      }
+      battery.foreach { case (_, fn) => Harness.run(sHigh, fn(sHigh, sfDir)) }
       ((System.nanoTime() - t0) / 1e9, rssMb(), heapMb())
     }
     val serviceJson =
@@ -250,7 +220,7 @@ object Bench {
     val noiseJson =
       s""""noise_rule":"reject ladder if any leg (max-min)/median > $SpreadMax; headline instrument = the 3x scale step (see BASELINE.md)","ladder_accepted":$ladderAccepted"""
     println(
-      f"""{"metric":"feature_vectors_per_sec","value":$tputHigh%.1f,"unit":"rows/sec","sf":"$sfDir","queries":$qs,"queries_warm":$qsWarm,"queries_shuffle_mb":$qsShuffle,"queries_spill_mb":$qsSpill,"scaling":{"rows":$rows,"cores_low":${ladder.head},"cores_high":${ladder.last},"secs_low":$secsLow%.2f,"secs_high":$secsHigh%.2f,"runs_low":${arr(runsLow)},"runs_high":${arr(runsHigh)},"tput_low":$tputLow%.1f,"tput_high":$tputHigh%.1f,"efficiency":$eff%.3f,"efficiency_pair":"${ladder.head}->${ladder(1 min (ladder.length - 1))} cores (N->4N, pre-bandwidth-saturation; see BASELINE.md)",$effJson,$noiseJson,"ladder":$ladderJson}$serviceJson}""")
+      f"""{"metric":"feature_vectors_per_sec","value":$tputHigh%.1f,"unit":"rows/sec","sf":"$sfDir","queries":$qs,"queries_warm":$qsWarm,"queries_shuffle_mb":$qsShuffle,"queries_spill_mb":$qsSpill,"queries_error":$qsError,"scaling":{"rows":$rows,"cores_low":${ladder.head},"cores_high":${ladder.last},"secs_low":$secsLow%.2f,"secs_high":$secsHigh%.2f,"runs_low":${arr(runsLow)},"runs_high":${arr(runsHigh)},"tput_low":$tputLow%.1f,"tput_high":$tputHigh%.1f,"efficiency":$eff%.3f,"efficiency_pair":"${ladder.head}->${ladder(1 min (ladder.length - 1))} cores (N->4N, pre-bandwidth-saturation; see BASELINE.md)",$effJson,$noiseJson,"ladder":$ladderJson}$serviceJson}""")
     sHigh.stop()
   }
 }

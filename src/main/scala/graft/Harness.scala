@@ -1,0 +1,69 @@
+package graft
+
+import graft.core.Caches
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one session profile and the one query runner shared by every
+  * harness main (Bench, BenchExtra, Verify) and the spec suite, so the
+  * correctness gate runs under the same config the bench measures. */
+object Harness {
+
+  /** SPARK_GRAFT_CPUS, else the host's available processors. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** NB: shuffle partitions are FIXED across parallelism levels so the
+    * low- and high-core runs of a ladder execute the IDENTICAL physical
+    * plan — the scaling measurement varies cores only, as a cluster
+    * would vary executors against a fixed partitioning. */
+  def session(cores: Int, partitions: Int = 128): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(s"graft-$cores")
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      // preserve cached-plan partitioning so the as-of join reuses the
+      // entity layout instead of re-exchanging (Spark 4 default runs AQE
+      // over caches, discarding their partitioning)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  /** Materialize every column without collecting (noop DSv2 sink). */
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Build one query and hand it to `sink`: the elapsed seconds, or
+    * `Left` (never timed) when either threw. Then drain the query-scoped
+    * caches; an unregistered one that leaked fails the run ([[Caches]]). */
+  def run(spark: SparkSession, build: => DataFrame,
+          sink: DataFrame => Unit = noop): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      sink(build)
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e) }
+    finally {
+      Caches.drain()
+      Caches.assertEmpty(spark)
+    }
+  }
+
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in a message or in builder-authored SQL would
+    * otherwise break the reader's `json.load`. */
+  def json(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}

@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * the bench's session profile ([[Harness.session]]); a query that
+  * throws writes no parquet, so the compare counts it as failing. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local
@@ -10,43 +11,19 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // cache hygiene: every cache a query registered is scoped to
-        // that query; a leak (unregistered cache) fails the whole run
-        graft.core.Caches.drain()
-        graft.core.Caches.assertEmpty(spark)
+        Harness.run(spark, fn(spark, sfDir),
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+          .left.foreach(e =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

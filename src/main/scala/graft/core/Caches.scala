@@ -22,9 +22,9 @@ import org.apache.spark.storage.StorageLevel
   * suites, a concurrent service harness) cannot evict each other's
   * in-flight caches. The invariant this encodes: build → action →
   * drain happen on one thread per query, which is how every harness
-  * (Verify, Bench, QTime, specs) drives queries. A builder that
-  * registers on one thread but is drained from another leaks its cache
-  * on purpose — the next [[assertEmpty]] trips, surfacing the broken
+  * (`graft.Harness.run` for Verify, Bench and BenchExtra; specs)
+  * drives queries. A builder that registers on one thread but is
+  * drained from another leaks its cache on purpose — the next [[assertEmpty]] trips, surfacing the broken
   * ownership instead of silently cross-evicting. [[assertEmpty]]
   * itself checks the whole session cache manager and therefore belongs
   * ONLY in sequential whole-battery drivers, never between concurrent

@@ -1,26 +1,14 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Physical-layout helpers (SURVEY.md §7.1 "core.layout"): the one range
-  * shuffle every per-entity pipeline starts with, the salting pattern
-  * for skew-heavy entity aggregations, and the AQE presets the engine
-  * assumes.
+/** Physical-layout helpers (SURVEY.md §7.1 "core.layout"): the salting
+  * pattern for skew-heavy entity aggregations. The flagship's stage-1
+  * layout (one hash(entity) exchange + sortWithinPartitions) lives in
+  * `pipeline.FeaturePipeline`.
   */
 object Layout {
-
-  /** Range-partition by (entity, ts) and sort within partitions — the
-    * canonical layout for window specs and merge scans. One shuffle;
-    * everything ordered downstream reuses it. */
-  def byEntityTime(df: DataFrame, entityCol: String, tsCol: String,
-                   numPartitions: Int = 0): DataFrame = {
-    val r =
-      if (numPartitions > 0)
-        df.repartitionByRange(numPartitions, col(entityCol), col(tsCol))
-      else df.repartitionByRange(col(entityCol), col(tsCol))
-    r.sortWithinPartitions(col(entityCol), col(tsCol))
-  }
 
   /** Two-phase salted aggregation for hot keys: phase 1 groups on
     * (key, salt) — spreading a hot entity over `nSalts` reducers with
@@ -56,14 +44,5 @@ object Layout {
       .filterNot(Set(keyCol, "__salt")).toSeq
       .map(c => merge(c)(col(c)).as(c))
     phase1.groupBy(col(keyCol)).agg(mergeCols.head, mergeCols.tail: _*)
-  }
-
-  /** AQE presets the engine is designed against (runtime coalescing,
-    * skew-join splitting). Spark enables AQE by default in 4.x; this
-    * pins the skew knobs explicitly for clusters that changed them. */
-  def aqePresets(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
   }
 }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * latest right row with the same entity and right.ts <= left.ts
   * (backward direction; strictly no future rows — zero temporal leakage).
   * Optional tolerance: matches older than `tolerance` are dropped
-  * (payload columns become NULL).
+  * (payload columns become NULL). NULL keys: a right row with a NULL
+  * entity or ts never matches (its availability is unknown), and a left
+  * row with a NULL entity or ts passes through with a NULL payload.
   *
   * Physical strategy (Spark-first): a UNION + running `last(_, ignoreNulls)`
   * window — NOT a join at all. Both inputs are unioned with a side tag,
@@ -50,12 +52,14 @@ object AsOf {
     require(payloadCols.nonEmpty, "right side has no payload columns")
     val leftPayload = left.columns.filterNot(Set(entityCol, tsCol)).toSeq
 
-    val rUnion = right.select(
-      col(entityCol).as("__entity") +: col(tsCol).as("__ts") +:
-        lit(0).as("__side") +:
-        struct(col(tsCol).as("__rts") +: payloadCols.map(col): _*).as("__r") +:
-        leftPayload.map(c =>
-          lit(null).cast(left.schema(c).dataType).as(s"__L_$c")): _*)
+    val rUnion = right
+      .where(col(entityCol).isNotNull && col(tsCol).isNotNull)
+      .select(
+        col(entityCol).as("__entity") +: col(tsCol).as("__ts") +:
+          lit(0).as("__side") +:
+          struct(col(tsCol).as("__rts") +: payloadCols.map(col): _*).as("__r") +:
+          leftPayload.map(c =>
+            lit(null).cast(left.schema(c).dataType).as(s"__L_$c")): _*)
     val lUnion = left.select(
       col(entityCol).as("__entity") +: col(tsCol).as("__ts") +:
         lit(1).as("__side") +:

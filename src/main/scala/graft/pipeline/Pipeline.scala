@@ -86,16 +86,9 @@ object Pipeline {
       compute.write.mode("overwrite").parquet(dir)
     } finally {
       spark.sparkContext.clearJobGroup()
-      // listener-bus delivery is async; wait until the task-end stream
-      // quiesces (the bus has no public flush)
-      var prev = -1
-      var tries = 0
-      while (listener.tasks.synchronized(listener.tasks.size) != prev
-        && tries < 40) {
-        prev = listener.tasks.synchronized(listener.tasks.size)
-        Thread.sleep(50)
-        tries += 1
-      }
+      // listener-bus delivery is async; drain the bus so every task-end
+      // event of this stage reaches the listener before it is read
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
     val wallMs = (System.nanoTime() - t0) / 1000000

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.LongType
   * separately (R is typically |L|/wstep), reuses any pre-existing
   * layout, and the merge itself is a zero-allocation single pass per
   * partition. Semantics are identical (inclusive <=, optional
-  * staleness tolerance, NULL payload on no match) and asserted equal
-  * to the composed operator in AsOfNativeSpec.
+  * staleness tolerance, NULL payload on no match, NULL keys never
+  * match) and asserted equal to the composed operator in
+  * AsOfNativeSpec.
   *
   * Contract: entity column name shared by both sides; ts columns are
   * LongType (engine-internal micros contract); right payload column
@@ -179,14 +180,18 @@ object AsOfJoinNative {
           private var rEntity: Any = _
           private var rTs: Long = 0L
           private var rRow: InternalRow = _ // current (not yet held)
+          // right rows with a NULL key never match: skip them
           private def advanceRight(): Unit = {
-            if (rIter.hasNext) {
+            rHeadValid = false
+            while (!rHeadValid && rIter.hasNext) {
               val r = rIter.next()
-              rEntity = r.get(rEntityOrd, entityType)
-              rTs = r.getLong(rTsOrd)
-              rRow = r
-              rHeadValid = true
-            } else rHeadValid = false
+              if (!r.isNullAt(rEntityOrd) && !r.isNullAt(rTsOrd)) {
+                rEntity = r.get(rEntityOrd, entityType)
+                rTs = r.getLong(rTsOrd)
+                rRow = r
+                rHeadValid = true
+              }
+            }
           }
           advanceRight()
 
@@ -210,25 +215,31 @@ object AsOfJoinNative {
           }
 
           override def hasNext: Boolean = lIter.hasNext
+          // advance the right cursor to `l`: is `held` its match? A left
+          // row with a NULL key never matches and leaves the cursor be
+          private def matches(l: InternalRow): Boolean =
+            !l.isNullAt(lEntityOrd) && !l.isNullAt(lTsOrd) && {
+              val le = l.get(lEntityOrd, entityType)
+              val lts = l.getLong(lTsOrd)
+              // drop right rows of earlier entities
+              while (rHeadValid && ord.compare(rEntity, le) < 0)
+                advanceRight()
+              // consume right rows of this entity with ts <= left ts
+              while (rHeadValid && ord.compare(rEntity, le) == 0 &&
+                rTs <= lts) {
+                held = compact(rRow)
+                heldEntity = InternalRow.copyValue(rEntity)
+                heldTs = rTs
+                heldValid = true
+                advanceRight()
+              }
+              heldValid && ord.compare(heldEntity, le) == 0 &&
+                heldTs <= lts && tol.forall(t => lts - heldTs <= t)
+            }
+
           override def next(): InternalRow = {
             val l = lIter.next()
-            val le = l.get(lEntityOrd, entityType)
-            val lts = l.getLong(lTsOrd)
-            // drop right rows of earlier entities
-            while (rHeadValid && ord.compare(rEntity, le) < 0) advanceRight()
-            // consume right rows of this entity with ts <= left ts
-            while (rHeadValid && ord.compare(rEntity, le) == 0 &&
-              rTs <= lts) {
-              held = compact(rRow)
-              heldEntity = InternalRow.copyValue(rEntity)
-              heldTs = rTs
-              heldValid = true
-              advanceRight()
-            }
-            val matches = heldValid &&
-              ord.compare(heldEntity, le) == 0 && heldTs <= lts &&
-              tol.forall(t => lts - heldTs <= t)
-            proj(joined(l, if (matches) held else nullPayload))
+            proj(joined(l, if (matches(l)) held else nullPayload))
           }
         }
       }

@@ -55,6 +55,41 @@ class AsOfNativeSpec extends SparkSpec {
     }
   }
 
+  test("NULL keys: right rows with a NULL entity or ts never match; left " +
+    "rows with a NULL key pass through with a NULL payload") {
+    val lRows = Seq[(Option[String], Option[Long], Double)](
+      (Some("a"), Some(5L), 1.0), (Some("a"), Some(20L), 2.0),
+      (Some("a"), None, 3.0), (None, Some(5L), 4.0), (None, None, 5.0),
+      (Some("b"), Some(7L), 6.0), (Some("c"), Some(1L), 7.0))
+    val rRows = Seq[(Option[String], Option[Long], Double)](
+      (Some("a"), None, 99.0), (None, Some(1L), 98.0), (None, None, 97.0),
+      (Some("a"), Some(10L), 10.0), (Some("b"), Some(3L), 30.0),
+      (Some("b"), None, 96.0), (Some("c"), Some(0L), 40.0))
+    // the rule, brute force: only fully keyed right rows are candidates
+    def brute(tol: Option[Long]): Seq[String] = lRows.map { case (e, t, v) =>
+      val hit = for {
+        le <- e; lt <- t
+        (_, rt, rv) <- rRows.filter(r => r._1.contains(le) &&
+          r._2.exists(_ <= lt)).maxByOption(_._2.get)
+        if tol.forall(lt - rt.get <= _)
+      } yield rv
+      Seq(e.getOrElse("null"), t.fold("null")(_.toString), v.toString,
+        hit.fold("null")(_.toString)).mkString("|")
+    }.sorted
+    Seq(None, Some(3L)).foreach { tol =>
+      val l = lRows.toDF("entity_id", "ts", "lv").repartition(3)
+      val r = rRows.toDF("entity_id", "ts", "f_v").repartition(2)
+      val cols = Seq("entity_id", "ts", "lv", "f_v").map(col)
+      val native = canon(AsOfJoinNative.joinBackward(spark, l, r,
+        "entity_id", "ts", tol).select(cols: _*))
+      val composed = canon(AsOf.joinBackward(l,
+        r.withColumnRenamed("f_v", "v"), "entity_id", "ts", tol,
+        rightPrefix = "f_").select(cols: _*))
+      assert(native == brute(tol), s"native (tol=$tol): $native")
+      assert(composed == brute(tol), s"composed (tol=$tol): $composed")
+    }
+  }
+
   test("pruning through the node: un-projected wide parquet inputs, a " +
     "narrow select — the scans read only keys + referenced payload") {
     val dir = java.nio.file.Files

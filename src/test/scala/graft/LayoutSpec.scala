@@ -3,8 +3,7 @@ package graft
 import graft.core.{Layout, TokenGen}
 import org.apache.spark.sql.functions._
 
-/** Layout/skew helpers: salted aggregation equals direct aggregation;
-  * range layout preserves data and in-partition order. */
+/** Layout/skew helpers: salted aggregation equals direct aggregation. */
 class LayoutSpec extends SparkSpec {
 
   import spark.implicits._
@@ -30,24 +29,5 @@ class LayoutSpec extends SparkSpec {
       assertClose(s, ds, s"sum@$k", rtol = 1e-12)
       assert(m == dm, s"max@$k")
     }
-  }
-
-  test("byEntityTime preserves rows and sorts within partitions") {
-    val pts = TokenGen.points(TokenGen.docs(spark, 10))
-    val laid = Layout.byEntityTime(pts, "entity_id", "ts", 6)
-    assert(laid.count() == pts.count())
-    val violations = laid.mapPartitions { it =>
-      var prev: Option[(String, Long)] = None
-      var bad = 0
-      it.foreach { r =>
-        val cur = (r.getString(0), r.getLong(1))
-        prev.foreach { p =>
-          if (p._1 > cur._1 || (p._1 == cur._1 && p._2 > cur._2)) bad += 1
-        }
-        prev = Some(cur)
-      }
-      Iterator.single(bad)
-    }.collect().sum
-    assert(violations == 0, s"$violations out-of-order rows")
   }
 }

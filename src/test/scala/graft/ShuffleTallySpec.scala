@@ -3,8 +3,9 @@ package graft
 import graft.core.ShuffleTally
 import org.apache.spark.sql.functions._
 
-/** The shuffle tally must attribute bytes to the measured region:
-  * a groupBy job writes shuffle data, a map-only job writes none. */
+/** The shuffle tally must attribute bytes and jobs/stages/tasks to the
+  * measured region: a groupBy job writes shuffle data over more stages,
+  * a map-only job writes none. */
 class ShuffleTallySpec extends SparkSpec {
 
   import spark.implicits._
@@ -27,6 +28,10 @@ class ShuffleTallySpec extends SparkSpec {
     }
     assert(mapOnly.shuffleWriteBytes == 0,
       s"map-only job tallied shuffle bytes: $mapOnly")
+    Seq(agg, mapOnly).foreach(d => assert(d.jobs > 0 && d.stages > 0 &&
+      d.tasks > 0, s"no jobs/stages/tasks tallied: $d"))
+    assert(agg.stages > mapOnly.stages,
+      s"groupBy should run more stages than a map-only job: $agg vs $mapOnly")
   }
 
   /** Shuffle-byte regression budget for the top shuffle consumers at

@@ -61,17 +61,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session profile ([[Harness.session]]) with 4 cores and
+    * 4 shuffle partitions for small in-memory inputs. */
+  lazy val session: SparkSession = Harness.session(4, partitions = 4)
 
   private val mapper = new ObjectMapper
   private val cache = scala.collection.concurrent.TrieMap.empty[String, JsonNode]
