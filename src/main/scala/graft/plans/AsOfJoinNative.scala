@@ -1,14 +1,14 @@
 package graft.plans
 
+import graft.core.Tables
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.LongType
 
 /** Native Catalyst as-of join (SURVEY.md §7.3 "optional Strategy later";
   * preference level (c) of the build brief): a custom LogicalPlan +
@@ -25,12 +25,16 @@ import org.apache.spark.sql.types.LongType
   * partition. Semantics are identical (inclusive <=, optional
   * staleness tolerance, NULL payload on no match, NULL keys never
   * match) and asserted equal to the composed operator in
-  * AsOfNativeSpec.
+  * AsOfNativeSpec. The node claims only its four keys as references,
+  * so Catalyst's own ColumnPruning narrows both children (and their
+  * scans) to the keys plus the columns read above the node.
   *
   * Contract: entity column name shared by both sides; ts columns are
-  * LongType (engine-internal micros contract); right payload column
-  * names must not collide with left columns (callers prefix — same
-  * rule as AsOf.joinBackward's rightPrefix).
+  * integral, TIMESTAMP or TIMESTAMP_NTZ, keyed on both sides (and
+  * emitted) as LongType micros via `Tables.tsMicros`, so a tolerance on
+  * timestamps is in micros; right payload column names must not collide
+  * with left columns (callers prefix — same rule as AsOf.joinBackward's
+  * rightPrefix).
   */
 object AsOfJoinNative {
 
@@ -55,61 +59,15 @@ object AsOfJoinNative {
       left.output ++ right.output
         .filterNot(a => a.name == entityName || a.name == tsName)
         .map(_.withNullability(true))
-    // name-based keys leave `expressions` empty; claim every child
-    // column so ColumnPruning's generic clause cannot strip the keys.
-    // Catalyst can therefore not prune THROUGH this node on its own —
-    // [[PruneAsOfChildren]] (registered wherever the strategy is) does
-    // it instead, so callers no longer have to pre-project.
-    override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-      org.apache.spark.sql.catalyst.expressions.AttributeSet(
-        left.output ++ right.output)
+    // name-based keys leave `expressions` empty, so claim the four keys
+    // here (resolved against the current children): ColumnPruning's
+    // generic clause then keeps them and pushes a Project of exactly
+    // the keys plus the referenced payload into each child.
+    override def references: AttributeSet =
+      AttributeSet(Seq(leftEntity, leftTs, rightEntity, rightTs))
     override protected def withNewChildrenInternal(
         newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinPlan =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** Column pruning THROUGH the as-of node (round-4 "what's wrong" #3:
-    * the node claims every child column in `references` to keep its
-    * name-carried keys alive, which also blinded ColumnPruning — wide
-    * inputs reached the merge unless the caller pre-projected). When a
-    * Project (optionally over a Filter) consumes only part of the
-    * node's output, push a Project into each child keeping exactly the
-    * referenced columns plus the join keys. Registered alongside the
-    * strategy: `injectOptimizerRule` places it INSIDE the operator-
-    * optimization fixed point, so ColumnPruning then carries the
-    * inserted Projects all the way to the scans (ReadSchema shrinks —
-    * asserted in AsOfNativeSpec); the `experimental.extraOptimizations`
-    * path runs post-batch, where FileSourceStrategy's
-    * PhysicalOperation collapse still honors scan-adjacent Projects. */
-  object PruneAsOfChildren
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-
-    import org.apache.spark.sql.catalyst.expressions.AttributeSet
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-
-    private def pruned(a: AsOfJoinPlan, needed: AttributeSet)
-    : Option[AsOfJoinPlan] = {
-      def keep(child: LogicalPlan): Seq[Attribute] =
-        child.output.filter(attr => needed.contains(attr) ||
-          attr.name == a.entityName || attr.name == a.tsName)
-      val (lk, rk) = (keep(a.left), keep(a.right))
-      if (lk.length < a.left.output.length ||
-        rk.length < a.right.output.length)
-        Some(a.copy(
-          left = if (lk.length < a.left.output.length)
-            Project(lk, a.left) else a.left,
-          right = if (rk.length < a.right.output.length)
-            Project(rk, a.right) else a.right))
-      else None
-    }
-
-    override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-      case p @ Project(_, a: AsOfJoinPlan) =>
-        pruned(a, p.references).map(n => p.copy(child = n)).getOrElse(p)
-      case p @ Project(_, f @ Filter(_, a: AsOfJoinPlan)) =>
-        pruned(a, p.references ++ f.references)
-          .map(n => p.copy(child = f.copy(child = n))).getOrElse(p)
-    }
   }
 
   object AsOfStrategy extends SparkStrategy {
@@ -261,16 +219,13 @@ object AsOfJoinNative {
         spark.experimental.extraStrategies =
           spark.experimental.extraStrategies :+ AsOfStrategy
       }
-      if (!spark.experimental.extraOptimizations
-        .contains(PruneAsOfChildren)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ PruneAsOfChildren
-      }
     }
-    val l = left.withColumn(tsCol, col(tsCol).cast(LongType))
-    val r = right.withColumn(tsCol, col(tsCol).cast(LongType))
-    val lPlan = GraftBridge.analyzedPlan(l)
-    val rPlan = GraftBridge.analyzedPlan(r)
+    // both sides keyed in micros: a TIMESTAMP cast to long would drop
+    // its sub-second part, and TIMESTAMP_NTZ does not cast to long
+    def micros(df: DataFrame): LogicalPlan = df.withColumn(tsCol,
+      Tables.tsMicros(col(tsCol), df.schema(tsCol).dataType))
+      .queryExecution.analyzed
+    val (lPlan, rPlan) = (micros(left), micros(right))
     def attr(p: LogicalPlan, name: String): Attribute =
       p.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name not found"))

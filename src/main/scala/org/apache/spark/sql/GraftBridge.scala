@@ -11,15 +11,6 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  def analyzedPlan(df: DataFrame): LogicalPlan =
-    df.queryExecution.analyzed
-
-  /** Resolve the planner strategies an extensions bundle would inject
-    * (private[sql] builder — used by the GraftExtensions spec). */
-  def plannerStrategies(ext: SparkSessionExtensions, spark: SparkSession)
-  : Seq[execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark.asInstanceOf[classic.SparkSession])
-
   /** True iff no InMemoryRelation is registered — the post-query cache-
     * hygiene assertion (every cache must be scoped to its query). */
   def cacheManagerEmpty(spark: SparkSession): Boolean =

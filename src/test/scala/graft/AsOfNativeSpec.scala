@@ -102,32 +102,87 @@ class AsOfNativeSpec extends SparkSpec {
       s"junkR$i", i * 9.0))
       .toDF("entity_id", "ts", "f_v", "r_junk", "r_unused")
       .write.mode("overwrite").parquet(s"$dir/r")
-    // NO caller-side projection — round 4 required it; the
-    // PruneAsOfChildren rule must now narrow the scans itself
-    val joined = AsOfJoinNative.joinBackward(spark,
-      spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"),
-      "entity_id", "ts")
-      .select(col("entity_id"), col("ts"), col("lv"), col("f_v"))
-    assert(joined.count() == 500) // materialize (resolves the AQE plan)
-    val plan = joined.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case other => other
+    // NO caller-side projection: the node claims only its keys, so
+    // Catalyst's ColumnPruning narrows the scans itself
+    val (l, r) = (spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"))
+    val joined = AsOfJoinNative.joinBackward(spark, l, r, "entity_id", "ts")
+    val narrow = Seq("entity_id", "ts", "lv", "f_v").map(col)
+    val fv = joined.collect()
+      .flatMap(row => Option(row.getAs[java.lang.Double]("f_v")))
+    val lKeys = Set("entity_id", "ts")
+    val (lNarrow, rNarrow) = (lKeys + "lv", lKeys + "f_v")
+    Seq(
+      ("narrow select", joined.select(narrow: _*), 500L, Set(lNarrow, rNarrow)),
+      ("filter + select", joined.where(col("f_v") > 3.0).select(narrow: _*),
+        fv.count(_ > 3.0).toLong, Set(lNarrow, rNarrow)),
+      ("groupBy", joined.groupBy("entity_id").agg(sum("f_v")), 5L,
+        Set(lKeys, rNarrow)),
+      ("no projection", joined, 500L, Set(l.columns.toSet, r.columns.toSet))
+    ).foreach { case (shape, df, rows, want) =>
+      assert(df.count() == rows, shape)
+      val plan = df.queryExecution.sparkPlan // before AQE wraps the scans
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.requiredSchema.fieldNames.toSet
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.readSchema().fieldNames.toSet
+      }
+      assert(scans.size == 2 && scans.toSet == want,
+        s"$shape: scans $scans, want $want in\n$plan")
     }
-    val scans = plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.requiredSchema.fieldNames.toSet
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.readSchema().fieldNames.toSet
+  }
+
+  test("timestamp keys compare in micros: sub-second TIMESTAMP and " +
+    "TIMESTAMP_NTZ rows never match a later right row") {
+    val t0 = 1704067200000000L // 2024-01-01 00:00:00 UTC, micros
+    val ms = 1000L
+    val lRows = Seq(("a", 200 * ms, 1.0), ("a", 1500 * ms, 2.0),
+      ("a", 2000 * ms, 3.0), ("b", 100 * ms, 4.0), ("b", 3250 * ms, 5.0))
+    val rRows = Seq(("a", 900 * ms, 99.0), ("a", 1400 * ms, 10.0),
+      ("a", 2000 * ms, 20.0), ("b", 50 * ms, 30.0), ("b", 3300 * ms, 40.0))
+    // the rule, brute force on micros: latest right ts <= left ts
+    def brute(tol: Option[Long]): Seq[String] = lRows.map { case (e, t, v) =>
+      val hit = rRows.filter(r => r._1 == e && r._2 <= t).maxByOption(_._2)
+        .filter(r => tol.forall(t - r._2 <= _)).map(_._3)
+      Seq(e, (t0 + t).toString, v.toString, hit.fold("null")(_.toString))
+        .mkString("|")
+    }.sorted
+    Seq("timestamp", "timestamp_ntz").foreach { tsType =>
+      def df(rows: Seq[(String, Long, Double)], v: String) =
+        rows.toDF("entity_id", "us", v).select(col("entity_id"),
+          timestamp_micros(col("us") + t0).cast(tsType).as("ts"), col(v))
+      val (l, r) = (df(lRows, "lv").repartition(2), df(rRows, "f_v"))
+      Seq(None, Some(500 * ms)).foreach { tol =>
+        val native = AsOfJoinNative.joinBackward(spark, l, r,
+          "entity_id", "ts", tol)
+        val composed = AsOf.joinBackward(l, r.withColumnRenamed("f_v", "v"),
+          "entity_id", "ts", tol, rightPrefix = "f_")
+          .withColumn("ts", graft.core.Tables.tsMicros(col("ts"),
+            l.schema("ts").dataType))
+        val cols = Seq("entity_id", "ts", "lv", "f_v").map(col)
+        val want = brute(tol)
+        assert(canon(native.select(cols: _*)) == want, s"native $tsType $tol")
+        assert(canon(composed.select(cols: _*)) == want,
+          s"composed $tsType $tol")
+      }
     }
-    assert(scans.size == 2, s"expected 2 file scans, got $scans in\n$plan")
-    val all = scans.flatten.toSet
-    Seq("l_unused", "l_junk1", "l_junk2", "r_junk", "r_unused")
-      .foreach(c => assert(!all.contains(c),
-        s"unreferenced column $c survived into a scan: $scans"))
-    assert(scans.exists(_ == Set("entity_id", "ts", "lv")) &&
-      scans.exists(_ == Set("entity_id", "ts", "f_v")),
-      s"scans not minimal: $scans")
+  }
+
+  test("registration: AsOfStrategy once per session, and a new session " +
+    "plans the native node on its first call") {
+    def run(s: org.apache.spark.sql.SparkSession) = AsOfJoinNative
+      .joinBackward(s, s.range(3).selectExpr("'a' AS entity_id", "id AS ts",
+        "id * 1.0 AS lv"), s.range(2).selectExpr("'a' AS entity_id",
+        "id AS ts", "id * 2.0 AS f_v"), "entity_id", "ts")
+    def registered(s: org.apache.spark.sql.SparkSession) =
+      s.experimental.extraStrategies.count(_ == AsOfJoinNative.AsOfStrategy)
+    run(spark); run(spark)
+    assert(registered(spark) == 1)
+    val fresh = spark.newSession()
+    assert(registered(fresh) == 0)
+    val first = run(fresh)
+    assert(first.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    assert(first.count() == 3 && registered(fresh) == 1)
   }
 
   test("plan shape: no union, children sorted independently") {

@@ -105,16 +105,6 @@ class PlanSpec extends SparkSpec {
       "native L2 expression missing — HOF fallback in the hot scan")
   }
 
-  test("GraftExtensions injects the native as-of strategy " +
-    "(spark.sql.extensions registration path)") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val strategies =
-      org.apache.spark.sql.GraftBridge.plannerStrategies(ext, spark)
-    assert(strategies.contains(graft.plans.AsOfJoinNative.AsOfStrategy),
-      s"injected strategies: $strategies")
-  }
-
   test("MinHash/SimHash candidate generation stays on equi-joins " +
     "(banded keys), never a nested-loop scan") {
     Seq("q_minhash_lsh" -> graft.queries.DedupQueries.qMinhashLsh _,
