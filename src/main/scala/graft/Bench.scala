@@ -27,6 +27,15 @@ import org.apache.spark.sql.functions.{col, posexplode}
   */
 object Bench {
 
+  /** The scaling ladder "n1,n2,...": at least two core counts, because
+    * efficiency is reported per adjacent pair. */
+  private[graft] def parseLadder(spec: String): Seq[Int] = {
+    val ladder = spec.split(",").map(_.trim.toInt).toSeq
+    require(ladder.length >= 2,
+      s"SPARK_GRAFT_BENCH_LADDER needs at least 2 core counts, got '$spec'")
+    ladder
+  }
+
   private def flagshipSecs(spark: SparkSession, tokensPath: String): (Long, Double) = {
     val points = spark.read.parquet(tokensPath)
       .select(col("doc_id").as("entity_id"),
@@ -52,6 +61,8 @@ object Bench {
     // 8-core pass is overhead-bound and eff(2→8) under-reads (0.78 vs
     // 0.84 at 56M)
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "40000").toLong
+    val ladder = parseLadder(sys.env.getOrElse("SPARK_GRAFT_BENCH_LADDER",
+      s"${math.max(1, cpus / 4)},$cpus"))
 
     // --- write the deterministic tokens table once (not timed) ---
     val tokensPath = s"/tmp/graft_bench_tokens_$nDocs"
@@ -76,9 +87,6 @@ object Bench {
     // adjacent pair, headlined by the lowest (below memory-bandwidth
     // saturation). Analysis in BASELINE.md "Measured".
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val ladder = sys.env.getOrElse("SPARK_GRAFT_BENCH_LADDER",
-      s"${math.max(1, cpus / 4)},$cpus")
-      .split(",").map(_.trim.toInt).toSeq
     var rows = 0L
 
     // host-noise instrumentation (round-5 noise rule — see BASELINE.md

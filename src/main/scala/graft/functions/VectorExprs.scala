@@ -184,7 +184,7 @@ case class SparseSignedDotExpr(child: Expression, dims: Seq[Int],
 }
 
 /** Squared L2 distance Σ (a_i − b_i)² — the hot scalar of the IVF
-  * quantizer's points×k assignment scan (EmbedQueries.ivfParts). Same
+  * quantizer's points×k assignment scan (EmbedQueries.lloyd). Same
   * posture as [[DotProductExpr]]: replaces the interpreted
   * `aggregate(zip_with(...))` fold with a codegen'd tight loop whose
   * float semantics are identical (widen-to-double per element, subtract,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.{Hash64, Kmv}
+import graft.queries.SqlGen.{md5u64, signed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -518,17 +519,6 @@ object CurationQueries {
   }
 
   // ---------------------------------------------------------------------
-
-  private val U63 = BigInt(1) << 63
-  private val U64 = BigInt(1) << 64
-
-  /** HUGEINT [0, 2^64) → signed BIGINT (two's complement). */
-  private def signed(x: String): String =
-    s"(CASE WHEN $x >= $U63 THEN $x - $U64 ELSE $x END)::BIGINT"
-
-  /** [[Hash64.md5_64]] dual in unsigned HUGEINT domain. */
-  private def md5u64(e: String): String =
-    s"(('0x' || substr(md5($e), 1, 16))::UBIGINT)::HUGEINT"
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_sample_split" -> (qSampleSplit _),

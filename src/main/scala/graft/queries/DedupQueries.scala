@@ -2,7 +2,10 @@ package graft.queries
 
 import graft.core.{Caches, Tables}
 import graft.functions.Hash64
+import graft.functions.Vectors.dot
 import graft.operators.Banded
+import graft.queries.EmbedQueries.{cosSim, normed, top3}
+import graft.queries.SqlGen.{U64, md5u64, signed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -377,19 +380,10 @@ object DedupQueries {
   private val NeardupCap = 400L
 
   def qEmbedNeardup(spark: SparkSession, dir: String): DataFrame = {
-    def dot(x: Column, y: Column): Column = graft.functions.Vectors.dot(x, y)
     val emb = Tables.embeddings(spark, dir).where(col("vec_id") < NeardupCap)
-    // norms are per-VECTOR work — compute them once per side, not per
-    // pair (the expression tree sqrt(dot(x,x)) is unchanged, so the
-    // oracle's floats still match bitwise)
-    val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("na"))
-    val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nb"))
-    broadcast(a).join(b, col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-          .as("cos_sim"),
+    broadcast(normed(emb, "a"))
+      .join(normed(emb, "b"), col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), cosSim,
         lit(NeardupCap).as("scanned_universe"))
       .where(col("cos_sim") >= 0.9)
       .orderBy(col("a_id"), col("b_id"))
@@ -456,8 +450,8 @@ object DedupQueries {
     // norms once per vector, BEFORE the 16-way explode (expression
     // tree sqrt(dot(x,x)) unchanged, so the oracle floats match)
     val c = Banded.candidates(emb.select(col("vec_id"), e), "vec_id", Seq(e),
-      buckets, Seq(e, sqrt(dotD(e, e)).as("nrm")), cap)
-    val cos = round(dotD(col("embedding_a"), col("embedding_b")) /
+      buckets, Seq(e, sqrt(dot(e, e)).as("nrm")), cap)
+    val cos = round(dot(col("embedding_a"), col("embedding_b")) /
       (col("nrm_a") * col("nrm_b")), 6)
     c.pairs.select(col("a_id"), col("b_id"), cos.as("cos_sim"))
       .where(col("cos_sim") >= NeardupFloor)
@@ -476,7 +470,6 @@ object DedupQueries {
     * search cost is proportional to the largest bucket — the histogram
     * IS the skew diagnostic. */
   def qAnnLshBuckets(spark: SparkSession, dir: String): DataFrame = {
-    def dot(x: Column, y: Column): Column = graft.functions.Vectors.dot(x, y)
     val emb = Tables.embeddings(spark, dir)
     // h_i[d] = +1 if ((i*2654435761 + d*40503) mod 97) < 48 else -1:
     // integer arithmetic, identical in any engine. Projections via the
@@ -497,10 +490,6 @@ object DedupQueries {
       .agg(count(lit(1)).as("n"), round(avg(col("nrm")), 6).as("mean_norm"))
       .orderBy(col("bucket"))
   }
-
-  /** Native codegen'd dot product — bit-identical to the HOF form. */
-  private def dotD(x: Column, y: Column): Column =
-    graft.functions.Vectors.dot(x, y)
 
   /** Multi-table LSH parameters: L hash tables of k sparse random
     * hyperplanes (8 signed dims each). For the test embeddings, whose
@@ -538,30 +527,15 @@ object DedupQueries {
     val buckets = array((0 until LshTables).map(t =>
       struct(lit(t).as("t"), tableBucket(col("embedding"), t).as("b"))): _*)
     val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"), explode(buckets).as("bk"))
       .select(col("vec_id"), col("embedding"),
-        sqrt(dotD(col("embedding"), col("embedding"))).as("nrm"),
-        explode(buckets).as("bk"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
         col("bk.t").as("t"), col("bk.b").as("b"))
-    val q = emb.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("embedding").as("ea"),
-        col("nrm").as("na"), col("t"), col("b"))
-    val tt = emb.select(col("vec_id").as("b_id"),
-      col("embedding").as("eb"), col("nrm").as("nb"), col("t"), col("b"))
-    // norms precomputed per vector; sqrt(dot(x,x)) tree unchanged so the
-    // oracle floats match bitwise
-    val cos = round(
-      dotD(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-    val cand = broadcast(q).join(tt, Seq("t", "b"))
+    val cand = broadcast(normed(emb.where(col("vec_id") < 20), "a"))
+      .join(normed(emb, "b"), Seq("t", "b"))
       .where(col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), cos.as("cos_sim"))
+      .select(col("a_id"), col("b_id"), cosSim)
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("a_id"))
-      .orderBy(col("cos_sim").desc, col("b_id"))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3)
-      .orderBy(col("a_id"), col("rank"))
+    top3(cand, col("cos_sim").desc)
   }
 
   val all: Map[String, CoreQueries.Q] = Map(
@@ -578,19 +552,6 @@ object DedupQueries {
   // ---------------------------------------------------------------------
   // DuckDB oracles
   // ---------------------------------------------------------------------
-
-  private val U63 = BigInt(1) << 63
-  private val U64 = BigInt(1) << 64
-
-  /** HUGEINT [0, 2^64) → signed BIGINT with Java two's-complement
-    * semantics (how every Spark-side long is compared/min'd). */
-  private def signed(x: String): String =
-    s"(CASE WHEN $x >= $U63 THEN $x - $U64 ELSE $x END)::BIGINT"
-
-  /** `('0x' || first-16-hex-of-md5)::UBIGINT` — the [[Hash64.md5_64]]
-    * dual, kept in unsigned HUGEINT domain for the mix replay. */
-  private def md5u64(e: String): String =
-    s"(('0x' || substr(md5($e), 1, 16))::UBIGINT)::HUGEINT"
 
   /** The q_minhash_lsh replay up to the verified pair set, as a shared
     * WITH-chain ending in CTE `pairs(a_id, b_id, inter, nsa, nsb,

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
+import graft.functions.Vectors.{dot, l2DistSq}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,8 +12,12 @@ import org.apache.spark.sql.functions._
   * Brute-force cosine top-k is the verified baseline (a broadcast
   * nested-loop join — the 20-query side is broadcast, the big side
   * streams, so the plan scales to arbitrarily many target vectors).
-  * The LSH-bucketed variant (see AnnQueries/rows-only entries) is the
-  * 100-TB path: random-hyperplane signatures bucket the join.
+  * The LSH-bucketed variants (q_ann_lsh_topk, q_embed_neardup_lsh in
+  * DedupQueries) are the 100-TB path: random-hyperplane signatures
+  * bucket the join. The steps these queries share are defined once,
+  * here: the quantizer trainer [[lloyd]], the cosine scorer [[normed]] +
+  * [[cosSim]] and the top-3 rank [[top3]] (the last two also serve the
+  * DedupQueries embedding queries).
   *
   * float×float products are exact in double, so the only cross-engine
   * nondeterminism is the 64-term sum order — rounded away at 6dp
@@ -21,30 +26,36 @@ import org.apache.spark.sql.functions._
   */
 object EmbedQueries {
 
-  /** Native codegen'd dot product (functions/VectorExprs) — same float
-    * semantics as the aggregate(zip_with(...)) HOF it replaced. */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.Vectors.dot(a, b)
+  /** Each vector with its norm, computed once per vector: `vec_id` and
+    * `embedding` become `${p}_id` and `e$p`, the norm is `n$p`, and any
+    * other column passes through. The sqrt(dot(x, x)) tree is the one
+    * the oracles replay, so the floats match. */
+  private[queries] def normed(emb: DataFrame, p: String): DataFrame =
+    emb.withColumnRenamed("vec_id", s"${p}_id")
+      .withColumnRenamed("embedding", s"e$p")
+      .withColumn(s"n$p", sqrt(dot(col(s"e$p"), col(s"e$p"))))
+
+  /** Cosine of a [[normed]] `a` side and `b` side, rounded to 6dp. */
+  private[queries] val cosSim: Column =
+    round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
+      .as("cos_sim")
+
+  /** The 3 best `b_id` per `a_id` under `order`, ties to the smaller
+    * b_id, with `rank` 1..3: the one rank of every top-3 query. */
+  private[queries] def top3(scored: DataFrame, order: Column): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("a_id")).orderBy(order, col("b_id")))
+        .cast("long"))
+      .where(col("rank") <= 3)
+      .orderBy(col("a_id"), col("rank"))
 
   /** Top-3 cosine neighbors for each query vector (vec_id < 20). */
   def qEmbedTopk(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    // norms are per-vector work, computed once per side (the
-    // sqrt(dot(x,x)) tree is unchanged so the oracle floats match)
-    val q = emb.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("embedding").as("ea"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("na"))
-    val t = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nb"))
-    val cos = round(
-      dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-    val scored = broadcast(q).join(t, col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), cos.as("cos_sim"))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("cos_sim").desc, col("b_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3)
-      .orderBy(col("a_id"), col("rank"))
+    val scored = broadcast(normed(emb.where(col("vec_id") < 20), "a"))
+      .join(normed(emb, "b"), col("a_id") =!= col("b_id"))
+      .select(col("a_id"), col("b_id"), cosSim)
+    top3(scored, col("cos_sim").desc)
   }
 
   /** Per-label embedding statistics: count, mean vector norm, mean first
@@ -61,56 +72,65 @@ object EmbedQueries {
       .orderBy(col("label"))
   }
 
-  /** Σ (x_i − c_i)²: the native codegen'd expression (bit-identical to
-    * the `aggregate(zip_with(...))` fold — same widen/subtract/square/
-    * ascending-accumulate chain; VectorSpec asserts the equality). */
-  private def d2Col(x: Column, c: Column): Column =
-    graft.functions.Vectors.l2DistSq(x, c)
-
-  /** IVF building blocks: double-cast embeddings, 1.5 Lloyd iterations
-    * of a k = 16 coarse quantizer (init = vec_id 0..15), final cell
-    * assignment. Updated centroids are QUANTIZED (round(avg+1e-9, 6)) so
-    * both engines carry bit-identical centroids into the next assignment
-    * — the distances are then identical ordered folds and the argmin
-    * (tie → smallest cell id) is exact, not tolerance-based. */
-  private def ivfParts(spark: SparkSession, dir: String)
-  : (DataFrame, DataFrame, DataFrame) = {
-    // ed is NOT cached: its recompute is a single small parquet scan,
-    // and session-lifetime caches accumulate across a 57-query run
-    // (never unpersisted from inside a query fn); only the 16-row
-    // centroid table below is worth pinning.
-    val ed = Tables.embeddings(spark, dir)
+  /** Every vector widened to doubles: (vec_id, svec). The whole vector
+    * is the IVF quantizer's one subspace. Not cached: its recompute is
+    * one small parquet scan. */
+  private def doubled(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("xd"))
-    val c0 = ed.where(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("xd").as("cvec"))
+        transform(col("embedding"), _.cast("double")).as("svec"))
+
+  /** The PQ split of [[doubled]]: M = 4 disjoint 16-dim subspaces,
+    * (vec_id, sub, svec). */
+  private def subvectors(ed: DataFrame): DataFrame = {
+    val M = 4; val D = 16
+    ed.select(col("vec_id"),
+      explode(transform(sequence(lit(0), lit(M - 1)), s => struct(
+        s.as("sub"), slice(col("svec"), s * D + 1, lit(D)).as("svec"))))
+        .as("e"))
+      .select(col("vec_id"), col("e.sub").as("sub"), col("e.svec").as("svec"))
+  }
+
+  /** The one quantizer trainer: 1.5 Lloyd iterations of a k = 16
+    * codebook per `by` group over `vecs(vec_id, by..., svec)`. IVF is
+    * `by = Nil` over the whole vector; PQ (Jégou, Douze, Schmid 2011) is
+    * `by = Seq("sub")` over [[subvectors]], so adding subspaces changes a
+    * constant, not the plan. Init = vec_id 0..15, one centroid update,
+    * final assignment. Updated centroids are QUANTIZED (round(avg+1e-9,
+    * 6)) so both engines carry bit-identical codebooks into the next
+    * assignment — the distances are then identical ordered folds and
+    * the argmin (tie → smallest cid) is exact, not tolerance-based.
+    * Returns (codebook(by..., cid, cvec), final(vec_id, by..., cid, d2)).
+    * The codebook side is k rows per group and always broadcasts. */
+  private def lloyd(vecs: DataFrame, by: Seq[String])
+  : (DataFrame, DataFrame) = {
+    val keys = by.map(col)
+    val c0 = vecs.where(col("vec_id") < 16)
+      .select(keys ++ Seq(col("vec_id").as("cid"), col("svec").as("cvec")): _*)
     def assign(cents: DataFrame): DataFrame = {
-      // score every vector against all k centroids: k is a query
-      // constant, the centroid side broadcasts — the canonical
-      // points×k shape, partitionable at any corpus size
       // argmin (tie → smallest cid) as a struct-min AGGREGATE — partial
-      // mins combine map-side, so 1 row/vector enters the exchange
-      // instead of the k-row window sort the round-5 shape shuffled
-      // (guide §2.3 aggregate-before-shuffle); identical (d2, cid)
-      // lexicographic ordering, so the winner is unchanged.
-      val scored = ed.join(broadcast(cents), lit(true))
-        .select(col("vec_id"),
-          struct(d2Col(col("xd"), col("cvec")).as("d2"), col("cid")).as("sc"))
-      scored.groupBy(col("vec_id")).agg(min(col("sc")).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cell"), col("m.d2").as("d2"))
+      // mins combine map-side, so 1 row per (vector, group) enters the
+      // exchange instead of a k-row window sort (guide §2.3). With
+      // by = Nil the join has no key: the points×k cross join.
+      val scored = vecs.join(broadcast(cents), by)
+        .select(col("vec_id") +: keys :+ struct(
+          l2DistSq(col("svec"), col("cvec")).as("d2"), col("cid")).as("sc"): _*)
+      scored.groupBy(col("vec_id") +: keys: _*).agg(min(col("sc")).as("m"))
+        .select(col("vec_id") +: keys :+ col("m.cid").as("cid") :+
+          col("m.d2").as("d2"): _*)
     }
-    val c1 = assign(c0).join(ed, Seq("vec_id"))
-      .select(col("cell"), posexplode(col("xd")).as(Seq("dim0", "v")))
-      .groupBy(col("cell"), col("dim0"))
+    val c1 = assign(c0).join(vecs, "vec_id" +: by)
+      .select(keys :+ col("cid") :+
+        posexplode(col("svec")).as(Seq("dim0", "v")): _*)
+      .groupBy(keys :+ col("cid") :+ col("dim0"): _*)
       .agg(round(avg(col("v")) + 1e-9, 6).as("cv"))
-      .groupBy(col("cell"))
+      .groupBy(keys :+ col("cid"): _*)
       .agg(transform(array_sort(collect_list(struct(col("dim0"), col("cv")))),
         s => s.getField("cv")).as("cvec"))
-      .select(col("cell").as("cid"), col("cvec"))
-    // feeds the final assignment AND the probe ranking; registered so
-    // the driver's post-query drain unpersists it (no session lifetime)
-    val c1c = graft.core.Caches.cachedCompact(c1)
-    (ed, c1c, assign(c1c))
+    // feeds the final assignment AND the query-side probe or lookup
+    // table; registered so the driver's post-query drain unpersists it
+    val c1c = Caches.cachedCompact(c1)
+    (c1c, assign(c1c))
   }
 
   /** IVF cell assignment — the coarse-quantizer layer of the ANN scale
@@ -118,103 +138,46 @@ object EmbedQueries {
     * vector with its final cell and (rounded) distance to the centroid.
     * Hash-checked end-to-end: the oracle replays both Lloyd passes. */
   def qIvfCells(spark: SparkSession, dir: String): DataFrame = {
-    val (_, _, fin) = ivfParts(spark, dir)
-    fin.select(col("vec_id"), col("cell"),
+    val (_, cells) = lloyd(doubled(spark, dir), Nil)
+    cells.select(col("vec_id"), col("cid").as("cell"),
       round(col("d2") + 1e-9, 6).as("d2"))
       .orderBy(col("vec_id"))
   }
 
-  /** IVF ANN top-k: each query probes its nprobe = 2 nearest cells and
-    * ranks candidates by exact cosine — cell-bucketed candidate
-    * generation is an EQUI-join (like the LSH tables), so the search
-    * cost scales with cell occupancy, not corpus size. Measured recall
-    * vs the q_embed_topk brute-force truth at sf0.01: 0.82 (nprobe=2 of
-    * k=16 cells scans ~1/8 of the corpus per query; raise nprobe/k for
-    * the recall/cost point a production corpus needs). */
-  def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val (ed, c1, fin) = ivfParts(spark, dir)
-    val q = ed.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("xd").as("qx"))
-    val pw = Window.partitionBy(col("a_id"))
-      .orderBy(col("d2"), col("cid"))
-    val probes = q.join(broadcast(c1), lit(true))
+  /** IVF candidates (a_id, b_id): each query vector (vec_id < 20)
+    * probes its nprobe = 2 nearest cells (tie → smaller cid), and every
+    * other vector in them is a candidate — a cell EQUI-join, so the
+    * search cost scales with cell occupancy, not corpus size. */
+  private def ivfCandidates(ed: DataFrame, c1: DataFrame,
+                            cells: DataFrame): DataFrame = {
+    val pw = Window.partitionBy(col("a_id")).orderBy(col("d2"), col("cid"))
+    ed.where(col("vec_id") < 20)
+      .select(col("vec_id").as("a_id"), col("svec").as("qx"))
+      .join(broadcast(c1), lit(true))
       .select(col("a_id"), col("cid"),
-        d2Col(col("qx"), col("cvec")).as("d2"))
+        l2DistSq(col("qx"), col("cvec")).as("d2"))
       .withColumn("prk", row_number().over(pw))
       .where(col("prk") <= 2)
-      .select(col("a_id"), col("cid"))
-    val cand = probes
-      .join(fin.select(col("vec_id").as("b_id"), col("cell")),
-        col("cell") === col("cid"))
+      .join(cells.select(col("vec_id").as("b_id"), col("cid")), Seq("cid"))
       .where(col("b_id") =!= col("a_id"))
       .select(col("a_id"), col("b_id"))
+  }
+
+  /** IVF ANN top-k: [[ivfCandidates]] ranked by exact cosine. Measured
+    * recall vs the q_embed_topk brute-force truth at sf0.01: 0.82
+    * (nprobe=2 of k=16 cells scans ~1/8 of the corpus per query; raise
+    * nprobe/k for the recall/cost point a production corpus needs). */
+  def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
+    val ed = doubled(spark, dir)
+    val (c1, cells) = lloyd(ed, Nil)
     val emb = Tables.embeddings(spark, dir)
-    val ea = emb.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("na"))
-    val eb = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nb"))
-    val scored = cand.join(ea, Seq("a_id")).join(eb, Seq("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-          .as("cos_sim"))
-    val rw = Window.partitionBy(col("a_id"))
-      .orderBy(col("cos_sim").desc, col("b_id"))
-    scored.withColumn("rank", row_number().over(rw).cast("long"))
-      .where(col("rank") <= 3)
-      .orderBy(col("a_id"), col("rank"))
+    val scored = ivfCandidates(ed, c1, cells)
+      .join(normed(emb, "a"), Seq("a_id")).join(normed(emb, "b"), Seq("b_id"))
+      .select(col("a_id"), col("b_id"), cosSim)
+    top3(scored, col("cos_sim").desc)
   }
 
   // ---- product quantization (the compressed-domain ANN tier) ---------
-
-  /** PQ building blocks (Jégou, Douze, Schmid 2011: "Product
-    * Quantization for Nearest Neighbor Search"): the 64-dim vector is
-    * split into M = 4 disjoint 16-dim subspaces, each with its own
-    * k = 16 codebook trained by the same 1.5-Lloyd + quantized-centroid
-    * recipe as the IVF coarse quantizer (init = vec_id 0..15's
-    * subvectors, round(avg+1e-9, 6) update), so both engines carry
-    * bit-identical codebooks and the per-subspace argmin (tie →
-    * smallest code) is exact. One pipeline trains all 4 subspaces at
-    * once: vectors explode to (vec_id, sub, svec) rows and every stage
-    * keys on `sub`, so adding subspaces changes a constant, not the
-    * plan. Returns (subvector table, trained codebooks, final codes).
-    * At corpus scale each stage is an equi-join/agg on (sub[, code]) —
-    * the codebook side is M×k rows and always broadcasts. */
-  private def pqParts(spark: SparkSession, dir: String)
-  : (DataFrame, DataFrame, DataFrame) = {
-    val M = 4; val D = 16
-    val ed = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("xd"))
-    val es = ed.select(col("vec_id"),
-      explode(transform(sequence(lit(0), lit(M - 1)), s => struct(
-        s.as("sub"), slice(col("xd"), s * D + 1, lit(D)).as("svec"))))
-        .as("e"))
-      .select(col("vec_id"), col("e.sub").as("sub"), col("e.svec").as("svec"))
-    val c0 = es.where(col("vec_id") < 16)
-      .select(col("sub"), col("vec_id").as("cid"), col("svec").as("cvec"))
-    def assign(cents: DataFrame): DataFrame = {
-      // per-(vector, subspace) argmin as a struct-min aggregate — same
-      // map-side-combinable shape as the IVF assign (guide §2.3);
-      // identical (d2, cid) ordering, tie → smallest code.
-      val scored = es.join(broadcast(cents), Seq("sub"))
-        .select(col("vec_id"), col("sub"),
-          struct(d2Col(col("svec"), col("cvec")).as("d2"), col("cid")).as("sc"))
-      scored.groupBy(col("vec_id"), col("sub")).agg(min(col("sc")).as("m"))
-        .select(col("vec_id"), col("sub"), col("m.cid").as("code"),
-          col("m.d2").as("d2"))
-    }
-    val c1 = assign(c0).join(es, Seq("vec_id", "sub"))
-      .select(col("sub"), col("code").as("cell"),
-        posexplode(col("svec")).as(Seq("dim0", "v")))
-      .groupBy(col("sub"), col("cell"), col("dim0"))
-      .agg(round(avg(col("v")) + 1e-9, 6).as("cv"))
-      .groupBy(col("sub"), col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("dim0"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
-      .select(col("sub"), col("cell").as("cid"), col("cvec"))
-    val c1c = graft.core.Caches.cachedCompact(c1)
-    (es, c1c, assign(c1c))
-  }
 
   /** round(d2·10⁶ + 10⁻³) → BIGINT: the micro-unit integer lattice
     * (same recipe as the unigram-LM log-probs) — once each subspace
@@ -223,6 +186,16 @@ object EmbedQueries {
   private def latU6(d2: Column): Column =
     round(d2 * lit(1000000.0) + lit(1.0e-3), 0).cast("long")
 
+  /** The ADC lookup table (a_id, sub, code, ld2): each query vector's
+    * (vec_id < 20) EXACT distance to all M×k codebook entries (1280
+    * rows total — always broadcast), landed on the micro-unit lattice. */
+  private def pqLut(es: DataFrame, c1: DataFrame): DataFrame =
+    es.where(col("vec_id") < 20)
+      .select(col("vec_id").as("a_id"), col("sub"), col("svec").as("qs"))
+      .join(broadcast(c1), Seq("sub"))
+      .select(col("a_id"), col("sub"), col("cid").as("code"),
+        latU6(l2DistSq(col("qs"), col("cvec"))).as("ld2"))
+
   /** PQ encoding: each vector compresses to 4 subspace codes (4×4 bits
     * here; 4×log2(k) in general) plus its quantization error. This IS
     * the stored representation the compressed-domain scan reads — at
@@ -230,50 +203,37 @@ object EmbedQueries {
     * vectors, which is the reason PQ exists. recon_d2_u6 = Σ_sub
     * ‖svec − c_code‖² on the micro-unit lattice (exact BIGINT sum). */
   def qPqCodes(spark: SparkSession, dir: String): DataFrame = {
-    val (_, _, fin) = pqParts(spark, dir)
-    fin.select(col("vec_id"), col("sub"), col("code"),
-      latU6(col("d2")).as("ld2"))
-      .groupBy(col("vec_id"))
+    val (_, codes) = lloyd(subvectors(doubled(spark, dir)), Seq("sub"))
+    codes.groupBy(col("vec_id"))
       .agg(
-        max(when(col("sub") === 0, col("code"))).as("code0"),
-        max(when(col("sub") === 1, col("code"))).as("code1"),
-        max(when(col("sub") === 2, col("code"))).as("code2"),
-        max(when(col("sub") === 3, col("code"))).as("code3"),
-        sum(col("ld2")).as("recon_d2_u6"))
+        max(when(col("sub") === 0, col("cid"))).as("code0"),
+        max(when(col("sub") === 1, col("cid"))).as("code1"),
+        max(when(col("sub") === 2, col("cid"))).as("code2"),
+        max(when(col("sub") === 3, col("cid"))).as("code3"),
+        sum(latU6(col("d2"))).as("recon_d2_u6"))
       .orderBy(col("vec_id"))
   }
 
-  /** PQ asymmetric-distance (ADC) top-k: each query (vec_id < 20)
-    * computes an EXACT distance-lookup table to all M×k codebook
-    * entries (1280 rows total — always broadcast), lands it on the
-    * micro-unit lattice, and every database vector's approximate
-    * distance is the exact-integer sum of 4 table lookups keyed by its
-    * stored codes — the compressed-domain scan never touches a raw
-    * vector. This is exhaustive-ADC search (Jégou et al. §IV.A);
-    * composing the scan with q_ann_ivf's cell filter gives IVF-PQ, and
-    * the candidate side here moves only (vec_id, 4 small ints).
-    * Measured recall@3/@10/@50 of the true-L2 NN vs brute force at
-    * sf0.001: 0.30/0.45/0.75 (PqSpec) — 16 bits/vector is a 128:1
-    * compression; production raises k to 256 and reranks the ADC
-    * top-R with exact distances (the q_embed_topk tier). */
+  /** PQ asymmetric-distance (ADC) top-k: every database vector's
+    * approximate distance is the exact-integer sum of 4 [[pqLut]]
+    * lookups keyed by its stored codes — the compressed-domain scan
+    * never touches a raw vector. This is exhaustive-ADC search (Jégou et
+    * al. §IV.A); composing the scan with q_ann_ivf's cell filter gives
+    * IVF-PQ, and the candidate side here moves only (vec_id, 4 small
+    * ints). Measured recall@3/@10/@50 of the true-L2 NN vs brute force
+    * at sf0.001: 0.30/0.45/0.75 (PqSpec) — 16 bits/vector is a 128:1
+    * compression; production raises k to 256 and reranks the ADC top-R
+    * with exact distances (the q_embed_topk tier). */
   def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
-    val (es, c1, fin) = pqParts(spark, dir)
-    val lut = es.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("sub"), col("svec").as("qs"))
-      .join(broadcast(c1), Seq("sub"))
-      .select(col("a_id"), col("sub"), col("cid").as("code"),
-        latU6(d2Col(col("qs"), col("cvec"))).as("ld2"))
-    val codes = fin.select(col("vec_id").as("b_id"), col("sub"), col("code"))
-    val adc = codes.join(broadcast(lut), Seq("sub", "code"))
+    val es = subvectors(doubled(spark, dir))
+    val (c1, codes) = lloyd(es, Seq("sub"))
+    val adc = codes.select(col("vec_id").as("b_id"), col("sub"),
+        col("cid").as("code"))
+      .join(broadcast(pqLut(es, c1)), Seq("sub", "code"))
       .where(col("b_id") =!= col("a_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(sum(col("ld2")).as("adc_d2_u6"))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("adc_d2_u6"), col("b_id"))
-    adc.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3)
-      .select(col("a_id"), col("b_id"), col("adc_d2_u6"), col("rank"))
-      .orderBy(col("a_id"), col("rank"))
+    top3(adc, col("adc_d2_u6"))
   }
 
   /** IVF-PQ — the production ANN composition (Jégou et al. §V, the
@@ -283,44 +243,21 @@ object EmbedQueries {
     * scale this is the whole point of the pairing — the scan touches
     * ~nprobe/k of the codes table (cell-bucketed equi-join) and reads 4
     * small ints per candidate instead of 64 floats. Both codebooks come
-    * from the shared quantized-Lloyd recipe, so the full composition
+    * from [[lloyd]] over one [[doubled]] table, so the full composition
     * stays hash-exact under the DuckDB replay (ivf chain + pq_ chain in
     * one statement). */
   def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val (edIvf, c1Ivf, finIvf) = ivfParts(spark, dir)
-    val (es, c1Pq, finPq) = pqParts(spark, dir)
-    val q = edIvf.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("xd").as("qx"))
-    val pw = Window.partitionBy(col("a_id"))
-      .orderBy(col("d2"), col("cid"))
-    val probes = q.join(broadcast(c1Ivf), lit(true))
-      .select(col("a_id"), col("cid"),
-        d2Col(col("qx"), col("cvec")).as("d2"))
-      .withColumn("prk", row_number().over(pw))
-      .where(col("prk") <= 2)
-      .select(col("a_id"), col("cid"))
-    val cand = probes
-      .join(finIvf.select(col("vec_id").as("b_id"), col("cell")),
-        col("cell") === col("cid"))
-      .where(col("b_id") =!= col("a_id"))
-      .select(col("a_id"), col("b_id"))
-    val lut = es.where(col("vec_id") < 20)
-      .select(col("vec_id").as("a_id"), col("sub"), col("svec").as("qs"))
-      .join(broadcast(c1Pq), Seq("sub"))
-      .select(col("a_id"), col("sub"), col("cid").as("code"),
-        latU6(d2Col(col("qs"), col("cvec"))).as("ld2"))
-    val codes = finPq.select(col("vec_id").as("b_id"), col("sub"),
-      col("code"))
-    val adc = cand.join(codes, Seq("b_id"))
-      .join(broadcast(lut), Seq("a_id", "sub", "code"))
+    val ed = doubled(spark, dir)
+    val (c1Ivf, cells) = lloyd(ed, Nil)
+    val es = subvectors(ed)
+    val (c1Pq, codes) = lloyd(es, Seq("sub"))
+    val adc = ivfCandidates(ed, c1Ivf, cells)
+      .join(codes.select(col("vec_id").as("b_id"), col("sub"),
+        col("cid").as("code")), Seq("b_id"))
+      .join(broadcast(pqLut(es, c1Pq)), Seq("a_id", "sub", "code"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(sum(col("ld2")).as("adc_d2_u6"))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("adc_d2_u6"), col("b_id"))
-    adc.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 3)
-      .select(col("a_id"), col("b_id"), col("adc_d2_u6"), col("rank"))
-      .orderBy(col("a_id"), col("rank"))
+    top3(adc, col("adc_d2_u6"))
   }
 
   val all: Map[String, CoreQueries.Q] = Map(
@@ -333,23 +270,24 @@ object EmbedQueries {
     "q_ann_ivfpq" -> (qAnnIvfPq _)
   )
 
+  /** Σ (x_i − c_i)² as the same left-to-right fold as the native
+    * l2DistSq, so the argmin (tie → cid) is bit-exact. */
+  private def l2Sql(x: String, c: String): String =
+    SqlGen.lsum(s"list_transform(list_zip($x, $c), " +
+      "p -> (p[1] - p[2]) * (p[1] - p[2]))")
+
   /** Shared WITH-chain replaying the IVF build: double-cast vectors,
     * exact-argmin assignment to the vec_id<16 init centroids, quantized
-    * centroid update, final assignment `a2(vec_id, cell, d2)`. Distances
-    * are the same left-to-right fold as the Spark HOF, so the argmin
-    * (tie → cid) is bit-exact; only the averaged centroids need the
-    * shared quantization. */
+    * centroid update, final assignment `a2(vec_id, cell, d2)`. Only the
+    * averaged centroids need the shared quantization. */
   private val ivfChain: String =
-    """WITH ed AS (
+    s"""WITH ed AS (
       |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS xd
       |  FROM embeddings),
       |c0 AS (SELECT vec_id AS cid, xd AS cvec FROM ed WHERE vec_id < 16),
       |s1 AS (
       |  SELECT e.vec_id, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.xd, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("e.xd", "c.cvec")} AS d2
       |  FROM ed e CROSS JOIN c0 c),
       |a1 AS (
       |  SELECT vec_id, cid AS cell FROM (
@@ -365,10 +303,7 @@ object EmbedQueries {
       |  FROM m1 GROUP BY 1),
       |s2 AS (
       |  SELECT e.vec_id, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.xd, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("e.xd", "c.cvec")} AS d2
       |  FROM ed e CROSS JOIN c1 c),
       |a2 AS (
       |  SELECT vec_id, cid AS cell, d2 FROM (
@@ -376,18 +311,13 @@ object EmbedQueries {
       |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
       |    FROM s2) WHERE rk = 1)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_ivf_cells" -> (ivfChain + """
-      |SELECT vec_id, cell, round(d2 + 1e-9, 6) AS d2
-      |FROM a2 ORDER BY vec_id""".stripMargin),
-    "q_ann_ivf" -> (ivfChain + """,
-      |qv AS (SELECT vec_id AS a_id, xd FROM ed WHERE vec_id < 20),
+  /** The IVF probe after [[ivfChain]]: each query's nprobe = 2 nearest
+    * cells, ending in `cand(a_id, b_id)`. */
+  private val ivfCand: String =
+    s"""qv AS (SELECT vec_id AS a_id, xd FROM ed WHERE vec_id < 20),
       |ps AS (
       |  SELECT q.a_id, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(q.xd, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("q.xd", "c.cvec")} AS d2
       |  FROM qv q CROSS JOIN c1 c),
       |probes AS (
       |  SELECT a_id, cid FROM (
@@ -397,7 +327,22 @@ object EmbedQueries {
       |cand AS (
       |  SELECT p.a_id, f.vec_id AS b_id
       |  FROM probes p JOIN a2 f ON f.cell = p.cid
-      |  WHERE f.vec_id <> p.a_id),
+      |  WHERE f.vec_id <> p.a_id)""".stripMargin
+
+  /** The ADC lookup table `lut(a_id, sub, code, ld2)` over the PQ chain
+    * whose CTE names carry prefix `p`. */
+  private def pqLutCte(p: String): String =
+    s"""lut AS (
+      |  SELECT e.vec_id AS a_id, e.sub, c.cid AS code,
+      |    round(${l2Sql("e.svec", "c.cvec")} * 1000000 + 0.001, 0)::BIGINT AS ld2
+      |  FROM ${p}es e JOIN ${p}c1 c ON c.sub = e.sub
+      |  WHERE e.vec_id < 20)""".stripMargin
+
+  val oracle: Map[String, String] = Map(
+    "q_ivf_cells" -> (ivfChain + """
+      |SELECT vec_id, cell, round(d2 + 1e-9, 6) AS d2
+      |FROM a2 ORDER BY vec_id""".stripMargin),
+    "q_ann_ivf" -> (ivfChain + ",\n" + ivfCand + """,
       |sc AS (
       |  SELECT c.a_id, c.b_id,
       |    round(
@@ -453,15 +398,7 @@ object EmbedQueries {
       |  max(CASE WHEN sub = 3 THEN code END) AS code3,
       |  sum(round(d2 * 1000000 + 0.001, 0)::BIGINT)::BIGINT AS recon_d2_u6
       |FROM a2 GROUP BY vec_id ORDER BY vec_id""".stripMargin),
-    "q_ann_pq" -> (pqChain + """,
-      |lut AS (
-      |  SELECT e.vec_id AS a_id, e.sub, c.cid AS code,
-      |    round(list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.svec, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) * 1000000 + 0.001, 0)::BIGINT AS ld2
-      |  FROM es e JOIN c1 c ON c.sub = e.sub
-      |  WHERE e.vec_id < 20),
+    "q_ann_pq" -> (pqChain + ",\n" + pqLutCte("") + """,
       |adc AS (
       |  SELECT l.a_id, f.vec_id AS b_id,
       |    sum(l.ld2)::BIGINT AS adc_d2_u6
@@ -475,32 +412,8 @@ object EmbedQueries {
       |  FROM adc)
       |SELECT a_id, b_id, adc_d2_u6, rank FROM rkd WHERE rank <= 3
       |ORDER BY a_id, rank""".stripMargin),
-    "q_ann_ivfpq" -> (ivfChain + ",\n" + pqCtes("pq_") + """,
-      |qv AS (SELECT vec_id AS a_id, xd FROM ed WHERE vec_id < 20),
-      |ps AS (
-      |  SELECT q.a_id, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(q.xd, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
-      |  FROM qv q CROSS JOIN c1 c),
-      |probes AS (
-      |  SELECT a_id, cid FROM (
-      |    SELECT a_id, cid,
-      |      row_number() OVER (PARTITION BY a_id ORDER BY d2, cid) AS prk
-      |    FROM ps) WHERE prk <= 2),
-      |cand AS (
-      |  SELECT p.a_id, f.vec_id AS b_id
-      |  FROM probes p JOIN a2 f ON f.cell = p.cid
-      |  WHERE f.vec_id <> p.a_id),
-      |lut AS (
-      |  SELECT e.vec_id AS a_id, e.sub, c.cid AS code,
-      |    round(list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.svec, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) * 1000000 + 0.001, 0)::BIGINT AS ld2
-      |  FROM pq_es e JOIN pq_c1 c ON c.sub = e.sub
-      |  WHERE e.vec_id < 20),
+    "q_ann_ivfpq" -> (ivfChain + ",\n" + pqCtes("pq_") + ",\n" + ivfCand +
+      ",\n" + pqLutCte("pq_") + """,
       |adc AS (
       |  SELECT cd.a_id, cd.b_id, sum(l.ld2)::BIGINT AS adc_d2_u6
       |  FROM cand cd
@@ -532,10 +445,7 @@ object EmbedQueries {
       |  FROM ${p}es WHERE vec_id < 16),
       |${p}s1 AS (
       |  SELECT e.vec_id, e.sub, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.svec, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("e.svec", "c.cvec")} AS d2
       |  FROM ${p}es e JOIN ${p}c0 c ON c.sub = e.sub),
       |${p}a1 AS (
       |  SELECT vec_id, sub, cid AS code FROM (
@@ -554,10 +464,7 @@ object EmbedQueries {
       |  FROM ${p}m1 GROUP BY 1, 2),
       |${p}s2 AS (
       |  SELECT e.vec_id, e.sub, c.cid,
-      |    list_reduce(list_prepend(0.0::DOUBLE,
-      |      list_transform(list_zip(e.svec, c.cvec),
-      |        p -> (p[1] - p[2]) * (p[1] - p[2]))),
-      |      (a, b) -> a + b) AS d2
+      |    ${l2Sql("e.svec", "c.cvec")} AS d2
       |  FROM ${p}es e JOIN ${p}c1 c ON c.sub = e.sub),
       |${p}a2 AS (
       |  SELECT vec_id, sub, cid AS code, d2 FROM (

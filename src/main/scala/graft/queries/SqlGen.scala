@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.signal.Butterworth
 
-/** Single-statement DuckDB SQL generators shared by the sequential-scan
-  * oracle builders (SignalQueries): a splitmix64 replay in HUGEINT
+/** Single-statement DuckDB SQL generators shared by the oracle builders
+  * (SignalQueries, the dedup, curation and embedding oracles): the
+  * signed/unsigned 64-bit hash duals, a splitmix64 replay in HUGEINT
   * arithmetic with explicit mod-2^64 wrapping multiplies (the finalizer
   * is public knowledge — Steele et al. 2014, same constants as
   * [[graft.core.TokenGen.mix]]), the TokenGen token series re-derived
@@ -15,23 +16,35 @@ import graft.signal.Butterworth
   */
 object SqlGen {
 
-  private val M64 = BigInt("18446744073709551616") // 2^64
+  val U63: BigInt = BigInt(1) << 63
+  val U64: BigInt = BigInt(1) << 64
   private val M32 = BigInt("4294967296") // 2^32
   private val C1 = BigInt("9E3779B97F4A7C15", 16)
   private val C2 = BigInt("BF58476D1CE4E5B9", 16)
   private val C3 = BigInt("94D049BB133111EB", 16)
 
+  /** HUGEINT [0, 2^64) → signed BIGINT with Java two's-complement
+    * semantics (how every Spark-side long is compared/min'd). */
+  def signed(x: String): String =
+    s"(CASE WHEN $x >= $U63 THEN $x - $U64 ELSE $x END)::BIGINT"
+
+  /** `('0x' || first-16-hex-of-md5)::UBIGINT` — the
+    * [[graft.functions.Hash64.md5_64]] dual, kept in unsigned HUGEINT
+    * domain for the mix replay. */
+  def md5u64(e: String): String =
+    s"(('0x' || substr(md5($e), 1, 16))::UBIGINT)::HUGEINT"
+
   /** (e * c) mod 2^64 for HUGEINT e in [0, 2^64) and constant c: split c
     * into 32-bit halves so no partial product overflows HUGEINT. */
   private def umul(e: String, c: BigInt): String =
-    s"($e * ${c % M32} + (($e * ${c / M32}) % $M32) * $M32) % $M64"
+    s"($e * ${c % M32} + (($e * ${c / M32}) % $M32) * $M32) % $U64"
 
   /** SELECT items computing splitmix64 mix($e) via lateral column
     * aliases (one per finalizer step); the result lands in alias
     * `${p}r`. `e` must be HUGEINT in [0, 2^64); logical right-shifts are
     * floor division, xor is native on HUGEINT. */
   def mixCols(e: String, p: String): String =
-    s"""(($e) + $C1) % $M64 AS ${p}a,
+    s"""(($e) + $C1) % $U64 AS ${p}a,
        |    xor(${p}a, ${p}a // ${BigInt(1) << 30}) AS ${p}b,
        |    ${umul(s"${p}b", C2)} AS ${p}c,
        |    xor(${p}c, ${p}c // ${BigInt(1) << 27}) AS ${p}d,

@@ -24,6 +24,12 @@ class HarnessSpec extends SparkSpec {
     assert(r.isLeft, r)
   }
 
+  test("a bench ladder needs at least two core counts") {
+    assert(Bench.parseLadder("1, 4") == Seq(1, 4))
+    val e = intercept[IllegalArgumentException](Bench.parseLadder("4"))
+    assert(e.getMessage.contains("at least 2"))
+  }
+
   test("an unregistered cache fails the run on assertEmpty") {
     clean()
     try {

@@ -2,9 +2,10 @@ package graft
 
 import graft.queries.EmbedQueries
 
-/** Product-quantization ANN tier (q_pq_codes / q_ann_pq): brute-force
+/** Quantizer ANN tier (q_ivf_cells, q_pq_codes, q_ann_pq): brute-force
   * replay of the codebook training and the ADC arithmetic in plain
-  * Scala, plus a measured recall floor vs the exact-L2 truth.
+  * Scala, plus a measured recall floor vs the exact-L2 truth. IVF is the
+  * same training with one 64-dim subspace.
   */
 class PqSpec extends SparkSpec {
 
@@ -25,48 +26,73 @@ class PqSpec extends SparkSpec {
     BigDecimal(x * 1000000.0 + 1.0e-3)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** (vec_id → per-sub subvectors), sorted by vec_id. */
-  private lazy val vecs: IndexedSeq[(Long, IndexedSeq[IndexedSeq[Double]])] = {
+  /** (vec_id → vector as doubles), sorted by vec_id. */
+  private lazy val raw: IndexedSeq[(Long, IndexedSeq[Double])] =
     graft.core.Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").collect()
-      .map { r =>
-        val xs = r.getSeq[Float](1).map(_.toDouble).toIndexedSeq
-        r.getLong(0) -> (0 until M).map(s => xs.slice(s * D, s * D + D))
-      }.sortBy(_._1).toIndexedSeq
-  }
+      .map(r => r.getLong(0) ->
+        r.getSeq[Float](1).map(_.toDouble).toIndexedSeq)
+      .sortBy(_._1).toIndexedSeq
 
-  /** Brute-force PQ training: init = vec_id 0..15 subvectors, one
-    * quantized centroid update, final assignment. Returns per sub the
-    * codebook (cid → centroid) and each vec's final (code, d2). */
-  private lazy val trained
+  /** (vec_id → its m subvectors of d dims). */
+  private def split(m: Int, d: Int)
+  : IndexedSeq[(Long, IndexedSeq[IndexedSeq[Double]])] =
+    raw.map { case (id, xs) =>
+      id -> (0 until m).map(s => xs.slice(s * d, s * d + d))
+    }
+
+  private lazy val vecs = split(M, D)
+
+  /** Brute-force training over m subspaces of d dims: init = vec_id
+    * 0..15 subvectors, one quantized centroid update, final assignment.
+    * Returns per sub the codebook (cid → centroid) and each vec's final
+    * (code, d2). */
+  private def trained(m: Int, d: Int)
   : (IndexedSeq[Map[Long, IndexedSeq[Double]]],
      Map[Long, IndexedSeq[(Long, Double)]]) = {
+    val vecs = split(m, d)
     val init: IndexedSeq[Map[Long, IndexedSeq[Double]]] =
-      (0 until M).map(s => vecs.filter(_._1 < 16)
+      (0 until m).map(s => vecs.filter(_._1 < 16)
         .map { case (id, sv) => id -> sv(s) }.toMap)
     def assign(books: IndexedSeq[Map[Long, IndexedSeq[Double]]])
     : Map[Long, IndexedSeq[(Long, Double)]] =
       vecs.map { case (id, sv) =>
-        id -> (0 until M).map { s =>
+        id -> (0 until m).map { s =>
           books(s).toSeq.map { case (cid, cv) => (cid, d2(sv(s), cv)) }
             .minBy { case (cid, dd) => (dd, cid) }
         }.toIndexedSeq
       }.toMap
     val a1 = assign(init)
     val upd: IndexedSeq[Map[Long, IndexedSeq[Double]]] =
-      (0 until M).map { s =>
+      (0 until m).map { s =>
         vecs.groupBy { case (id, _) => a1(id)(s)._1 }
           .map { case (cell, members) =>
             val svs = members.map(_._2(s))
-            cell -> (0 until D).map(d =>
-              q6(svs.map(_(d)).sum / svs.length + 1e-9)).toIndexedSeq
+            cell -> (0 until d).map(i =>
+              q6(svs.map(_(i)).sum / svs.length + 1e-9)).toIndexedSeq
           }
       }
     (upd, assign(upd))
   }
 
+  private lazy val pq = trained(M, D)
+
+  test("ivf cells and distances replay the brute-force training " +
+    "with one 64-dim subspace") {
+    val (_, fin) = trained(1, 64)
+    val rows = EmbedQueries.qIvfCells(spark, sf).collect()
+    assert(rows.length == raw.length)
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      val (cell, dd) = fin(id)(0)
+      assert(r.getLong(1) == cell, s"vec $id cell")
+      assert(r.getDouble(2) == q6(dd + 1e-9), s"vec $id d2")
+    }
+    assert(rows.map(_.getLong(1)).distinct.length > 1)
+  }
+
   test("pq codes and reconstruction error replay the brute-force training") {
-    val (_, fin) = trained
+    val (_, fin) = pq
     val rows = EmbedQueries.qPqCodes(spark, sf).collect()
     assert(rows.length == vecs.length)
     rows.foreach { r =>
@@ -83,7 +109,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("ADC distances are the exact integer sum of 4 lattice lookups") {
-    val (books, fin) = trained
+    val (books, fin) = pq
     val rows = EmbedQueries.qAnnPq(spark, sf).collect()
     val queries = vecs.filter(_._1 < 20).toMap
     rows.foreach { r =>
@@ -101,7 +127,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("IVF-PQ distances agree with the standalone ADC arithmetic") {
-    val (books, fin) = trained
+    val (books, fin) = pq
     val queries = vecs.filter(_._1 < 20).toMap
     val rows = EmbedQueries.qAnnIvfPq(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -127,7 +153,7 @@ class PqSpec extends SparkSpec {
     // nearest neighbor appears in the ADC top-R. The 4×16 codebook is
     // 16 bits/vector — a 128:1 compression of 64 float dims — so
     // top-R containment, not top-3 parity, is the meaningful metric.
-    val (books, fin) = trained
+    val (books, fin) = pq
     val full = vecs.map { case (id, sv) => id -> sv.flatten }.toMap
     val qs = vecs.filter(_._1 < 20).map(_._1)
     def adcRank(a: Long): IndexedSeq[Long] =
