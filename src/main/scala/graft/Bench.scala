@@ -123,9 +123,8 @@ object Bench {
         Leg(times(times.length / 2), runs.map(_._2),
           100.0 * (st1 - st0) / math.max(1L, tt1 - tt0))
       } finally {
-        // drain inside THIS session before it stops (reps deliberately
-        // share the warmed stage-1 cache — same methodology as r3 — but
-        // stale registry entries must never reach a later session's drain)
+        // drain inside THIS session before it stops: stale registry
+        // entries must never reach a later session's drain
         graft.core.Caches.drain()
         s.stop()
       }

@@ -14,20 +14,36 @@ import org.apache.spark.sql.functions._
   * takes a long-format frame `(entityCol, tsCol, valueCol)` — the
   * engine's SeqPoint contract (SURVEY §1.4) — where the reference took
   * one in-memory array, i.e. "per subject" becomes "per entity, in
-  * parallel". Semantics delegate to the same kernels / Column bundles
-  * the hash-checked driver queries run; this layer only adapts shapes.
-  * See README "Migrating from pymhealth" for the function-by-function
-  * map. */
+  * parallel". Semantics delegate to the kernels / Column bundles; this
+  * layer only adapts shapes. The hash-checked gate queries run these
+  * entries: `Filters.butterworth`, `QrsApi.filterPanTompkins`,
+  * `.filterHamiltonTompkins`, `.rpeaksHamiltonTompkins`,
+  * `PpgApi.pulseOnsetPhysionet`, `QualityApi.beatCorrelation` (both
+  * directions), `AccelApi.linearFilter`, `.gravityFilter` and
+  * `FractalApi.hurst`'s `Fractal.hurst`. See README "Migrating from
+  * pymhealth" for the function-by-function map. */
 object MHealth {
 
   private def w(e: String, t: String) =
     Window.partitionBy(col(e)).orderBy(col(t))
 
+  /** The same-length per-entity scan: `kernel(vs)` zipped back onto the
+    * entity's ts as (entityCol, tsCol, filtered). An entity of at most
+    * `pad` samples (shorter than the kernel's filtfilt padding) emits no
+    * rows — the reference raises. */
+  private def sameLength(df: DataFrame, entityCol: String, tsCol: String,
+                         valueCol: String, pad: Int, spark: SparkSession)
+                        (kernel: Array[Double] => Array[Double]): DataFrame =
+    PerEntity.transform(spark, df.select(col(entityCol), col(tsCol),
+      col(valueCol)), entityCol, tsCol, valueCol) { (ts, vs) =>
+      if (vs.length <= pad) Iterator.empty
+      else kernel(vs).iterator.zip(ts.iterator).map { case (v, t) => (t, v) }
+    }.withColumnRenamed("out", "filtered")
+
   /** `mhealth.generic.filters.butterworth` (filters.py:8-35): zero-phase
     * two-pass filter per entity. `cutoff` in Hz against sampling
     * frequency `freq`; one cutoff = lowpass/highpass per `ftype`, two =
-    * bandpass — same surface as the reference. Entities shorter than
-    * the filtfilt padding are dropped (the reference raises). */
+    * bandpass — same surface as the reference. */
   object Filters {
     def butterworth(df: DataFrame, entityCol: String, tsCol: String,
                     valueCol: String, freq: Double, cutoff: Seq[Double],
@@ -35,12 +51,8 @@ object MHealth {
                     spark: SparkSession = SparkSession.active)
     : DataFrame = {
       val c = Butterworth.design(order, cutoff.map(_ / (freq / 2)), ftype)
-      PerEntity.transform(spark, df.select(col(entityCol), col(tsCol),
-        col(valueCol)), entityCol, tsCol, valueCol) { (ts, vs) =>
-        if (vs.length <= 3 * (c.a.length max c.b.length)) Iterator.empty
-        else Butterworth.filtfilt(c, vs).iterator.zip(ts.iterator)
-          .map { case (v, t) => (t, v) }
-      }.withColumnRenamed("out", "filtered")
+      sameLength(df, entityCol, tsCol, valueCol,
+        3 * (c.a.length max c.b.length), spark)(Butterworth.filtfilt(c, _))
     }
   }
 
@@ -91,23 +103,15 @@ object MHealth {
                           valueCol: String, fs: Double,
                           spark: SparkSession = SparkSession.active)
     : DataFrame =
-      PerEntity.transform(spark, df.select(col(entityCol), col(tsCol),
-        col(valueCol)), entityCol, tsCol, valueCol) { (ts, vs) =>
-        if (vs.length <= 33) Iterator.empty
-        else Qrs.filterPanTompkins(vs, fs).iterator.zip(ts.iterator)
-          .map { case (v, t) => (t, v) }
-      }.withColumnRenamed("out", "filtered")
+      sameLength(df, entityCol, tsCol, valueCol, 33, spark)(
+        Qrs.filterPanTompkins(_, fs))
 
     def filterHamiltonTompkins(df: DataFrame, entityCol: String,
                                tsCol: String, valueCol: String, fs: Double,
                                spark: SparkSession = SparkSession.active)
     : DataFrame =
-      PerEntity.transform(spark, df.select(col(entityCol), col(tsCol),
-        col(valueCol)), entityCol, tsCol, valueCol) { (ts, vs) =>
-        if (vs.length <= 33) Iterator.empty
-        else Qrs.filterHamiltonTompkins(vs, fs).iterator.zip(ts.iterator)
-          .map { case (v, t) => (t, v) }
-      }.withColumnRenamed("out", "filtered")
+      sameLength(df, entityCol, tsCol, valueCol, 33, spark)(
+        Qrs.filterHamiltonTompkins(_, fs))
 
     /** find_peaks (qrs.py:200-212) as a Column predicate. */
     def isPeak(df: DataFrame, entityCol: String, tsCol: String,
@@ -176,7 +180,9 @@ object MHealth {
   /** `mhealth.heart.quality` (quality.py:22-101). */
   object QualityApi {
     /** beat_correlation over a per-entity signal + its peak positions
-      * (0-based indices into the ts-sorted series). */
+      * (0-based indices into the ts-sorted series). An entity the kernel
+      * cannot take emits no rows: fewer than 24 peaks (the
+      * unidirectional ring-buffer fill), or none (bidirectional). */
     def beatCorrelation(df: DataFrame, entityCol: String, tsCol: String,
                         valueCol: String, peaksOf: Array[Double] => Array[Int],
                         sr: Int, bidirectional: Boolean = false,
@@ -185,9 +191,12 @@ object MHealth {
       PerEntity.transform(spark, df.select(col(entityCol), col(tsCol),
         col(valueCol)), entityCol, tsCol, valueCol) { (_, vs) =>
         val peaks = peaksOf(vs)
-        val q = if (bidirectional) Quality.beatCorrelationBi(vs, peaks, sr)
-          else Quality.beatCorrelation(vs, peaks, sr)
-        q.iterator.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        if (peaks.length < (if (bidirectional) 1 else 24)) Iterator.empty
+        else {
+          val q = if (bidirectional) Quality.beatCorrelationBi(vs, peaks, sr)
+            else Quality.beatCorrelation(vs, peaks, sr)
+          q.iterator.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        }
       }.withColumnsRenamed(Map("out" -> "quality", tsCol -> "peak_idx"))
   }
 
@@ -323,15 +332,12 @@ object MHealth {
           .as("s"))
         .select(concat(col("s.axis"), lit(":"), col(entityCol))
           .as("__ea"), col(tsCol), col("s.v"))
-      val c = Butterworth.design(order, Seq(cutoff / (freq / 2)), ftype)
-      PerEntity.transform(spark, stacked, "__ea", tsCol, "v") { (ts, vs) =>
-        if (vs.length <= 3 * (c.a.length max c.b.length)) Iterator.empty
-        else Butterworth.filtfilt(c, vs).iterator.zip(ts.iterator)
-          .map { case (v, t) => (t, v) }
-      }.select(
-        expr("substring(__ea, instr(__ea, ':') + 1)").as(entityCol),
-        substring_index(col("__ea"), ":", 1).as("axis"),
-        col(tsCol), col("out").as("filtered"))
+      Filters.butterworth(stacked, "__ea", tsCol, "v", freq, Seq(cutoff),
+        ftype, order, spark)
+        .select(
+          expr("substring(__ea, instr(__ea, ':') + 1)").as(entityCol),
+          substring_index(col("__ea"), ":", 1).as("axis"),
+          col(tsCol), col("filtered"))
     }
   }
 

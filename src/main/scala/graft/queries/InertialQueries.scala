@@ -1,8 +1,9 @@
 package graft.queries
 
+import graft.api.MHealth
 import graft.core.Tables
 import graft.functions.{Accel, Stats}
-import graft.signal.{Butterworth, PerEntity}
+import graft.signal.Butterworth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,11 +84,9 @@ object InertialQueries {
       .orderBy(col("user_id"))
   }
 
-  /** The tri-axial series in stacked long format — (user:axis) is the
-    * scan entity, so ONE per-entity pass filters all three axes (the
-    * reference's per-column loop, accelerometer.py:116-124, re-expressed
-    * as more parallelism instead of a wider kernel). */
-  private def axisSeries(spark: SparkSession, dir: String): DataFrame = {
+  /** The tri-axial series per user at row-number positions: (uid, rn,
+    * x, y, z), the deterministic axis values of [[qAccel]]. */
+  private def axes(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
@@ -96,44 +95,31 @@ object InertialQueries {
         ((col("event_id") * 31 % 2001) / 1000.0 - 1.0).as("x"),
         ((col("event_id") * 57 % 2001) / 1000.0 - 1.0).as("y"),
         ((col("event_id") * 89 % 2001) / 1000.0 - 1.0).as("z"))
-      .select(col("uid"), col("rn"), explode(array(
-        struct(lit("x").as("axis"), col("x").as("v")),
-        struct(lit("y").as("axis"), col("y").as("v")),
-        struct(lit("z").as("axis"), col("z").as("v")))).as("a"))
-      .select(concat(col("uid"), lit(":"), col("a.axis")).as("entity_id"),
-        col("rn").as("t"), col("a.v").as("value"))
   }
 
-  private def axisFiltfilt(spark: SparkSession, dir: String,
-                           c: Butterworth.Coeffs,
-                           outCol: String): DataFrame = {
-    PerEntity.transform(spark, axisSeries(spark, dir),
-      "entity_id", "t", "value") { (ts, vs) =>
-      if (vs.length <= 3 * (c.a.length max c.b.length)) Iterator.empty
-      else Butterworth.filtfilt(c, vs).iterator.zip(ts.iterator)
-        .map { case (v, t) => (t, v) }
-    }.select(
-      split(col("entity_id"), ":").getItem(0).as("entity_id"),
-      split(col("entity_id"), ":").getItem(1).as("axis"),
+  /** The per-(user, axis) filter output in the oracle's shape. */
+  private def axisOut(filtered: DataFrame, outCol: String): DataFrame =
+    filtered.select(col("uid").as("entity_id"), col("axis"),
       // + 0.0 after round: filtered values cross zero, and a y in
       // (−5e-7, 0) rounds to "−0.0" in DuckDB but "0.0" in Spark
-      col("t"), (round(col("out"), 6) + 0.0).as(outCol))
+      col("rn").as("t"), (round(col("filtered"), 6) + 0.0).as(outCol))
       .orderBy(col("entity_id"), col("axis"), col("t"))
-  }
 
   /** linear_filter (accelerometer.py:77-124): per-axis HIGHPASS
     * filtfilt, default cutoff 0.5 Hz, order 5, at fs = 128 — the
-    * non-gravitational component. Hash-checked against the recursive-CTE
-    * filtfilt replay over the same stacked series (bit-exact). */
+    * non-gravitational component — through
+    * [[graft.api.MHealth.AccelApi.linearFilter]]. Hash-checked against
+    * the recursive-CTE filtfilt replay over the same stacked series
+    * (bit-exact). */
   def qLinearFilter(spark: SparkSession, dir: String): DataFrame =
-    axisFiltfilt(spark, dir,
-      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Highpass), "linear")
+    axisOut(MHealth.AccelApi.linearFilter(axes(spark, dir), "uid", "rn",
+      Seq("x", "y", "z"), freq = 128, spark = spark), "linear")
 
   /** gravity_filter (accelerometer.py:142-185): per-axis LOWPASS
     * filtfilt, cutoff 0.5 Hz, order 5 — the gravitational component. */
   def qGravityFilter(spark: SparkSession, dir: String): DataFrame =
-    axisFiltfilt(spark, dir,
-      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Lowpass), "gravity")
+    axisOut(MHealth.AccelApi.gravityFilter(axes(spark, dir), "uid", "rn",
+      Seq("x", "y", "z"), freq = 128, spark = spark), "gravity")
 
   /** Rounds of min-label propagation for grid-DBSCAN — the mirrored
     * constant in the unrolled DuckDB oracle. Both engines compute the
@@ -189,7 +175,7 @@ object InertialQueries {
 
   /** The stacked tri-axial series as the filtfilt chain's sig contract:
     * (user:axis) entities, 0-based position i, deterministic axis values
-    * — identical expressions to [[axisSeries]]. */
+    * — identical expressions to [[axes]]. */
   private def axisSig: String =
     """sig AS (
       |  SELECT e.user_id::VARCHAR || ':' || ax.axis AS user_id,

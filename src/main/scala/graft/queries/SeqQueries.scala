@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.Geo
+import graft.operators.Fractal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,60 +78,22 @@ object SeqQueries {
       .orderBy(col("user_id"))
   }
 
-  /** Hurst exponent (timedom.py:238-259): tau(l) = sqrt(std_pop(x[l:] −
-    * x[:−l])) for the reference's DEFAULT lags arange(2,64) = 2..63
-    * (timedom.py:249), H = 2 · OLS-slope of ln tau vs ln lag.
-    *
-    * Shape: one bounded 63-row window frame per row + one per-row
-    * transform over the defined lags — a single entity shuffle; the
-    * posexploded diffs partially aggregate map-side before the tiny
-    * (user, l) shuffle. See the inline shape bake-off below.
-    *
-    * Lags whose diff series has exactly zero variance (single diff, or
-    * all diffs equal — decidable exactly on the integer lattice:
-    * s2·nd == s1²) are dropped on BOTH engines; the reference would
-    * produce ln(0) = −inf there (Spark's log returns NULL, DuckDB −inf
-    * — not hash-comparable). */
-  def qHurst(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    // ONE bounded window frame collecting the previous <= 63 values per
-    // row, then a single transform() building all defined lag-diffs
-    // d_l = b - p[size-l+1] (replays lag(b, l) exactly; l ranges only
-    // over lags the row actually has, so no nulls). Measured shapes at
-    // sf0.1: (user, rn-l) self-join 2.3 s and 62x the shuffle volume;
-    // 62 separate lag frames in WindowExec 3.1 s (frame overhead); a
-    // 62-wide struct-array projection 4.6 s (codegen fallback); this
-    // HOF + posexplode + map-side-combined agg 1.4 s with one shuffle
-    // of the base table — the only shape that survives 100x.
-    val pcol = collect_list(col("b")).over(w.rowsBetween(-63, -1))
-    val dArr = when(size(col("p")) >= 2,
-      transform(sequence(lit(2), least(lit(63), size(col("p")))), l =>
-        col("b") - element_at(col("p"), size(col("p")) - l + 1)))
-      .otherwise(array().cast("array<double>"))
-    val tau = Tables.events(spark, dir)
+  /** Hurst exponent (timedom.py:238-259) over the reference's DEFAULT
+    * lags arange(2,64) = 2..63 (timedom.py:249), through
+    * [[graft.operators.Fractal.hurst]] (plan and measured shapes in its
+    * scaladoc) on the b lattice, ties in ts broken by event_id. Lags
+    * whose diff series has exactly zero variance (single diff, or all
+    * diffs equal — decidable exactly on the integer lattice: s2·nd ==
+    * s1²) are dropped on BOTH engines; the reference would produce
+    * ln(0) = −inf there (Spark's log returns NULL, DuckDB −inf — not
+    * hash-comparable). */
+  def qHurst(spark: SparkSession, dir: String): DataFrame =
+    Fractal.hurst(Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
-        b100(col("value")).as("b"))
-      .select(col("user_id"), col("b"), pcol.as("p"))
-      .select(col("user_id"), posexplode(dArr).as(Seq("pos", "d")))
-      .groupBy(col("user_id"), (col("pos") + 2).as("l"))
-      .agg(count(lit(1)).as("nd"),
-        sum(col("d")).as("s1"), sum(col("d") * col("d")).as("s2"))
-      .where(col("s2") * col("nd") =!= col("s1") * col("s1"))
-      .select(col("user_id"),
-        log(col("l").cast("double")).as("lx"),
-        log(sqrt(sqrt(col("s2") / col("nd") -
-          (col("s1") / col("nd")) * (col("s1") / col("nd"))))).as("ly"))
-    val fit = tau.groupBy(col("user_id")).agg(
-      count(lit(1)).as("k"),
-      sum(col("lx")).as("sx"), sum(col("lx") * col("lx")).as("sxx"),
-      sum(col("ly")).as("sy"), sum(col("lx") * col("ly")).as("sxy"))
-    fit.select(col("user_id"),
-      round((col("k") * col("sxy") - col("sx") * col("sy")) /
-        (col("k") * col("sxx") - col("sx") * col("sx")) * 2.0, 6)
-        .as("hurst"))
+        b100(col("value")).as("b")),
+      "user_id", "ts", "b", tieCols = Seq("event_id"))
+      .select(col("user_id"), round(col("hurst"), 6).as("hurst"))
       .orderBy(col("user_id"))
-  }
 
   /** sdann + sdnni (hrv.py:65-108): tumbling 1-day segments anchored at
     * each user's first event; sdann = std_pop of segment means, sdnni =

@@ -1,41 +1,36 @@
 package graft.queries
 
+import graft.api.MHealth
 import graft.core.Tables
-import graft.signal.{Butterworth, Ppg, Qrs, Quality, SampEn, PerEntity, Spectral}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.signal.{Butterworth, SampEn, PerEntity, Spectral}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stateful signal-processing queries (SURVEY.md §2.6) over `events`,
-  * treating each user's value series as a 32 Hz signal. These operators
-  * are sequential per-entity scans (IIR filtering, adaptive-threshold
-  * decision rules, O(n²) entropy) — not SQL-expressible, so the driver
-  * records rows-only checks (no oracleSql entries); their numeric
-  * semantics are covered by SignalSpec's analytic/property fixtures.
+  * each user's value series treated as a sampled signal: sequential
+  * per-entity scans (IIR filtering, adaptive-threshold decision rules,
+  * O(n²) entropy). Filters, detectors and beat quality run through
+  * [[graft.api.MHealth]]; sampen and the two spectra keep their own
+  * [[PerEntity]] scans. All 12 are hash-checked against DuckDB oracles
+  * ([[oracle]]); SignalSpec covers the kernels' numerics.
   */
 object SignalQueries {
 
   private val Fs = 128.0
 
-  /** events as a per-user series on the exact b = round(value·100)
-    * lattice at row-number positions — the shared input of every
+  /** The exact b = round(value·100) lattice — the input of every
     * oracle-exact per-entity kernel (sampen, power_band, quality). */
-  private def bSeries(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .select(col("user_id").cast("string").as("entity_id"),
-        col("rn").as("t"), round(col("value") * 100).as("value"))
-  }
+  private val b100 = round(col("value") * 100)
 
-  /** events as a per-user series at row-number positions (fs-agnostic). */
-  private def series(spark: SparkSession, dir: String): DataFrame = {
+  /** events as a per-user `value` series at row-number positions `t`. */
+  private def series(spark: SparkSession, dir: String,
+                     value: Column = col("value")): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
       .withColumn("rn", row_number().over(w).cast("long"))
       .select(col("user_id").cast("string").as("entity_id"),
-        col("rn").as("t"), col("value"))
+        col("rn").as("t"), value.as("value"))
   }
 
   /** Longer deterministic series (up to 2048 samples @128 Hz) from the
@@ -48,71 +43,51 @@ object SignalQueries {
 
   /** Zero-phase Butterworth lowpass (0.2·Nyquist, order 4) per user —
     * the reference's `butterworth`/`linear_filter`/`gravity_filter`
-    * family (filters.py:8-35, accelerometer.py:77-195). */
-  def qFiltfilt(spark: SparkSession, dir: String): DataFrame = {
-    val c = Butterworth.design(4, Seq(0.2), Butterworth.Lowpass)
-    PerEntity.transform(spark, series(spark, dir),
-      "entity_id", "t", "value") { (ts, vs) =>
-      if (vs.length <= 3 * (c.a.length max c.b.length))
-        Iterator.empty // shorter than filtfilt padlen: no output
-      else Butterworth.filtfilt(c, vs).iterator.zip(ts.iterator)
-        .map { case (v, t) => (t, v) }
-    }.select(col("entity_id"), col("t"),
-      round(col("out"), 6).as("filtered"))
-      .orderBy(col("entity_id"), col("t"))
-  }
+    * family (filters.py:8-35, accelerometer.py:77-195). At freq = 2 the
+    * 0.2 Hz cutoff is exactly the normalised 0.2. */
+  def qFiltfilt(spark: SparkSession, dir: String): DataFrame =
+    byT(MHealth.Filters.butterworth(series(spark, dir), "entity_id", "t",
+      "value", freq = 2.0, cutoff = Seq(0.2), Butterworth.Lowpass,
+      order = 4, spark = spark), round(col("filtered"), 6).as("filtered"))
 
   /** Pan–Tompkins QRS pre-filter per user series (filter_pan_tompkins,
     * qrs.py:41-56): bandpass 5–15 Hz filtfilt → x/8 → square →
-    * MA(0.2·fs). Hash-checked against the recursive-CTE oracle. */
-  def qPtFilter(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, series(spark, dir),
-      "entity_id", "t", "value") { (ts, vs) =>
-      if (vs.length <= 33) Iterator.empty // filtfilt padlen for 11 taps
-      else Qrs.filterPanTompkins(vs, Fs).iterator.zip(ts.iterator)
-        .map { case (v, t) => (t, v) }
-    }.select(col("entity_id"), col("t"),
-      // Since round 3 the oracle's MA is an ORDERED list fold (replays
-      // the kernel loop bit-exactly), so 6 dp holds; +1e-9 on BOTH
-      // sides remains as boundary insurance.
-      round(col("out") + 1e-9, 6).as("pt_filtered"))
-      .orderBy(col("entity_id"), col("t"))
-  }
+    * MA(0.2·fs). Hash-checked against the recursive-CTE oracle. Since
+    * round 3 the oracle's MA is an ORDERED list fold (replays the kernel
+    * loop bit-exactly), so 6 dp holds; +1e-9 on BOTH sides remains as
+    * boundary insurance. */
+  def qPtFilter(spark: SparkSession, dir: String): DataFrame =
+    byT(MHealth.QrsApi.filterPanTompkins(series(spark, dir), "entity_id",
+      "t", "value", Fs, spark),
+      round(col("filtered") + 1e-9, 6).as("pt_filtered"))
 
   /** Hamilton–Tompkins QRS pre-filter (filter_hamilton_tompkins,
     * qrs.py:107-113): bandpass 3–25 Hz filtfilt → |x/8| → MA(0.08·fs). */
-  def qHtFilter(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, series(spark, dir),
-      "entity_id", "t", "value") { (ts, vs) =>
-      if (vs.length <= 33) Iterator.empty
-      else Qrs.filterHamiltonTompkins(vs, Fs).iterator.zip(ts.iterator)
-        .map { case (v, t) => (t, v) }
-    }.select(col("entity_id"), col("t"),
-      round(col("out") + 1e-9, 6).as("ht_filtered"))
+  def qHtFilter(spark: SparkSession, dir: String): DataFrame =
+    byT(MHealth.QrsApi.filterHamiltonTompkins(series(spark, dir),
+      "entity_id", "t", "value", Fs, spark),
+      round(col("filtered") + 1e-9, 6).as("ht_filtered"))
+
+  /** A same-length scan's output as (entity_id, t, out), in order. */
+  private def byT(filtered: DataFrame, out: Column): DataFrame =
+    filtered.select(col("entity_id"), col("t"), out)
       .orderBy(col("entity_id"), col("t"))
-  }
 
   /** Hamilton–Tompkins R-peak pipeline per doc series (qrs.py:59-197). */
-  def qRpeaks(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.selectIndices(spark, tokenSeries(spark),
-      "entity_id", "t", "value") { vs =>
-      if (vs.length <= 120) Array.empty
-      else Qrs.rpeaksHamiltonTompkins(vs, Fs)
-    }.select(col("entity_id"), col("t").as("peak_pos"),
-      round(col("out"), 6).as("value"))
-      .orderBy(col("entity_id"), col("peak_pos"))
-  }
+  def qRpeaks(spark: SparkSession, dir: String): DataFrame =
+    at(MHealth.QrsApi.rpeaksHamiltonTompkins(tokenSeries(spark),
+      "entity_id", "t", "value", Fs, spark), "peak_pos")
 
   /** Physionet PPG pulse-onset pipeline per doc series (ppg.py:11-93). */
-  def qPulseOnsets(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.selectIndices(spark, tokenSeries(spark),
-      "entity_id", "t", "value") { vs =>
-      if (vs.length <= Fs.toInt * 10) Array.empty
-      else Ppg.pulseOnsetPhysionet(vs, Fs.toInt)
-    }.select(col("entity_id"), col("t").as("onset_pos"),
-      round(col("out"), 6).as("value"))
-      .orderBy(col("entity_id"), col("onset_pos"))
-  }
+  def qPulseOnsets(spark: SparkSession, dir: String): DataFrame =
+    at(MHealth.PpgApi.pulseOnsetPhysionet(tokenSeries(spark), "entity_id",
+      "t", "value", Fs.toInt, spark), "onset_pos")
+
+  /** A detector's selected samples as (entity_id, pos, value), in order. */
+  private def at(picked: DataFrame, pos: String): DataFrame =
+    picked.select(col("entity_id"), col("t").as(pos),
+      round(col("value"), 6).as("value"))
+      .orderBy(col("entity_id"), col(pos))
 
   /** Sample entropy per user (information.py:23-113): one O(n²) scan
     * over each bounded series. Runs on the exact-integer b = value·100
@@ -121,7 +96,7 @@ object SignalQueries {
     * bit-identical in the DuckDB oracle (sampen is scale-invariant, so
     * the lattice does not change the statistic). */
   def qSampen(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, bSeries(spark, dir),
+    PerEntity.transform(spark, series(spark, dir, b100),
       "entity_id", "t", "value") { (_, vs) =>
       val n = vs.length
       var s1 = 0.0
@@ -143,7 +118,7 @@ object SignalQueries {
     * DFT agree to ~1e-10 relative, not bitwise. */
   def qPowerBand(spark: SparkSession, dir: String): DataFrame = {
     val fs = Fs
-    val ev = bSeries(spark, dir).where(col("t") <= 64)
+    val ev = series(spark, dir, b100).where(col("t") <= 64)
     PerEntity.transform(spark, ev, "entity_id", "t", "value") { (_, vs) =>
       if (vs.length < 64) Iterator.empty // users with < 64 events
       else {
@@ -184,40 +159,32 @@ object SignalQueries {
     * because the slice mean divides an exact integer sum by 8 (a power
     * of two — exact in binary floating point), so only the final
     * 24-term mean needs the shared 6-dp rounding. */
-  def qQuality(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, bSeries(spark, dir),
-      "entity_id", "t", "value") { (_, vs) =>
-      if (vs.length < 48) Iterator.empty // need >= 24 peaks
-      else {
-        val peaks = (1 until vs.length by 2).toArray
-        Quality.beatCorrelation(vs, peaks, 8).iterator.zipWithIndex
-          .map { case (q, i) => (i.toLong, q) }
-      }
-    }.select(col("entity_id"), col("t").as("peak_idx"),
-      // +1e-9 before round (order-jitter boundary insurance, as
-      // q_pt_filter); + 0.0 after round normalizes IEEE −0.0 (Spark's
-      // round drops the sign, DuckDB's keeps it — see q_accel)
-      (round(Tables.nanToNull(col("out")) + 1e-9, 6) + 0.0).as("quality"))
-      .orderBy(col("entity_id"), col("peak_idx"))
-  }
+  def qQuality(spark: SparkSession, dir: String): DataFrame =
+    quality(spark, dir, bidirectional = false, "quality")
 
   /** Bidirectional beat quality (quality.py:46-101, interior semantics):
     * max of mean correlation vs the previous / following 12 beats; edge
     * beats NULL. Fully hash-checked — the prev/succ ring buffers have
     * closed forms like q_quality's (see the oracle SQL comments). */
-  def qQualityBi(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, bSeries(spark, dir),
-      "entity_id", "t", "value") { (_, vs) =>
-      if (vs.length < 48) Iterator.empty
-      else {
-        val peaks = (1 until vs.length by 2).toArray
-        Quality.beatCorrelationBi(vs, peaks, 8).iterator.zipWithIndex
-          .map { case (q, i) => (i.toLong, q) }
-      }
-    }.select(col("entity_id"), col("t").as("peak_idx"),
-      (round(Tables.nanToNull(col("out")) + 1e-9, 6) + 0.0).as("quality_bi"))
+  def qQualityBi(spark: SparkSession, dir: String): DataFrame =
+    quality(spark, dir, bidirectional = true, "quality_bi")
+
+  private def quality(spark: SparkSession, dir: String,
+                      bidirectional: Boolean, outCol: String): DataFrame =
+    MHealth.QualityApi.beatCorrelation(series(spark, dir, b100),
+      "entity_id", "t", "value",
+      // every odd position, none below 48 samples (the oracles'
+      // count(*) >= 48: 24 peaks for the ring buffer)
+      vs => if (vs.length < 48) Array.empty
+        else (1 until vs.length by 2).toArray,
+      8, bidirectional, spark)
+      .select(col("entity_id"), col("peak_idx"),
+        // +1e-9 before round (order-jitter boundary insurance, as
+        // q_pt_filter); + 0.0 after round normalizes IEEE −0.0 (Spark's
+        // round drops the sign, DuckDB's keeps it — see q_accel)
+        (round(Tables.nanToNull(col("quality")) + 1e-9, 6) + 0.0)
+          .as(outCol))
       .orderBy(col("entity_id"), col("peak_idx"))
-  }
 
   /** Multimodal plumbing: binary media column → fake decode → frame
     * sample → per-frame features. Hash-checked since round 3 against a

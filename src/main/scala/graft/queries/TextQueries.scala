@@ -144,6 +144,31 @@ object TextQueries {
     ).orderBy(col("doc_id"))
   }
 
+  // The fingerprint scheme of q_doc_fingerprint and q_decontaminate:
+  // polynomial k-gram hashes mod M, winnowed over windows of W.
+  private val M = 1000000007L
+  private val B = 131L
+  private val K = 8
+  private val W = 4
+  private def polyHash(arr: Column): Column =
+    aggregate(arr, lit(0L), (acc, x) => (acc * B + x) % M)
+  // Each array is materialized as a column ATTRIBUTE before the next
+  // higher-order function consumes it: an expression referenced inside
+  // a transform() lambda is re-evaluated PER ELEMENT, so nesting the
+  // token-split inside the k-gram lambda is O(n²) per document (took
+  // 305 s at sf0.1). Multiple references to each alias stop
+  // CollapseProject from inlining them back.
+  // k-gram rolling hashes; sequence() descends for short docs — guard
+  private def kgOf(tk: Column): Column = when(size(tk) >= K,
+    transform(sequence(lit(0), size(tk) - K), i =>
+      polyHash(slice(tk, i + 1, lit(K)))))
+    .otherwise(array().cast("array<bigint>"))
+  // winnowing: one fingerprint (min) per window of W k-gram hashes
+  private def winsOf(kg: Column): Column = when(size(kg) >= W,
+    transform(sequence(lit(0), size(kg) - W), i =>
+      array_min(slice(kg, i + 1, lit(W)))))
+    .otherwise(array().cast("array<bigint>"))
+
   /** Document fingerprinting (rolling hash + winnowing, the MOSS
     * scheme): polynomial hash h(g) = Σ t_j·B^(k−1−j) mod M over each
     * k-gram of the token stream, then one fingerprint per window of W
@@ -153,29 +178,7 @@ object TextQueries {
     * per-row array work with zero joins. Also emits a BPE-ish regex
     * token count (greedy ≤4-char chunks — identical in Java regex and
     * RE2 for this corpus's [a-z ] alphabet). */
-  def qDocFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    val M = 1000000007L
-    val B = 131L
-    val K = 8
-    val W = 4
-    def polyHash(arr: Column): Column =
-      aggregate(arr, lit(0L), (acc, x) => (acc * B + x) % M)
-    // Each array is materialized as a column ATTRIBUTE before the next
-    // higher-order function consumes it: an expression referenced inside
-    // a transform() lambda is re-evaluated PER ELEMENT, so nesting the
-    // token-split inside the k-gram lambda is O(n²) per document (took
-    // 305 s at sf0.1). Multiple references to each alias stop
-    // CollapseProject from inlining them back.
-    // k-gram rolling hashes; sequence() descends for short docs — guard
-    def kgOf(tk: Column): Column = when(size(tk) >= K,
-      transform(sequence(lit(0), size(tk) - K), i =>
-        polyHash(slice(tk, i + 1, lit(K)))))
-      .otherwise(array().cast("array<bigint>"))
-    // winnowing: one fingerprint (min) per window of W k-gram hashes
-    def winsOf(kg: Column): Column = when(size(kg) >= W,
-      transform(sequence(lit(0), size(kg) - W), i =>
-        array_min(slice(kg, i + 1, lit(W)))))
-      .otherwise(array().cast("array<bigint>"))
+  def qDocFingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), toks.as("tk"))
       .select(col("doc_id"), col("text"), col("tk"),
@@ -194,7 +197,6 @@ object TextQueries {
         array_max(col("fps")).as("fp_max"),
         col("n_bpe_tokens"))
       .orderBy(col("doc_id"))
-  }
 
   /** Train/eval DECONTAMINATION — the n-gram overlap check every
     * training-data pipeline runs before a model sees the corpus: does a
@@ -208,18 +210,6 @@ object TextQueries {
     * joins) then ONE equi-join on the fingerprint value — partitionable
     * at any corpus size, exactly like the dedup family. */
   def qDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val M = 1000000007L
-    val B = 131L
-    def polyHash(arr: Column): Column =
-      aggregate(arr, lit(0L), (acc, x) => (acc * B + x) % M)
-    def kgOf(tk: Column): Column = when(size(tk) >= 8,
-      transform(sequence(lit(0), size(tk) - 8), i =>
-        polyHash(slice(tk, i + 1, lit(8)))))
-      .otherwise(array().cast("array<bigint>"))
-    def winsOf(kg: Column): Column = when(size(kg) >= 4,
-      transform(sequence(lit(0), size(kg) - 4), i =>
-        array_min(slice(kg, i + 1, lit(4)))))
-      .otherwise(array().cast("array<bigint>"))
     // cache: three consumers (counts, hits, worst) would otherwise
     // re-run the per-row polyHash fingerprinting — the dominant cost —
     // once each (the minhash signature-table lesson); ~30 rows/doc

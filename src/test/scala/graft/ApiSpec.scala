@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.MHealth
-import graft.signal.{Butterworth, Qrs}
+import graft.signal.{Butterworth, Qrs, Quality}
 import org.apache.spark.sql.functions._
 
 /** The migration facade (api.MHealth) vs the kernels it wraps: the
@@ -48,6 +48,35 @@ class ApiSpec extends SparkSpec {
       val vs = series.filter(_._1 == e).sortBy(_._2).map(_._3).toArray
       val exp = Qrs.rpeaksHamiltonTompkins(vs, 128.0).map(_.toLong).toSeq
       assert(got.getOrElse(e, Nil) == exp, s"peaks differ for $e")
+    }
+  }
+
+  test("QualityApi.beatCorrelation: no rows for an entity the kernel " +
+    "cannot take, the kernel's output for the rest") {
+    val short = graft.core.TokenGen.makeDoc(7, skewed = false)
+      .tokens.take(40).map(_.toDouble)
+    val long = graft.core.TokenGen.makeDoc(9, skewed = false)
+      .tokens.take(200).map(_.toDouble)
+    val df = (short.zipWithIndex.map { case (v, i) => ("s", i.toLong, v) } ++
+      long.zipWithIndex.map { case (v, i) => ("l", i.toLong, v) }).toSeq
+      .toDF("entity_id", "ts", "value")
+    // odd positions, none below 48 samples (the q_quality peaks)
+    val oddPeaks: Array[Double] => Array[Int] = vs =>
+      if (vs.length < 48) Array.empty else (1 until vs.length by 2).toArray
+    val peaks = oddPeaks(long.toArray)
+    assert(long.length == 200 && peaks.length == 100, "fixture too short")
+    Seq(false, true).foreach { bi =>
+      val got = MHealth.QualityApi.beatCorrelation(df, "entity_id", "ts",
+        "value", oddPeaks, 8, bidirectional = bi).collect()
+      assert(got.forall(_.getString(0) == "l"), s"bi=$bi: short entity rows")
+      val q = got.map(r => r.getLong(1) -> r.getDouble(2)).toMap
+      val exp = if (bi) Quality.beatCorrelationBi(long.toArray, peaks, 8)
+        else Quality.beatCorrelation(long.toArray, peaks, 8)
+      assert(q.size == exp.length, s"bi=$bi: ${q.size} != ${exp.length}")
+      exp.indices.foreach { i =>
+        val g = q(i.toLong)
+        assert(g == exp(i) || (g.isNaN && exp(i).isNaN), s"bi=$bi @$i")
+      }
     }
   }
 

@@ -66,6 +66,28 @@ class TimeDomSpec extends SparkSpec {
     assertClose(h, fx.get("hurst").asDouble(), "hurst", rtol = 1e-7)
   }
 
+  test("hurst drops lags whose differences have zero variance") {
+    // period 6: the differences at lags 6, 12, ..., 60 are all zero
+    val xs = (1 to 200).map(i => (i % 2) * 10.0 + i % 3)
+    val pts = (2 until 64).flatMap { l =>
+      val d = xs.drop(l).zip(xs).map { case (a, b) => a - b }
+      val m = d.sum / d.length
+      val v = d.map(x => (x - m) * (x - m)).sum / d.length
+      if (v == 0) None
+      else Some((math.log(l.toDouble), math.log(math.sqrt(math.sqrt(v)))))
+    }
+    assert(pts.length == 52)
+    val k = pts.length
+    val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
+    val sxx = pts.map(p => p._1 * p._1).sum
+    val sxy = pts.map(p => p._1 * p._2).sum
+    val exp = 2 * (k * sxy - sx * sy) / (k * sxx - sx * sx)
+    assert(math.abs(exp - 0.0712) < 5e-4, s"brute-force fit $exp")
+    val h = scalar(Fractal.hurst(valuesDf(xs), "entity_id", "ts", "value")
+      .select(col("hurst")))
+    assertClose(h, exp, "hurst")
+  }
+
   test("o1fit: OLS line via regr_intercept/regr_slope built-ins") {
     val xy = df.select(col("ts").cast("double").as("x"), v.as("y"))
     val row = xy.agg(regr_intercept(col("y"), col("x")),
