@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Supplementary bench (guide §1.4): per-query noop-sink isolation with
@@ -12,11 +13,21 @@ import org.apache.spark.sql.execution.FormattedMode
   * round-trip). Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_BENCH_REPS (timed reps after one warm-up, default 1),
   * SPARK_GRAFT_QUERIES (comma list; default all). `--explain` first
-  * prints each selected query's formatted plan. A query that throws
-  * in any pass prints `<name>,failed` with no numbers, and the run
-  * exits nonzero.
+  * prints each selected query's formatted plan ([[stablePlan]]). A
+  * query that throws in any pass prints `<name>,failed` with no
+  * numbers, and the run exits nonzero.
   */
 object BenchExtra {
+
+  /** The formatted plan with the identities that change from run to run
+    * masked — JVM lambda names (`$$Lambda$4962/0x…@245155b8`), exprIds
+    * (`#123`) and exchange ids (`plan_id=28`) — so two runs of an
+    * unchanged query print identical text. */
+  private[graft] def stablePlan(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+      .replaceAll("""\$\$Lambda[^@\s]*@[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,9 +39,8 @@ object BenchExtra {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         spark.sparkContext.setJobDescription(name)
-        if (args.contains("--explain")) Harness.run(spark, fn(spark, sfDir), df => println(
-          s"\n===== $name =====\n" +
-            df.queryExecution.explainString(FormattedMode)))
+        if (args.contains("--explain")) Harness.run(spark, fn(spark, sfDir),
+          df => println(s"\n===== $name =====\n" + stablePlan(df)))
         def one() = Harness.run(spark, fn(spark, sfDir))
         // warm-up (JIT + codegen + store staging); a failed query is
         // reported as failed, never timed

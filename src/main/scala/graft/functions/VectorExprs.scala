@@ -7,23 +7,29 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression for the embedding dot product — the hot
-  * scalar of every similarity-search query. The higher-order
-  * `aggregate(zip_with(...))` form it replaces is interpreted (HOFs
-  * don't participate in whole-stage codegen) and allocates a zipped
-  * struct array per row-pair; this is a codegen'd tight loop over the
-  * UnsafeArrayData buffers (SURVEY.md §7.3: preference (b), a custom
-  * Expression with doGenCode, before any UDF).
+/** A codegen'd fold Σ_i term(a_i, b_i) over two array<float|double>
+  * columns — the shared body of the native pairwise vector scalars.
+  * The higher-order `aggregate(zip_with(...))` form they replace is
+  * interpreted (HOFs don't participate in whole-stage codegen) and
+  * allocates a zipped struct array per row-pair; this is a codegen'd
+  * tight loop over the UnsafeArrayData buffers (SURVEY.md §7.3:
+  * preference (b), a custom Expression with doGenCode, before any UDF).
   *
   * Float semantics mirror the HOF form exactly: each element is widened
-  * to double BEFORE the multiply, products accumulate in ascending
-  * index order — so query results (and the DuckDB oracle floats) are
+  * to double BEFORE the term, terms accumulate in ascending index
+  * order — so query results (and the DuckDB oracle floats) are
   * bit-identical to the previous implementation. Element types may be
   * float or double independently per side (the LSH hyperplanes are
   * double literals against float embeddings). NULL result on length
-  * mismatch or any NULL element, matching zip_with + aggregate. */
-case class DotProductExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
+  * mismatch or any NULL element, matching zip_with + aggregate.
+  * Subclasses state only their term, once interpreted and once as Java
+  * source over the doubles `x` and `y`. */
+abstract class PairwiseArrayFold extends BinaryExpression {
+
+  /** SQL-facing name for type-check errors. */
+  protected def sqlName: String
+  protected def term(x: Double, y: Double): Double
+  protected def termCode: String
 
   private def elemType(e: Expression): DataType = e.dataType match {
     case ArrayType(et, _) => et
@@ -37,7 +43,7 @@ case class DotProductExpr(left: Expression, right: Expression)
     })
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"dot_product needs array<float|double> inputs, got " +
+      s"$sqlName needs array<float|double> inputs, got " +
         s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
   }
 
@@ -57,7 +63,7 @@ case class DotProductExpr(left: Expression, right: Expression)
       if (a.isNullAt(i) || b.isNullAt(i)) return null
       val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
       val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      s += x * y
+      s += term(x, y)
       i += 1
     }
     s
@@ -73,8 +79,8 @@ case class DotProductExpr(left: Expression, right: Expression)
     // loop into a consume method that already carries large literal
     // arrays (the LSH hyperplanes) pushed Janino past its method-size
     // limit and silently dropped the whole stage to interpreted mode.
-    val nullFlag = ctx.addMutableState("boolean", "dotProductNull")
-    val fn = ctx.freshName("dotProduct")
+    val nullFlag = ctx.addMutableState("boolean", "pairwiseFoldNull")
+    val fn = ctx.freshName("pairwiseFold")
     val arrCls = classOf[ArrayData].getName
     val fnName = ctx.addNewFunction(fn,
       s"""
@@ -87,7 +93,9 @@ case class DotProductExpr(left: Expression, right: Expression)
          |    if (a.isNullAt(i) || b.isNullAt(i)) {
          |      $nullFlag = true; return 0.0;
          |    }
-         |    s += ${getter(left, "a", "i")} * ${getter(right, "b", "i")};
+         |    final double x = ${getter(left, "a", "i")};
+         |    final double y = ${getter(right, "b", "i")};
+         |    s += $termCode;
          |  }
          |  return s;
          |}
@@ -98,9 +106,36 @@ case class DotProductExpr(left: Expression, right: Expression)
          |${ev.isNull} = $nullFlag;
        """.stripMargin)
   }
+}
+
+/** Dot product Σ a_i·b_i — the hot scalar of every similarity-search
+  * query. */
+case class DotProductExpr(left: Expression, right: Expression)
+  extends PairwiseArrayFold {
+
+  override protected def sqlName: String = "dot_product"
+  override protected def term(x: Double, y: Double): Double = x * y
+  override protected def termCode: String = "x * y"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Squared L2 distance Σ (a_i − b_i)² — the hot scalar of the IVF
+  * quantizer's points×k assignment scan (EmbedQueries.lloyd). */
+case class L2DistSqExpr(left: Expression, right: Expression)
+  extends PairwiseArrayFold {
+
+  override protected def sqlName: String = "l2_dist_sq"
+  override protected def term(x: Double, y: Double): Double = {
+    val d = x - y
+    d * d
+  }
+  override protected def termCode: String = "(x - y) * (x - y)"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): L2DistSqExpr =
     copy(left = newLeft, right = newRight)
 }
 
@@ -181,93 +216,6 @@ case class SparseSignedDotExpr(child: Expression, dims: Seq[Int],
 
   override protected def withNewChildInternal(
       newChild: Expression): SparseSignedDotExpr = copy(child = newChild)
-}
-
-/** Squared L2 distance Σ (a_i − b_i)² — the hot scalar of the IVF
-  * quantizer's points×k assignment scan (EmbedQueries.lloyd). Same
-  * posture as [[DotProductExpr]]: replaces the interpreted
-  * `aggregate(zip_with(...))` fold with a codegen'd tight loop whose
-  * float semantics are identical (widen-to-double per element, subtract,
-  * square, accumulate in ascending order) — results and oracle floats
-  * are bit-identical to the HOF form. */
-case class L2DistSqExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemType(e: Expression): DataType = e.dataType match {
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(e => elemType(e) match {
-      case FloatType | DoubleType => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"l2_dist_sq needs array<float|double> inputs, got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    val lf = elemType(left) == FloatType
-    val rf = elemType(right) == FloatType
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    def getter(e: Expression, v: String, i: String): String =
-      if (elemType(e) == FloatType) s"(double) $v.getFloat($i)"
-      else s"$v.getDouble($i)"
-    val nullFlag = ctx.addMutableState("boolean", "l2DistNull")
-    val fn = ctx.freshName("l2DistSq")
-    val arrCls = classOf[ArrayData].getName
-    val fnName = ctx.addNewFunction(fn,
-      s"""
-         |private double $fn($arrCls a, $arrCls b) {
-         |  $nullFlag = false;
-         |  final int n = a.numElements();
-         |  if (n != b.numElements()) { $nullFlag = true; return 0.0; }
-         |  double s = 0.0;
-         |  for (int i = 0; i < n; i++) {
-         |    if (a.isNullAt(i) || b.isNullAt(i)) {
-         |      $nullFlag = true; return 0.0;
-         |    }
-         |    final double d =
-         |      ${getter(left, "a", "i")} - ${getter(right, "b", "i")};
-         |    s += d * d;
-         |  }
-         |  return s;
-         |}
-       """.stripMargin)
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"""
-         |${ev.value} = $fnName($l, $r);
-         |${ev.isNull} = $nullFlag;
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): L2DistSqExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Column-level entry points for the native vector expressions. */

@@ -13,53 +13,49 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamQueries {
 
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val activeByParent =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicInteger]()
-  private val lastSinks =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (SparkSession, String)]()
-
-  /** Invocation-keyed staging dir under a fixed per-process parent;
-    * the parent is cleared only when THIS is the sole live invocation
-    * of its query (Bench re-runs must not accrete replay chunks, but a
-    * concurrent invocation's in-flight dir must not be yanked either).
-    * Callers MUST pair with [[releaseStaging]]. */
-  private def stagingRoot(spark: SparkSession, parentName: String,
-                          seq: Int): String = {
-    val parent = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"), parentName)
-    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ctr = activeByParent.computeIfAbsent(parentName,
-      _ => new java.util.concurrent.atomic.AtomicInteger(0))
-    if (ctr.incrementAndGet() == 1) fs.delete(parent, true)
-    new org.apache.hadoop.fs.Path(parent, s"run_$seq").toString
-  }
-
-  private def releaseStaging(parentName: String): Unit =
-    activeByParent.get(parentName).decrementAndGet()
-
-  /** Run `body` (which starts and drains a streaming query) with the
-    * session's shuffle partitions — and with them the streaming STATE
-    * partition count, which unlike batch shuffles is NOT AQE-coalesced:
-    * every micro-batch launches one task and one state-store delta file
-    * per partition — set to the scale-adaptive `defaultParallelism`
-    * (= cores locally, = executor slots on a cluster) instead of the
-    * session's fixed batch value (128 here). For the bounded replay
-    * harness the state is KBs; 128 partitions × batches of per-file
-    * state-store open/commit/fsync was the dominant cost of both
-    * streaming gate queries (guide §2.2: fewer, larger partitions). A
-    * production stream sizes this to state volume instead — the knob
-    * stays `spark.sql.shuffle.partitions` at stream start either way.
-    * Restored before returning, so the batch plan downstream (and every
-    * other query) still plans with the session's configured value. */
-  private def withStreamStatePartitions[T](spark: SparkSession)
-                                          (body: => T): T = {
+  /** Replay staged files through one Structured Streaming query to
+    * completion and hand back its result: `stage` writes the input
+    * files into a fresh dir, `stream` reads them back as a stream, which
+    * runs with Trigger.AvailableNow into a memory sink in `mode`. The
+    * sink's DataFrame is taken before its view is dropped and the dir
+    * (input and checkpoint) deleted — it still reads the sink's rows, so
+    * repeated runs leave neither views nor files behind.
+    *
+    * Shuffle partitions — and with them the streaming STATE partition
+    * count, which unlike batch shuffles is NOT AQE-coalesced: every
+    * micro-batch launches one task and one state-store delta file per
+    * partition — are set to the scale-adaptive `defaultParallelism`
+    * (= cores locally, = executor slots on a cluster) while the stream
+    * starts and drains, instead of the session's fixed batch value (128
+    * here). For the bounded replay the state is KBs; 128 partitions ×
+    * batches of per-file state-store open/commit/fsync was the dominant
+    * cost of both streaming gate queries (guide §2.2: fewer, larger
+    * partitions). A production stream sizes this to state volume
+    * instead. Restored before returning, so the batch plan downstream
+    * (and every other query) still plans with the session's value. */
+  private def replay(spark: SparkSession, mode: String)
+                    (stage: String => Unit)
+                    (stream: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val name = dir.getFileName.toString // unique, and a valid identifier
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, spark.sparkContext.defaultParallelism)
-    try body finally spark.conf.set(key, prev)
+    try {
+      stage(dir.toString)
+      val input = stream(dir.toString)
+      spark.conf.set(key, spark.sparkContext.defaultParallelism)
+      try input.writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      finally spark.conf.set(key, prev)
+      spark.table(name)
+    } finally {
+      spark.catalog.dropTempView(name)
+      val p = new org.apache.hadoop.fs.Path(dir.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   /** Run the chunk-write jobs in parallel (they are independent
@@ -89,19 +85,6 @@ object StreamQueries {
     }
   }
 
-  /** Drop the previous invocation's memory-sink view (repeated runs
-    * must not accrete temp views) — but only while its owning session
-    * is still alive: a stopped ladder session's catalog throws, and
-    * its view died with the session anyway. */
-  private def dropPrevSink(key: String): Unit = {
-    val prev = lastSinks.get(key)
-    if (prev != null) {
-      val (s, n) = prev
-      if (!s.sparkContext.isStopped)
-        try s.catalog.dropTempView(n) catch { case _: Throwable => () }
-    }
-  }
-
   /** Exact dedup THROUGH THE STREAMING ENGINE: the documents table is
     * re-written as 8 parquet chunks and replayed as a file-source
     * stream 2 files per micro-batch, so the streaming aggregation
@@ -116,41 +99,25 @@ object StreamQueries {
     * (watermarked dropDuplicatesWithinWatermark, horizon-bounded
     * state) is the StreamOps.dedupStream dual, spec-verified. */
   def qDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val seq = sinkSeq.incrementAndGet()
-    val root = stagingRoot(spark, "graft_dedup_stream", seq)
-    Tables.documents(spark, dir).repartition(8)
-      .write.mode("overwrite").parquet(s"$root/in")
-    val schema = Tables.documents(spark, dir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(s"$root/in")
-    val agg = stream
-      .groupBy(md5(col("text").cast("binary")).as("content_hash"))
-      .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("rep_doc"))
-    // unique memory-sink name per invocation (the returned DataFrame
-    // stays lazily readable after this builder returns)
-    dropPrevSink("dedup")
-    val name = s"graft_dedup_stream_$seq"
-    try {
-      withStreamStatePartitions(spark) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally releaseStaging("graft_dedup_stream")
-    lastSinks.put("dedup", (spark, name))
-    spark.table(name).orderBy(col("content_hash"))
+    val docs = Tables.documents(spark, dir)
+    replay(spark, "complete") { root =>
+      docs.repartition(8).write.mode("overwrite").parquet(s"$root/in")
+    } { root =>
+      spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(s"$root/in")
+        .groupBy(md5(col("text").cast("binary")).as("content_hash"))
+        .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("rep_doc"))
+    }.orderBy(col("content_hash"))
   }
 
   /** Write `df` as ONE parquet file at `target` (a file path, not a
     * dir): the file-source replay needs one file per chunk so
     * maxFilesPerTrigger=1 delivers exactly one chunk per micro-batch,
     * in chunk order (FileStreamSource batches by modification time
-    * with path tie-break; chunks are written sequentially AND named in
-    * lexicographic chunk order, so both keys agree). */
+    * with path tie-break; [[writeAllChunks]] writes the chunks in
+    * parallel and then stamps their mtimes in chunk order, and they are
+    * named in lexicographic chunk order, so both keys agree). */
   private def writeOneFile(df: DataFrame, target: String): Unit = {
     val stage = target + ".stage"
     df.coalesce(1).write.mode("overwrite").parquet(stage)
@@ -184,13 +151,11 @@ object StreamQueries {
     * ref_ts/ref_value surface as last_err_us/last_err_value. */
   def qAsofStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seq = sinkSeq.incrementAndGet()
-    val root = stagingRoot(spark, "graft_asof_stream", seq)
-    try {
-      val ev = Tables.events(spark, dir).select(
-        col("user_id").cast("string").as("entity_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts"),
-        col("event_type"), col("value"), col("event_id"))
+    val ev = Tables.events(spark, dir).select(
+      col("user_id").cast("string").as("entity_id"),
+      unix_micros(col("ts").cast("timestamp")).as("ts"),
+      col("event_type"), col("value"), col("event_id"))
+    replay(spark, "append") { root =>
       // 3 interior cuts = exact ts quartiles (longs below 2^53 are
       // exact in double); chunk k = [cut(k-1), cut(k)) with ±∞ rails —
       // every row lands in exactly one chunk even under heavy ties
@@ -201,51 +166,37 @@ object StreamQueries {
       val hi = cuts :+ Double.PositiveInfinity
       // the 8 chunk writes are independent map-only jobs — run them
       // concurrently and stamp replay order explicitly (writeAllChunks);
-      // jobs are listed in per-source chunk order so the mtime stamp
-      // reproduces the sequential write order exactly
-      val chunkJobs: Seq[(() => Unit, String)] =
-        (1 to 4).flatMap { k =>
-          val inChunk = col("ts").cast("double") >= lo(k - 1) &&
-            col("ts").cast("double") < hi(k - 1)
-          val lTgt = s"$root/left/c$k.parquet"
-          val rTgt = s"$root/right/c$k.parquet"
-          Seq(
-            (() => writeOneFile(ev
-              .where(inChunk && col("event_type") =!= "error")
-              .select(col("entity_id"), col("ts"),
-                col("event_id").cast("double").as("value"),
-                lit("ev").as("source")), lTgt), lTgt),
-            (() => writeOneFile(ev
-              .where(inChunk && col("event_type") === "error")
-              .select(col("entity_id"), col("ts"), col("value"),
-                lit("err").as("source")), rTgt), rTgt))
-        }
-      writeAllChunks(spark, chunkJobs)
+      // jobs are listed in per-source chunk order
+      writeAllChunks(spark, (1 to 4).flatMap { k =>
+        val inChunk = col("ts").cast("double") >= lo(k - 1) &&
+          col("ts").cast("double") < hi(k - 1)
+        val lTgt = s"$root/left/c$k.parquet"
+        val rTgt = s"$root/right/c$k.parquet"
+        Seq(
+          (() => writeOneFile(ev
+            .where(inChunk && col("event_type") =!= "error")
+            .select(col("entity_id"), col("ts"),
+              col("event_id").cast("double").as("value"),
+              lit("ev").as("source")), lTgt), lTgt),
+          (() => writeOneFile(ev
+            .where(inChunk && col("event_type") === "error")
+            .select(col("entity_id"), col("ts"), col("value"),
+              lit("err").as("source")), rTgt), rTgt))
+      })
+    } { root =>
       val sch = org.apache.spark.sql.Encoders.product[graft.core.SeqPoint]
         .schema
       def src(side: String) = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$root/$side").as[graft.core.SeqPoint]
-      val enriched =
-        graft.streaming.StreamOps.streamingAsOf(src("left"), src("right"))(spark)
-      dropPrevSink("asof")
-      val name = s"graft_asof_stream_$seq"
-      withStreamStatePartitions(spark) {
-        val q = enriched.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      lastSinks.put("asof", (spark, name))
-      spark.table(name).select(
-        col("entity_id").cast("bigint").as("user_id"),
-        col("value").cast("bigint").as("event_id"),
-        col("ref_value").as("last_err_value"),
-        col("ref_ts").as("last_err_us"))
-        .orderBy(col("user_id"), col("event_id"))
-    } finally releaseStaging("graft_asof_stream")
+      graft.streaming.StreamOps.streamingAsOf(src("left"), src("right"))(spark)
+        .toDF()
+    }.select(
+      col("entity_id").cast("bigint").as("user_id"),
+      col("value").cast("bigint").as("event_id"),
+      col("ref_value").as("last_err_value"),
+      col("ref_ts").as("last_err_us"))
+      .orderBy(col("user_id"), col("event_id"))
   }
 
   val all: Map[String, CoreQueries.Q] = Map(

@@ -1,9 +1,10 @@
 package graft.signal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Distributed driver for the §2.6 stateful per-entity scans (decision
-  * rules, filtfilt, sampen): `groupByKey` on the entity, sort the group
+  * rules, filtfilt, sampen): group by the entity column, sort the group
   * by ts IN the executor (flatMapGroups iterator order is not guaranteed
   * post-shuffle — SURVEY.md §7.4), hand the bounded (ts, value) arrays to
   * a pure array kernel.
@@ -25,8 +26,10 @@ object PerEntity {
                (f: (Array[Long], Array[Double]) => Iterator[(Long, Double)])
   : DataFrame = {
     import spark.implicits._
-    df.select(entityCol, tsCol, valueCol).as[(String, Long, Double)]
-      .groupByKey(_._1)
+    // grouping on the column (not `groupByKey(_._1)`) ships the entity
+    // once: no AppendColumns copy of the key rides the exchange
+    df.select(entityCol, tsCol, valueCol).groupBy(col(entityCol))
+      .as[String, (String, Long, Double)]
       .flatMapGroups { (entity, rows) =>
         val buf = rows.toArray.sortBy(_._2)
         val ts = buf.map(_._2)

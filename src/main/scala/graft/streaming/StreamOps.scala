@@ -11,10 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *  - gap sessionization → `session_window(ts, gap)` (event time +
   *    watermark; late data policy = watermark);
-  *  - tumbling/sliding feature windows → `window(ts, size, slide)`
-  *    (epoch-anchored, for continuous serving) and
-  *    [[anchoredGridStream]], the exact first-ts-anchored dual of the
-  *    batch grid (windows.py:175 semantics) via flatMapGroupsWithState;
+  *  - tumbling/sliding feature windows → [[anchoredGridStream]], the
+  *    exact first-ts-anchored dual of the batch grid (windows.py:175
+  *    semantics) via flatMapGroupsWithState;
   *  - the per-entity stateful scans (§2.6) → flatMapGroupsWithState,
   *    here instantiated as a running feature state that emits one
   *    vector per arriving point with ZERO look-ahead (the streaming
@@ -34,19 +33,6 @@ object StreamOps {
         avg(col("value")).as("mean"),
         min(col("event_time")).as("session_start"),
         max(col("event_time")).as("session_end"))
-
-  /** Sliding event-time window features (epoch-anchored streaming dual
-    * of the batch anchored grid). */
-  def slidingFeatures(points: DataFrame, size: String, slide: String,
-                      watermark: String): DataFrame =
-    points
-      .withWatermark("event_time", watermark)
-      .groupBy(col("entity_id"), window(col("event_time"), size, slide))
-      .agg(count(lit(1)).as("n_points"),
-        avg(col("value")).as("f_mean"),
-        stddev_pop(col("value")).as("f_std"),
-        min(col("value")).as("f_min"),
-        max(col("value")).as("f_max"))
 
   /** Rolling state kept per entity: last `capacity` values (count
     * window) — enough to emit mean/std/min/max/rmssd per event. */
@@ -150,8 +136,8 @@ object StreamOps {
 
   /** FIRST-TS-anchored grid windows as a stream — the true streaming
     * dual of [[graft.operators.Windows.anchoredWindows]] (windows.py:175
-    * anchor semantics), closing the epoch-anchor divergence that
-    * [[slidingFeatures]] documents: state per entity = (anchor = first
+    * anchor semantics; Spark's `window(ts, size, slide)` anchors at the
+    * epoch instead): state per entity = (anchor = first
     * ts seen, one mergeable partial per OPEN window). A window
     * [start, start+wsize) is emitted the moment a point proves it past
     * (ts >= start+wsize) — zero look-ahead: the emitted features only

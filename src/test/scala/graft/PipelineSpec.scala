@@ -207,6 +207,30 @@ class PipelineSpec extends SparkSpec {
       "resumed pipeline output identical")
   }
 
+  test("the resume query's checkpoints are keyed by the events content: " +
+    "rewriting events under the same dir resumes nothing stale") {
+    import graft.queries.PipelineQueries.{qFeaturePipeline,
+      qFeaturePipelineResume}
+    val dir = tempDir("graft_resume_key").toString
+    // 3 users, 40 events each, 7 h apart: several sessions and windows
+    def write(scale: Double): Unit =
+      spark.range(120).select(
+        (col("id") % 3).as("user_id"),
+        timestamp_micros(lit(1700000000000000L) + col("id") * 25200000000L)
+          .as("ts"),
+        ((col("id") * 37 % 101) / 10.0 * scale).as("value"),
+        col("id").as("event_id"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    write(1.0)
+    val before = qFeaturePipelineResume(spark, dir).collect().toSeq
+    write(10.0)
+    val want = qFeaturePipeline(spark, dir).collect().toSeq
+    val changed = want != before
+    assert(changed, "fixture: scaling the values changed nothing")
+    val fresh = qFeaturePipelineResume(spark, dir).collect().toSeq == want
+    assert(fresh, "resume served checkpoints of the old events files")
+  }
+
   test("duplicated (entity, ts) rows: threading a tie column makes " +
     "session ids retry-stable under different input partitionings") {
     import org.apache.spark.sql.functions.col

@@ -122,4 +122,26 @@ class PlanSpec extends SparkSpec {
           s"$name lost the bucket-occupancy cap from its join condition")
       }
   }
+
+  test("per-entity scans ship the entity key once: no AppendColumns, " +
+    "and the exchange hashes the entity column") {
+    val pts = graft.core.Tables.events(spark, sf).select(
+      col("user_id").cast("string").as("entity_id"),
+      unix_micros(col("ts").cast("timestamp")).as("ts"), col("value"))
+    val df = graft.signal.PerEntity.transform(spark, pts, "entity_id", "ts",
+      "value")((ts, vs) => ts.iterator.zip(vs.iterator))
+    val plan = planOf(df)
+    assert(!plan.contains("AppendColumns"),
+      s"the entity key is shipped twice:\n$plan")
+    assert("hashpartitioning\\(entity_id#\\d+".r.findFirstIn(plan).isDefined,
+      s"the exchange is not keyed on the entity column:\n$plan")
+  }
+
+  test("BenchExtra --explain prints identical text for two builds of " +
+    "one query (lambda identities and exprIds masked)") {
+    val q = SparkEntry.queries("q_filtfilt")
+    val (a, b) = (q(spark, sf), q(spark, sf))
+    assert(planOf(a) != planOf(b), "fixture: the raw plans already agree")
+    assert(BenchExtra.stablePlan(a) == BenchExtra.stablePlan(b))
+  }
 }
