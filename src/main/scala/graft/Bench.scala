@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.TokenGen
+import graft.core.{ShuffleTally, TokenGen}
 import graft.pipeline.FeaturePipeline
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, posexplode}
@@ -13,17 +13,21 @@ import org.apache.spark.sql.functions.{col, posexplode}
   *    SAME input; reports feature-vectors/sec at both and efficiency
   *    = (tput_high / tput_low) / (N_HIGH / N_LOW). Target ≥ 0.8.
   *
-  * 2. Per-query wall times for every SparkEntry query on
-  *    SPARK_GRAFT_SF_DIR at SPARK_GRAFT_CPUS (driver contract). A query
-  *    that throws is never timed: it is listed under `queries_error`
-  *    with the first line of its message instead.
+  * 2. The query battery ([[battery]]): cold and warm wall time of each
+  *    selected SparkEntry query on SPARK_GRAFT_SF_DIR at
+  *    SPARK_GRAFT_CPUS, shuffle and spill bytes of the cold pass, and
+  *    jobs, stages, tasks and shuffle bytes of the warm pass
+  *    (`queries_counters`). A query that throws is never timed: it is
+  *    listed under `queries_error` with the first line of its message
+  *    instead. `--explain` prints each query's [[Harness.stablePlan]] to
+  *    stderr.
   *
   * Sessions come from [[Harness.session]]. Env knobs:
   * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: available
   * processors), SPARK_GRAFT_BENCH_DOCS (default 40000),
   * SPARK_GRAFT_BENCH_LADDER (default "max(1, cpus/4),cpus"),
-  * SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_BENCH_QUERIES
-  * (0 = ladder only), SPARK_GRAFT_BENCH_SERVICE_ITERS (default 0).
+  * SPARK_GRAFT_BENCH_REPS (ladder reps, default 3), SPARK_GRAFT_QUERIES
+  * (comma list, [[Harness.select]]; unset = all, empty = ladder only).
   */
 object Bench {
 
@@ -53,8 +57,44 @@ object Bench {
     (rows, secs)
   }
 
+  /** One query's battery passes: cold and warm seconds, and the counters
+    * tallied over each pass. */
+  final case class Passes(cold: Double, warm: Double,
+                          coldTally: ShuffleTally.Delta,
+                          warmTally: ShuffleTally.Delta)
+
+  /** Run each query twice in `spark` and tally both passes. The first
+    * (cold) time folds in codegen + JIT + catalog warm-up and once misled
+    * a round verdict by up to 6x; the second (warm) time is the
+    * steady-state signal regressions should be adjudicated against.
+    * Caches are query-scoped (Harness.run drains them), so the warm pass
+    * rebuilds its own (steady-state service semantics, not a cache-hit
+    * rerun). A query that throws in either pass is `Left`, never timed.
+    * With `explain`, each query's plan goes to stderr after its passes. */
+  private[graft] def battery(spark: SparkSession, sfDir: String,
+                             queries: Seq[(String, Harness.Query)],
+                             explain: Boolean = false)
+  : Seq[(String, Either[Throwable, Passes])] = {
+    val sc = spark.sparkContext
+    val tally = ShuffleTally.install(sc)
+    try queries.map { case (name, fn) =>
+      val (cold, coldTally) =
+        tally.measure(sc)(Harness.run(spark, fn(spark, sfDir)))
+      name -> cold.flatMap { c =>
+        val (warm, warmTally) =
+          tally.measure(sc)(Harness.run(spark, fn(spark, sfDir)))
+        // a plan-only build, outside both passes: the warm pass's own
+        // frame shows its caches' executed plans once the pass has run
+        if (explain) Harness.run(spark, fn(spark, sfDir), df => System.err
+          .println(s"\n===== $name =====\n" + Harness.stablePlan(df)))
+        warm.map(w => Passes(c, w, coldTally, warmTally))
+      }
+    } finally sc.removeSparkListener(tally)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val queries = Harness.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     val cpus = Harness.cores
     // 40k docs ≈ 56M points: large enough that fixed job overheads
     // (~4s/run) don't flatten the low end of the ladder — at 28M the
@@ -144,78 +184,33 @@ object Bench {
     val runsHigh = levels.last._2.runs
     val sHigh = Harness.session(cpus)
 
-    // --- per-query timings on the driver's sf dir ---
-    // Each query is timed TWICE in the same session: the first (cold)
-    // time folds in codegen + JIT + catalog warm-up and once misled a
-    // round verdict by up to 6x; the second (warm) time is the
-    // steady-state signal regressions should be adjudicated against.
+    // --- the query battery on SPARK_GRAFT_SF_DIR ---
+    val results = battery(sHigh, sfDir, queries,
+      explain = args.contains("--explain"))
+    val timed = results.collect { case (k, Right(p)) => k -> p }
+    def obj(rows: Seq[(String, String)]): String =
+      rows.map { case (k, v) => Harness.json(k) + ":" + v }
+        .mkString("{", ",", "}")
+    val qs = obj(timed.map { case (k, p) => k -> f"${p.cold}%.3f" })
+    val qsWarm = obj(timed.map { case (k, p) => k -> f"${p.warm}%.3f" })
     // shuffle/spill volume per query (cold pass) — the scale diagnostic
     // that survives host noise: an added exchange shows as a bytes jump
     // even when wall time doesn't move reliably
-    val tally = graft.core.ShuffleTally.install(sHigh.sparkContext)
-    // SPARK_GRAFT_BENCH_QUERIES=0 => ladder-only run (repeat-ladder /
-    // scale-step sessions, where the 60-query battery is dead time)
-    val runQueries =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES", "1") != "0"
-    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
-    // caches are query-scoped (Harness.run drains them), so the warm pass
-    // rebuilds its own (steady-state service semantics, not a cache-hit
-    // rerun); a query that throws in either pass is reported, not timed
-    val results = (if (runQueries) battery else Nil).map { case (name, fn) =>
-      val (cold, delta) = tally.measure(sHigh.sparkContext)(
-        Harness.run(sHigh, fn(sHigh, sfDir)))
-      name -> (for {
-        c <- cold
-        w <- Harness.run(sHigh, fn(sHigh, sfDir))
-      } yield (c, w, delta))
-    }
-    val timed = results.collect { case (k, Right((c, w, d))) => (k, c, w, d) }
-    val qs = timed.map { case (k, c, _, _) => "\"" + k + f"\":$c%.3f" }
-      .mkString("{", ",", "}")
-    val qsWarm = timed.map { case (k, _, w, _) => "\"" + k + f"\":$w%.3f" }
-      .mkString("{", ",", "}")
-    val qsShuffle = timed.map { case (k, _, _, d) =>
-      "\"" + k + f"\":${d.shuffleWriteBytes / 1e6}%.2f"
-    }.mkString("{", ",", "}")
-    val qsSpill = timed.filter(_._4.spilledBytes > 0).map { case (k, _, _, d) =>
-      "\"" + k + f"\":${d.spilledBytes / 1e6}%.1f"
-    }.mkString("{", ",", "}")
-    val qsError = results.collect { case (k, Left(e)) =>
+    val qsShuffle = obj(timed.map { case (k, p) =>
+      k -> f"${p.coldTally.shuffleWriteBytes / 1e6}%.2f"
+    })
+    val qsSpill = obj(timed.filter(_._2.coldTally.spilledBytes > 0).map {
+      case (k, p) => k -> f"${p.coldTally.spilledBytes / 1e6}%.1f"
+    })
+    val qsCounters = obj(timed.map { case (k, p) =>
+      val d = p.warmTally
+      k -> (f"""{"jobs":${d.jobs},"stages":${d.stages},""" +
+        f""""tasks":${d.tasks},"shuffle_mb":${d.shuffleWriteBytes / 1e6}%.2f}""")
+    })
+    val qsError = obj(results.collect { case (k, Left(e)) =>
       val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-      Harness.json(k) + ":" + Harness.json(msg.linesIterator.nextOption()
-        .getOrElse(""))
-    }.mkString("{", ",", "}")
-    // --- optional sustained-service mode: the full battery looped N
-    // more times in this same JVM. With query-scoped caches + the fixed
-    // resume checkpoint root, iteration time and process RSS must stay
-    // flat — a session-lifetime leak (cache, listener tally, temp dir)
-    // shows as a monotonic climb across iterations.
-    val serviceIters =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SERVICE_ITERS", "0").toInt
-    def rssMb(): Double = {
-      val s = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get("/proc/self/status"))
-      s.stream().filter(_.startsWith("VmRSS")).findFirst()
-        .map[Double](_.split("\\s+")(1).toDouble / 1024).orElse(0.0)
-    }
-    def heapMb(): Double = {
-      System.gc()
-      val r = Runtime.getRuntime
-      (r.totalMemory() - r.freeMemory()) / 1e6
-    }
-    val serviceRuns = (1 to serviceIters).map { _ =>
-      val t0 = System.nanoTime()
-      battery.foreach { case (_, fn) => Harness.run(sHigh, fn(sHigh, sfDir)) }
-      ((System.nanoTime() - t0) / 1e9, rssMb(), heapMb())
-    }
-    val serviceJson =
-      if (serviceRuns.isEmpty) ""
-      else {
-        val its = serviceRuns.map { case (s, r, h) =>
-          f"""{"secs":$s%.1f,"rss_mb":$r%.0f,"heap_mb":$h%.0f}"""
-        }.mkString("[", ",", "]")
-        s""","service":{"iters":$serviceIters,"per_iter":$its}"""
-      }
+      k -> Harness.json(msg.linesIterator.nextOption().getOrElse(""))
+    })
 
     def arr(xs: Seq[Double]) = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     val ladderJson = levels.map { case (c, leg) =>
@@ -227,7 +222,7 @@ object Bench {
     val noiseJson =
       s""""noise_rule":"reject ladder if any leg (max-min)/median > $SpreadMax; headline instrument = the 3x scale step (see BASELINE.md)","ladder_accepted":$ladderAccepted"""
     println(
-      f"""{"metric":"feature_vectors_per_sec","value":$tputHigh%.1f,"unit":"rows/sec","sf":"$sfDir","queries":$qs,"queries_warm":$qsWarm,"queries_shuffle_mb":$qsShuffle,"queries_spill_mb":$qsSpill,"queries_error":$qsError,"scaling":{"rows":$rows,"cores_low":${ladder.head},"cores_high":${ladder.last},"secs_low":$secsLow%.2f,"secs_high":$secsHigh%.2f,"runs_low":${arr(runsLow)},"runs_high":${arr(runsHigh)},"tput_low":$tputLow%.1f,"tput_high":$tputHigh%.1f,"efficiency":$eff%.3f,"efficiency_pair":"${ladder.head}->${ladder(1 min (ladder.length - 1))} cores (N->4N, pre-bandwidth-saturation; see BASELINE.md)",$effJson,$noiseJson,"ladder":$ladderJson}$serviceJson}""")
+      f"""{"metric":"feature_vectors_per_sec","value":$tputHigh%.1f,"unit":"rows/sec","sf":"$sfDir","queries":$qs,"queries_warm":$qsWarm,"queries_shuffle_mb":$qsShuffle,"queries_spill_mb":$qsSpill,"queries_counters":$qsCounters,"queries_error":$qsError,"scaling":{"rows":$rows,"cores_low":${ladder.head},"cores_high":${ladder.last},"secs_low":$secsLow%.2f,"secs_high":$secsHigh%.2f,"runs_low":${arr(runsLow)},"runs_high":${arr(runsHigh)},"tput_low":$tputLow%.1f,"tput_high":$tputHigh%.1f,"efficiency":$eff%.3f,"efficiency_pair":"${ladder.head}->${ladder(1 min (ladder.length - 1))} cores (N->4N, pre-bandwidth-saturation; see BASELINE.md)",$effJson,$noiseJson,"ladder":$ladderJson}}""")
     sHigh.stop()
   }
 }

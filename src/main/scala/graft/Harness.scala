@@ -2,11 +2,15 @@ package graft
 
 import graft.core.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** The one session profile and the one query runner shared by every
-  * harness main (Bench, BenchExtra, Verify) and the spec suite, so the
-  * correctness gate runs under the same config the bench measures. */
+/** The one session profile, query selector and query runner shared by
+  * both harness mains (Bench, Verify) and the spec suite, so the
+  * correctness gate runs under the same config the bench measures.
+  * Env: SPARK_GRAFT_CPUS ([[cores]]). */
 object Harness {
+
+  type Query = (SparkSession, String) => DataFrame
 
   /** SPARK_GRAFT_CPUS, else the host's available processors. */
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -33,6 +37,29 @@ object Harness {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The selected gate queries, sorted by name: all of them when `names`
+    * is None, else the comma list's entries — an empty list selects
+    * none. An unknown name fails fast instead of selecting nothing. */
+  def select(names: Option[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries
+    val picked = names.fold(all.keySet)(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = picked.diff(all.keySet)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    picked.toSeq.sorted.map(n => n -> all(n))
+  }
+
+  /** The formatted plan with the identities that change from run to run
+    * masked — JVM lambda names (`$$Lambda$4962/0x…@245155b8`), exprIds
+    * (`#123`) and exchange ids (`plan_id=28`) — so two runs of an
+    * unchanged query print identical text. */
+  private[graft] def stablePlan(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+      .replaceAll("""\$\$Lambda[^@\s]*@[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
 
   /** Materialize every column without collecting (noop DSv2 sink). */
   def noop(df: DataFrame): Unit =

@@ -6,21 +6,18 @@ import java.nio.file.{Files, Paths}
   * throws writes no parquet, so the compare counts it as failing. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
+    // optional 3rd arg: comma list of queries ([[Harness.select]]; local
     // iteration only — the driver always passes two args = full gate)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val queries = Harness.select(args.lift(2))
     val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        Harness.run(spark, fn(spark, sfDir),
-          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
-          .left.foreach(e =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}"))
-      }
+    queries.foreach { case (name, fn) =>
+      Harness.run(spark, fn(spark, sfDir),
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .left.foreach(e =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}"))
+    }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
       .mkString("{", ",", "}")

@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * suites, a concurrent service harness) cannot evict each other's
   * in-flight caches. The invariant this encodes: build → action →
   * drain happen on one thread per query, which is how every harness
-  * (`graft.Harness.run` for Verify, Bench and BenchExtra; specs)
+  * (`graft.Harness.run` for Verify and Bench; specs)
   * drives queries. A builder that registers on one thread but is
   * drained from another leaks its cache on purpose — the next [[assertEmpty]] trips, surfacing the broken
   * ownership instead of silently cross-evicting. [[assertEmpty]]

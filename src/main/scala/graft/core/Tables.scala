@@ -151,6 +151,11 @@ object Tables {
     * parity; the DuckDB compare is NULL-based). */
   def nanToNull(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
 
+  /** The exact lattice b = round(value·100): an integer-valued double, so
+    * moment sums over it are exact on both engines (see CoreQueries). The
+    * oracle SQL spells the same tree as `round(value*100)`. */
+  def b100(c: Column): Column = round(c * 100)
+
   /** Event time → epoch microseconds for any orderable ts type. NTZ
     * timestamps (what the parquet test tables carry) are interpreted in
     * the session timezone (pinned UTC) — matching DuckDB's epoch_us on

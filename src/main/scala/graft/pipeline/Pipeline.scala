@@ -33,8 +33,7 @@ object Pipeline {
 
   final case class StageLineage(stage: String, partitions: Int,
                                 records: Long, bytes: Long,
-                                wallMs: Long, resumed: Boolean,
-                                tasks: Seq[TaskLineage])
+                                wallMs: Long, tasks: Seq[TaskLineage])
 
   private final class GroupListener(groupId: String) extends SparkListener {
     private val stageIds = TrieMap.empty[Int, Unit]
@@ -72,10 +71,8 @@ object Pipeline {
     val success = new Path(dir, "_SUCCESS")
     val sidecar = new Path(dir, "_lineage.json")
 
-    if (fs.exists(success) && fs.exists(sidecar)) {
-      log(spark, StageLineage(name, -1, -1, -1, 0, resumed = true, Nil))
+    if (fs.exists(success) && fs.exists(sidecar))
       return spark.read.parquet(dir)
-    }
 
     val groupId = s"graft-stage-$name"
     val listener = new GroupListener(groupId)
@@ -95,9 +92,8 @@ object Pipeline {
     val tasks = listener.tasks.filter(_.recordsWritten > 0).toSeq
       .sortBy(_.partitionId)
     val lin = StageLineage(name, tasks.size, tasks.map(_.recordsWritten).sum,
-      tasks.map(_.bytesWritten).sum, wallMs, resumed = false, tasks)
+      tasks.map(_.bytesWritten).sum, wallMs, tasks)
     writeSidecar(fs, sidecar, lin)
-    log(spark, lin)
     spark.read.parquet(dir)
   }
 
@@ -129,13 +125,5 @@ object Pipeline {
         s""""wallMs":${lin.wallMs},"tasks":$tasksJson}"""
     val out = fs.create(p, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def log(spark: SparkSession, lin: StageLineage): Unit = {
-    val msg = if (lin.resumed) s"[pipeline] stage ${lin.stage}: RESUMED"
-    else s"[pipeline] stage ${lin.stage}: ${lin.records} rows, " +
-      s"${lin.partitions} partitions, ${lin.wallMs} ms"
-    // stdout by design: shows up in driver logs on a cluster
-    println(msg)
   }
 }

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.core.Tables.b100
 import graft.functions.{Geo, Stats, TimeDomain}
 import graft.operators.{AsOf, Sessionize, Windows}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -27,9 +28,6 @@ import org.apache.spark.sql.types.DecimalType
 object CoreQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** b = value·100 as an exact integer-valued double. */
-  private def b100(c: Column): Column = round(c * 100)
 
   private val sqrt2 = sqrt(lit(2.0))
 

@@ -355,14 +355,6 @@ object DedupQueries {
   private val NeardupTau = 0.9
   private val NeardupFloor = 0.2
 
-  private def neardupBucket(emb: Column, t: Int, planes: Int): Column =
-    (0 until planes).map { i =>
-      val terms = planeTerms(t, i)
-      val proj = graft.functions.Vectors.sparseSignedDot(
-        emb, terms.map(_._1), terms.map(_._2))
-      when(proj > 0, lit(1L << i)).otherwise(0L)
-    }.reduce(_ + _)
-
   /** Embedding-cosine near-dup, the SCALE PATH of q_embed_neardup:
     * the full table (no universe cap) through multi-table
     * random-hyperplane LSH. Identical bit-pattern vectors (exact
@@ -398,7 +390,7 @@ object DedupQueries {
       : DataFrame = {
     val e = col("embedding")
     val buckets = array((0 until tables).map(t =>
-      struct(lit(t).as("t"), neardupBucket(e, t, planes).as("b"))): _*)
+      struct(lit(t).as("t"), tableBucket(e, t, planes).as("b"))): _*)
     // norms once per vector, BEFORE the 16-way explode (expression
     // tree sqrt(dot(x,x)) unchanged, so the oracle floats match)
     val c = Banded.candidates(emb.select(col("vec_id"), e), "vec_id", Seq(e),
@@ -462,8 +454,10 @@ object DedupQueries {
       (d, s)
     }
 
-  private def tableBucket(emb: Column, t: Int): Column =
-    (0 until LshPlanes).map { i =>
+  /** Bucket of `emb` in LSH table `t`: bit i is set when the vector
+    * lies on the positive side of sparse hyperplane (t, i). */
+  private def tableBucket(emb: Column, t: Int, planes: Int): Column =
+    (0 until planes).map { i =>
       val terms = planeTerms(t, i)
       val proj = graft.functions.Vectors.sparseSignedDot(
         emb, terms.map(_._1), terms.map(_._2))
@@ -476,8 +470,8 @@ object DedupQueries {
     * partitions by bucket id at any scale — deduped, then ranked by
     * exact cosine. Recall vs exact brute force measured in DedupSpec. */
   def qAnnLshTopk(spark: SparkSession, dir: String): DataFrame = {
-    val buckets = array((0 until LshTables).map(t =>
-      struct(lit(t).as("t"), tableBucket(col("embedding"), t).as("b"))): _*)
+    val buckets = array((0 until LshTables).map(t => struct(lit(t).as("t"),
+      tableBucket(col("embedding"), t, LshPlanes).as("b"))): _*)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), explode(buckets).as("bk"))
       .select(col("vec_id"), col("embedding"),

@@ -21,7 +21,7 @@ object FractalQueries {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val pts = Tables.events(spark, dir)
-      .withColumn("b", round(col("value") * 100))
+      .withColumn("b", Tables.b100(col("value")))
       .withColumn("i", (row_number().over(w) - 1).cast("long"))
       .select(col("user_id").as("entity_id"), col("i").as("pos"),
         col("b"))

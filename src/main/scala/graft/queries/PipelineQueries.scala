@@ -28,7 +28,7 @@ object PipelineQueries {
     val ev = Tables.events(spark, dir).select(
       col("user_id").as("entity_id"),
       unix_micros(col("ts").cast("timestamp")).as("t"),
-      round(col("value") * 100).as("b"),
+      Tables.b100(col("value")).as("b"),
       col("event_id")) // sessionize tie-break: events CAN repeat a ts
     val cfg = FeaturePipeline.Config(Size, Step, MinLen, Gap, Some(Tol),
       tieCols = Seq("event_id"))

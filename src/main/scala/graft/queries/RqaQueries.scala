@@ -32,7 +32,7 @@ object RqaQueries {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val pts = Tables.events(spark, dir)
-      .select(col("user_id"), round(col("value") * 100).as("b"),
+      .select(col("user_id"), Tables.b100(col("value")).as("b"),
         row_number().over(w).as("rn"))
       .where(col("rn") <= N)
     val a = pts.select(col("user_id"), col("rn").as("i"), col("b").as("bi"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.core.Tables.b100
 import graft.functions.Geo
 import graft.operators.Fractal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,8 +16,6 @@ import org.apache.spark.sql.functions._
   * outputs).
   */
 object SeqQueries {
-
-  private def b100(c: Column): Column = round(c * 100)
 
   /** mode with tie → smallest value (stats.py:62-94): value-counts +
     * deterministic rank. */

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.api.MHealth
 import graft.core.Tables
+import graft.core.Tables.b100
 import graft.signal.{Butterworth, SampEn, PerEntity, Spectral}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,10 +18,6 @@ import org.apache.spark.sql.functions._
 object SignalQueries {
 
   private val Fs = 128.0
-
-  /** The exact b = round(value·100) lattice — the input of every
-    * oracle-exact per-entity kernel (sampen, power_band, quality). */
-  private val b100 = round(col("value") * 100)
 
   /** events as a per-user `value` series at row-number positions `t`. */
   private def series(spark: SparkSession, dir: String,
@@ -96,7 +93,7 @@ object SignalQueries {
     * bit-identical in the DuckDB oracle (sampen is scale-invariant, so
     * the lattice does not change the statistic). */
   def qSampen(spark: SparkSession, dir: String): DataFrame = {
-    PerEntity.transform(spark, series(spark, dir, b100),
+    PerEntity.transform(spark, series(spark, dir, b100(col("value"))),
       "entity_id", "t", "value") { (_, vs) =>
       val n = vs.length
       var s1 = 0.0
@@ -118,7 +115,7 @@ object SignalQueries {
     * DFT agree to ~1e-10 relative, not bitwise. */
   def qPowerBand(spark: SparkSession, dir: String): DataFrame = {
     val fs = Fs
-    val ev = series(spark, dir, b100).where(col("t") <= 64)
+    val ev = series(spark, dir, b100(col("value"))).where(col("t") <= 64)
     PerEntity.transform(spark, ev, "entity_id", "t", "value") { (_, vs) =>
       if (vs.length < 64) Iterator.empty // users with < 64 events
       else {
@@ -171,7 +168,7 @@ object SignalQueries {
 
   private def quality(spark: SparkSession, dir: String,
                       bidirectional: Boolean, outCol: String): DataFrame =
-    MHealth.QualityApi.beatCorrelation(series(spark, dir, b100),
+    MHealth.QualityApi.beatCorrelation(series(spark, dir, b100(col("value"))),
       "entity_id", "t", "value",
       // every odd position, none below 48 samples (the oracles'
       // count(*) >= 48: 24 peaks for the ring buffer)
@@ -223,7 +220,7 @@ object SignalQueries {
     val ev = Tables.events(spark, dir)
       .select(col("user_id").cast("string").as("entity_id"),
         unix_micros(col("ts").cast("timestamp")).as("t"),
-        round(col("value") * 100).as("value"))
+        b100(col("value")).as("value"))
     PerEntity.transform(spark, ev, "entity_id", "t", "value") { (ts, vs) =>
       if (vs.length < 16) Iterator.empty
       else {
