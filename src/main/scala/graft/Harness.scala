@@ -51,14 +51,22 @@ object Harness {
     picked.toSeq.sorted.map(n => n -> all(n))
   }
 
-  /** The formatted plan with the identities that change from run to run
-    * masked — JVM lambda names (`$$Lambda$4962/0x…@245155b8`), exprIds
-    * (`#123`) and exchange ids (`plan_id=28`) — so two runs of an
-    * unchanged query print identical text. */
+  /** The formatted plan with the identities that change from build to
+    * build masked — JVM lambda names (`$$Lambda$4962/0x…@245155b8`),
+    * object identity hashes (`Kmv$$anon$1@4b6be6fc`), exprIds (`#123`),
+    * lambda-variable suffixes (`lambda x_5`), RDD ids
+    * (`MapPartitionsRDD[1237]`) and exchange ids (`plan_id=28`) — so two
+    * builds of an unchanged query print identical text, wherever they
+    * fall in the JVM's life. Not masked: the column order of a
+    * distinct aggregate's `Expand` node, which can vary between builds
+    * (q_decontaminate, q_tokens_bigrams). */
   private[graft] def stablePlan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
       .replaceAll("""\$\$Lambda[^@\s]*@[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("""([\w$]+)@[0-9a-f]{1,8}\b""", "$1@x")
       .replaceAll("#\\d+", "#x")
+      .replaceAll("""\blambda (\w+?)_\d+\b""", "lambda $1_x")
+      .replaceAll("""RDD\[\d+\]""", "RDD[x]")
       .replaceAll("plan_id=\\d+", "plan_id=x")
 
   /** Materialize every column without collecting (noop DSv2 sink). */

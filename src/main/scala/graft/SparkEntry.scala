@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The correctness-gate contract — see SURVEY.md §7.
   *
   * `queries` is the engine's operator inventory (one entry per implemented
   * operator family, SURVEY.md §2); `oracleSql` carries the DuckDB-equivalent
-  * SQL the driver runs on the same parquet tables. Column names and
-  * rounding are aligned on both sides (see Tables.roundDoubles).
+  * SQL that DuckDB runs on the same parquet tables. Column names are
+  * aligned on both sides, and each query rounds its own outputs the
+  * same way its oracle does.
   */
 object SparkEntry {
 

@@ -283,6 +283,29 @@ object CurationQueries {
       .orderBy(col("doc_id"))
   }
 
+  /** The 8-word chunk fingerprint shared by q_chunk_dedup,
+    * q_chunk_rewrite and q_source_overlap: chunks are full and
+    * non-overlapping (floor(n/8) per doc), and chunk p hashes as
+    * md5_64("chunk|" + its words joined by " "). Select [[Chunks.splitText]]
+    * (the word array as column attribute `__ws`) BEFORE any chunk
+    * transform(): HOF lambdas evaluate interpreted, so a split inlined
+    * into slice(…) would re-split the whole doc once per chunk — O(n²)
+    * string work per doc (the q_gopher_repetition lesson). */
+  private object Chunks {
+    val W = 8
+    def splitText: Column = split(col("text"), " ").as("__ws")
+    def words: Column = col("__ws")
+    def nWords: Column = size(words)
+    def nChunks: Column = floor(nWords / lit(W)).cast("int")
+    /** 0-based chunk indices; empty below W words — Spark's sequence
+      * DESCENDS when start > stop. */
+    def idx: Column = when(nChunks >= 1, sequence(lit(0), nChunks - 1))
+      .otherwise(array().cast("array<int>"))
+    def of(p: Column): Column = slice(words, p * W + 1, lit(W))
+    def hash(p: Column): Column =
+      Hash64.md5_64(concat(lit("chunk|"), concat_ws(" ", of(p))))
+  }
+
   /** C4-style corpus-wide duplicated-span detection (Raffel et al.
     * 2020 §2.2 use "any three-sentence span occurring more than once";
     * here the span is a non-overlapping 8-word chunk, the analog for
@@ -298,23 +321,11 @@ object CurationQueries {
     * exact n_dup/n_chunks division. Docs shorter than one chunk keep a
     * row with n_chunks = 0 and NULL fractions on both engines. */
   def qChunkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val W = 8
-    // word array materialized as a column attribute BEFORE the chunk
-    // transform(): HOF lambdas evaluate interpreted, so slice(words, …)
-    // with the split inlined re-split the whole doc once per chunk —
-    // O(n²) string work per doc (the q_gopher_repetition lesson)
-    val words = col("__ws")
-    val n = size(words)
-    // full non-overlapping windows only (floor(n/W) chunks); guard the
-    // n < W case — Spark's sequence DESCENDS when start > stop
-    val idx = when(n >= W, sequence(lit(1), n - (W - 1), lit(W)))
-      .otherwise(array().cast("array<int>"))
-    val chunks = transform(idx, i => Hash64.md5_64(
-      concat(lit("chunk|"), concat_ws(" ", slice(words, i, lit(W))))))
     val ex = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("__ws"))
-      .select(col("doc_id"), col("lang"), n.cast("long").as("n_words"),
-        explode_outer(chunks).as("ch"))
+      .select(col("doc_id"), col("lang"), Chunks.splitText)
+      .select(col("doc_id"), col("lang"),
+        Chunks.nWords.cast("long").as("n_words"),
+        explode_outer(transform(Chunks.idx, Chunks.hash(_))).as("ch"))
     val occ = ex.where(col("ch").isNotNull)
       .groupBy(col("ch")).agg(count(lit(1)).as("occ"))
     ex.join(occ, Seq("ch"), "left")
@@ -343,24 +354,16 @@ object CurationQueries {
     * (n mod 8 words) is always kept. Docs whose every full chunk
     * first occurred elsewhere rebuild to just their tail. */
   def qChunkRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val W = 8
-    // word array as a column attribute — chunkWords runs inside
-    // interpreted transform() lambdas on BOTH the fingerprint and the
-    // reassembly side; an inlined split would re-split the doc per
-    // chunk (O(n²) per doc, the q_gopher_repetition lesson)
-    val words = col("__ws")
-    val n = size(words)
-    val nc = floor(n / lit(W)).cast("int")
-    def chunkWords(p: Column): Column = slice(words, p * W + 1, lit(W))
-    val idx = when(nc >= 1, sequence(lit(0), nc - 1))
-      .otherwise(array().cast("array<int>"))
+    import Chunks.{W, words}
+    val n = Chunks.nWords
+    val nc = Chunks.nChunks
+    // Chunks.of runs inside transform() lambdas on BOTH the fingerprint
+    // and the reassembly side
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("__ws"))
+      .select(col("doc_id"), col("lang"), Chunks.splitText)
     val ex = docs
-      .select(col("doc_id"), explode(transform(idx, p => struct(
-        p.as("p"),
-        Hash64.md5_64(concat(lit("chunk|"),
-          concat_ws(" ", chunkWords(p)))).as("ch")))).as("c"))
+      .select(col("doc_id"), explode(transform(Chunks.idx, p => struct(
+        p.as("p"), Chunks.hash(p).as("ch")))).as("c"))
       .select(col("doc_id"), col("c.p").as("p"), col("c.ch").as("ch"))
     val firsts = ex.groupBy(col("ch"))
       .agg(min(struct(col("doc_id"), col("p"))).as("f"))
@@ -375,7 +378,7 @@ object CurationQueries {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         concat_ws(" ", concat(
           flatten(transform(coalesce(col("ps"),
-            array().cast("array<int>")), p => chunkWords(p))),
+            array().cast("array<int>")), Chunks.of(_))),
           slice(words, nc * W + 1, n - nc * W))).as("text_clean"))
       .orderBy(col("doc_id"))
   }
@@ -443,18 +446,10 @@ object CurationQueries {
     * that table). Counts are exact integers; containment is a single
     * division of identical integers on both engines. */
   def qSourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val W = 8
-    // word array as a column attribute before the chunk transform()
-    // (interpreted lambda — see qChunkDedup)
-    val words = col("__ws")
-    val nc = floor(size(words) / lit(W)).cast("int")
-    val idx = when(nc >= 1, sequence(lit(0), nc - 1))
-      .otherwise(array().cast("array<int>"))
     val e = Tables.documents(spark, dir)
-      .select(col("source"), split(col("text"), " ").as("__ws"))
-      .select(col("source"), explode(transform(idx, p =>
-        Hash64.md5_64(concat(lit("chunk|"),
-          concat_ws(" ", slice(words, p * W + 1, lit(W))))))).as("ch"))
+      .select(col("source"), Chunks.splitText)
+      .select(col("source"), explode(transform(Chunks.idx, Chunks.hash(_)))
+        .as("ch"))
       .distinct()
     val n = e.groupBy(col("source")).agg(count(lit(1)).as("nd"))
     val p = e.select(col("source").as("src_a"), col("ch"))

@@ -95,9 +95,10 @@ object StreamQueries {
     * `min` are batch-split-invariant, unlike first-arrival
     * dropDuplicates — so the output equals q_dedup_exact row-for-row
     * and shares its oracle semantics. Complete-mode state is the
-    * bounded-reprocessing configuration; the unbounded-stream posture
-    * (watermarked dropDuplicatesWithinWatermark, horizon-bounded
-    * state) is the StreamOps.dedupStream dual, spec-verified. */
+    * bounded-reprocessing configuration; an unbounded stream would
+    * use a watermarked dropDuplicatesWithinWatermark instead, whose
+    * state is bounded by the dedup horizon (not built here: no
+    * workload runs an unbounded stream). */
   def qDedupStream(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     replay(spark, "complete") { root =>

@@ -96,6 +96,76 @@ class ApiSpec extends SparkSpec {
     assertClose(row.getAs[Double]("ssd"), diffs.sum, "ssd")
   }
 
+  test("HrvApi.sdannSdnni == segment mean/SD replay over interval " +
+    "windows anchored at each entity's first ts") {
+    // beat times in ms = running sum of the nni, from unaligned starts
+    def beats(e: String, t0: Long, n: Int, k: Int) =
+      (0 until n).map(i => 800.0 + (i * k % 50)).scanLeft((t0, 0.0)) {
+        case ((t, _), v) => (t + v.toLong, v)
+      }.tail.map { case (t, v) => (e, t, v) }
+    val rows = beats("a", 1234L, 40, 37) ++ beats("b", 98765L, 25, 13)
+    val interval = 5000L
+    val got = MHealth.HrvApi.sdannSdnni(rows.toDF("entity_id", "ts", "nni"),
+      "entity_id", "ts", "nni", interval)
+      .collect().map(r => r.getString(0) -> r).toMap
+    def sdPop(xs: Seq[Double]) = {
+      val m = xs.sum / xs.length
+      math.sqrt(xs.map(x => (x - m) * (x - m)).sum / xs.length)
+    }
+    Seq("a", "b").foreach { e =>
+      val pts = rows.filter(_._1 == e)
+      val t0 = pts.map(_._2).min
+      val segs = pts.groupBy(p => (p._2 - t0) / interval).values
+        .map(_.map(_._3)).toSeq
+      assert(segs.length >= 3, s"fixture too short for $e")
+      val r = got(e)
+      assertClose(r.getAs[Double]("sdann"),
+        sdPop(segs.map(s => s.sum / s.length)), s"$e sdann")
+      assertClose(r.getAs[Double]("sdnni"),
+        segs.map(sdPop).sum / segs.length, s"$e sdnni")
+      assert(r.getAs[Long]("n_segments") == segs.length, s"$e n_segments")
+    }
+  }
+
+  test("SpectralApi.bandPower == direct-DFT band power, peak and " +
+    "relative power on the first n samples; no row below n") {
+    val (fs, n, lower, upper) = (64.0, 64, 8.0, 16.0)
+    // 12 Hz in band, 5 Hz below it, token noise; "a" has a tail past n
+    val noise = graft.core.TokenGen.makeDoc(4, skewed = false).tokens
+      .map(t => (t % 7) * 0.05)
+    val a = (0 until 80).map(i => math.sin(2 * math.Pi * 12 * i / fs) +
+      0.7 * math.sin(2 * math.Pi * 5 * i / fs) + noise(i))
+    val df = (a.zipWithIndex.map { case (v, i) => ("a", i.toLong, v) } ++
+      (0 until n - 1).map(i => ("short", i.toLong, noise(i))))
+      .toDF("entity_id", "ts", "value")
+    val got = MHealth.SpectralApi.bandPower(df, "entity_id", "ts", "value",
+      fs, n, lower, upper).collect()
+    assert(got.map(_.getString(0)).toSeq == Seq("a"), "short entity rows")
+    // brute force: |DFT| of the de-meaned first n samples, bins < n/2
+    val x = a.take(n)
+    val mean = x.sum / n
+    val mag = (0 until n / 2).map { k =>
+      val terms = x.indices.map { j =>
+        val ang = -2 * math.Pi * j * k / n
+        ((x(j) - mean) * math.cos(ang), (x(j) - mean) * math.sin(ang))
+      }
+      math.hypot(terms.map(_._1).sum, terms.map(_._2).sum)
+    }
+    val freq = (0 until n / 2).map(_ * fs / n)
+    val inBand = freq.indices.filter(i => freq(i) >= lower &&
+      freq(i) <= upper)
+    val band = inBand.map(mag).sum
+    val peak = freq(freq.indices.filter(i => freq(i) >= lower &&
+      freq(i) < upper).maxBy(mag))
+    val r = got.head
+    assertClose(r.getAs[Double]("band_power"), band, "band_power",
+      rtol = 1e-9)
+    assert(r.getAs[Double]("peak_freq") == peak && peak == 12.0,
+      s"peak_freq ${r.getAs[Double]("peak_freq")} vs $peak")
+    assertClose(r.getAs[Double]("rel_power"), band / mag.sum, "rel_power",
+      rtol = 1e-9)
+  }
+
   test("AccelApi.linearFilter == per-axis highpass filtfilt") {
     implicit val s = spark
     val n = 200

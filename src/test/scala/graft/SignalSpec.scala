@@ -129,28 +129,21 @@ class SignalSpec extends SparkSpec {
       "sampen smooth")
   }
 
-  test("sampen typed Aggregator (shuffled input) and zero-explode array " +
-    "UDF both match the fixture") {
-    val fx = fixture("signal")
-    val want = fx.get("sampen").asDouble()
+  test("FractalApi.sampen on shuffled, repartitioned long-format points " +
+    "matches the fixture") {
+    val want = fixture("signal").get("sampen").asDouble()
     val x = TokenGen.makeDoc(6, skewed = false).tokens.take(200)
-    import org.apache.spark.sql.functions._
     import spark.implicits._
-    // array form on the native tokens column
-    val arrDf = Seq(("doc6", x)).toDF("doc_id", "tokens")
-    val gotArr = scalar(arrDf.select(
-      graft.signal.SampEnAgg.arrayUdf(col("tokens"), lit(2), lit(0.2))))
-    assertClose(gotArr, want, "arrayUdf")
-    // aggregator over long-format points, deliberately shuffled
+    // deliberately shuffled over 5 partitions: input order must not
+    // change the result
     val pts = scala.util.Random.shuffle(
       x.zipWithIndex.map { case (v, i) => (i.toLong, v.toDouble) }.toList)
     val df = pts.map { case (t, v) => ("doc6", t, v) }
       .toDF("entity_id", "ts", "value").repartition(5)
-    val sampenCol = graft.signal.SampEnAgg.sampenUdaf()
-    val gotAgg = scalar(df.groupBy($"entity_id")
-      .agg(sampenCol(col("ts"), col("value")).as("se"))
-      .select(col("se")))
-    assertClose(gotAgg, want, "aggregator")
+    val got = scalar(graft.api.MHealth.FractalApi
+      .sampen(df, "entity_id", "ts", "value", spark = spark)
+      .select("sampen"))
+    assertClose(got, want, "sampen")
   }
 
   test("DFA exponent matches the numpy fixture (timedom.py:196-235)") {

@@ -3,37 +3,14 @@ package graft
 import graft.core.{Sinks, Tables}
 import org.apache.spark.sql.functions._
 
-/** Multi-format source reads (graft.source.format) and the bucketed
-  * feature-store sink: full-fidelity round-trips and scan-level
-  * partition pruning. */
+/** The DSv2 catalog source seam and the bucketed feature-store sink:
+  * full-fidelity round-trips and scan-level partition pruning. */
 class SourcesSinksSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  test("csv / json / orc sources round-trip the events table exactly " +
-    "(micro timestamps, shortest-repr doubles, sidecar schemas)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_src").toString
-    val truth = spark.read.parquet(s"$sf/events.parquet")
-    val want = canon(truth)
-    Seq("csv", "json", "orc").foreach { fmt =>
-      Tables.copyTo(spark, sf, "events", dir, fmt)
-      spark.conf.set("graft.source.format", fmt)
-      try {
-        val got = Tables.events(spark, dir)
-        assert(got.schema == truth.schema,
-          s"$fmt schema drifted: ${got.schema.toDDL}")
-        assert(canon(got) == want, s"$fmt round-trip not exact")
-      } finally spark.conf.unset("graft.source.format")
-    }
-    // unknown format fails loudly, not silently-as-parquet
-    spark.conf.set("graft.source.format", "avro")
-    try intercept[IllegalArgumentException] {
-      Tables.events(spark, dir).collect()
-    } finally spark.conf.unset("graft.source.format")
-  }
 
   test("DSv2 catalog round-trip: V2 CTAS through createTable, read back " +
     "as a BatchScan via the Tables.t catalog seam — results identical") {
@@ -82,32 +59,6 @@ class SourcesSinksSpec extends SparkSpec {
       spark.conf.unset("spark.sql.catalog.graft_cat")
       spark.conf.unset("spark.sql.catalog.graft_cat.root")
     }
-  }
-
-  test("csv source round-trips hostile text cells: embedded newlines, " +
-    "quotes, delimiters (multiLine read path)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    val truth = Seq(
-      (0L, "plain text"),
-      (1L, "line one\nline two\nline three"),
-      (2L, "a \"quoted\" phrase, with commas"),
-      (3L, "trailing newline\n"),
-      (4L, "\n leading, and \"all\" of, it\n mixed"))
-      .toDF("doc_id", "text")
-    truth.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Tables.copyTo(spark, dir, "documents", dir, "csv")
-    spark.conf.set("graft.source.format", "csv")
-    try {
-      val got = Tables.documents(spark, dir)
-      // csv read is always-nullable; compare names+types, not nullability
-      assert(got.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        truth.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-        got.schema.toDDL)
-      assert(canon(got) == canon(truth),
-        "hostile csv cells bled rows or mangled quotes")
-      assert(got.count() == 5, "embedded newlines split records")
-    } finally spark.conf.unset("graft.source.format")
   }
 
   test("bucketed sink: entity rows co-locate in one bucket dir and an " +

@@ -6,90 +6,11 @@ import graft.streaming.StreamOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming duals vs their batch counterparts on identical data. */
+/** The streaming as-of dual vs the batch as-of join on identical data,
+  * and the streaming gate queries' replay runner. */
 class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def runStream[T](df: org.apache.spark.sql.Dataset[T],
-                           name: String,
-                           mode: String): org.apache.spark.sql.DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
-
-  test("session_window aggregation matches batch sessionize groups") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Double)]
-    // ts seconds: entity e has gaps > 30s between [0..2], [100..101], [500]
-    val rows = Seq(
-      ("e", 0L, 1.0), ("e", 10L, 2.0), ("e", 20L, 3.0),
-      ("e", 100L, 4.0), ("e", 101L, 5.0),
-      ("e", 500L, 6.0),
-      ("f", 7L, 1.5))
-    input.addData(rows: _*)
-    val pts = input.toDF()
-      .toDF("entity_id", "sec", "value")
-      .withColumn("event_time", timestamp_seconds(col("sec")))
-    // append-mode sessionAgg only emits sessions the watermark has
-    // closed; assert it runs, then check the full grouping via
-    // complete mode
-    runStream(StreamOps.sessionAgg(pts, "30 seconds", "0 seconds"),
-      "sessions_tbl", "append")
-    val input2 = MemoryStream[(String, Long, Double)]
-    input2.addData(rows: _*)
-    val pts2 = input2.toDF().toDF("entity_id", "sec", "value")
-      .withColumn("event_time", timestamp_seconds(col("sec")))
-    val grouped = runStream(
-      pts2.groupBy(col("entity_id"),
-        session_window(col("event_time"), "30 seconds"))
-        .agg(count(lit(1)).as("n_points")),
-      "sessions_complete", "complete")
-    val got = grouped.select("entity_id", "n_points")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      .sorted
-    assert(got == Seq(("e", 1L), ("e", 2L), ("e", 3L), ("f", 1L)),
-      got.toString)
-  }
-
-  test("rollingVectors: streaming state emits the same vectors as a " +
-    "batch count-window scan, with zero look-ahead") {
-    implicit val sqlCtx = spark.sqlContext
-    implicit val s = spark
-    val values = graft.core.TokenGen.makeDoc(11, skewed = false)
-      .tokens.take(40).map(_.toDouble)
-    val pts = values.zipWithIndex.map { case (v, i) =>
-      SeqPoint("e", i.toLong, v, "web")
-    }
-    val input = MemoryStream[SeqPoint]
-    // two micro-batches: state must carry across
-    input.addData(pts.take(25).toSeq: _*)
-    val stream = StreamOps.rollingVectors(input.toDS(), capacity = 8)
-    val q = stream.writeStream.format("memory").queryName("vec_tbl")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    input.addData(pts.drop(25).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("vec_tbl")
-      .orderBy(col("ts")).collect()
-    assert(got.length == 40)
-    // batch oracle: trailing count window of 8
-    got.foreach { r =>
-      val t = r.getLong(r.fieldIndex("ts")).toInt
-      val windowVals = values.slice(math.max(0, t - 7), t + 1).reverse
-      val n = windowVals.length
-      val mean = windowVals.sum / n
-      assert(r.getInt(r.fieldIndex("n")) == n, s"n@$t")
-      assertClose(r.getDouble(r.fieldIndex("f_mean")), mean, s"mean@$t")
-      val varp = windowVals.map(v => (v - mean) * (v - mean)).sum / n
-      assertClose(r.getDouble(r.fieldIndex("f_std")), math.sqrt(varp),
-        s"std@$t")
-    }
-  }
 
   test("streamingAsOf matches the batch backward as-of join and never " +
     "references a future ref row") {
@@ -172,94 +93,6 @@ class StreamingSpec extends SparkSpec {
     assert(got(5L).isEmpty, s"late event must not see a future ref: $got")
     assert(got(60L).contains(45L),
       s"late ref must not regress the state: $got")
-  }
-
-  test("anchoredGridStream equals the batch first-ts-anchored grid on " +
-    "closed windows, across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    implicit val s = spark
-    // irregular per-entity series: first ts NOT aligned to any epoch
-    // grid, gaps leaving some windows empty
-    val ptsE = Seq(7L, 9L, 12L, 13L, 21L, 22L, 55L, 58L, 90L, 91L, 93L)
-      .zipWithIndex.map { case (t, i) =>
-        SeqPoint("e", t, (i * 37 % 11).toDouble, "web")
-      }
-    val ptsF = Seq(100L, 104L, 131L, 160L).zipWithIndex.map {
-      case (t, i) => SeqPoint("f", t, (i * 5 + 1).toDouble, "web")
-    }
-    val all = ptsE ++ ptsF
-    val (wsize, wstep, minLen) = (16L, 8L, 2L)
-    val input = MemoryStream[SeqPoint]
-    input.addData(all.filter(_.ts < 60): _*)
-    val stream = StreamOps.anchoredGridStream(input.toDS(), wsize, wstep,
-      minLen)
-    val q = stream.writeStream.format("memory").queryName("grid_tbl")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    input.addData(all.filter(_.ts >= 60): _*) // state carries across
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("grid_tbl").collect().map { r =>
-      (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-          if (r.isNullAt(4)) None else Some(r.getDouble(4)))
-    }.toMap
-
-    // batch truth: anchoredWindows with the identical agg formulas,
-    // restricted to windows CLOSED by the data the stream has seen
-    // (window_end <= per-entity max ts)
-    import org.apache.spark.sql.functions._
-    val batchDf = graft.operators.Windows.anchoredWindows(
-      all.toDS().toDF(), "entity_id", "ts", wsize, wstep, minLen,
-      Seq((sum(col("value")) / count(lit(1))).as("f_mean"),
-        sqrt(sum(col("value") * col("value")) / count(lit(1)) -
-          (sum(col("value")) / count(lit(1))) *
-            (sum(col("value")) / count(lit(1)))).as("f_std")))
-    val lastTs = all.groupBy(_.entity_id)
-      .map { case (k, v) => k -> v.map(_.ts).max }
-    val exp = batchDf.collect().map { r =>
-      (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-          if (r.isNullAt(4)) None else Some(r.getDouble(4)))
-    }.toMap.filter { case ((e, start), _) => start + wsize <= lastTs(e) }
-
-    assert(got.keySet == exp.keySet,
-      s"closed-window sets differ: ${got.keySet} vs ${exp.keySet}")
-    exp.foreach { case (k, (n, m, sd)) =>
-      val (gn, gm, gsd) = got(k)
-      assert(gn == n, s"$k n: $gn vs $n")
-      def close(a: Option[Double], b: Option[Double]) = (a, b) match {
-        case (Some(x), Some(y)) => math.abs(x - y) < 1e-9
-        case (None, None) => true
-        case _ => false
-      }
-      assert(close(gm, m), s"$k mean: $gm vs $m")
-      assert(close(gsd, sd), s"$k std: $gsd vs $sd")
-    }
-    // empty grid slots must appear with n = 0 (e has a gap 22 -> 55)
-    assert(exp.exists(_._2._1 == 0L), "fixture should cover empty windows")
-  }
-
-  test("dedupStream emits the first document per content hash across " +
-    "micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val stream = StreamOps.dedupStream(docs)
-    val q = stream.writeStream.format("memory").queryName("dedup_tbl")
-      .outputMode("append").start()
-    input.addData((1L, "aa"), (2L, "bb"), (3L, "aa"))
-    q.processAllAvailable()
-    input.addData((4L, "bb"), (5L, "cc"), (6L, "aa"))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("dedup_tbl").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // one row per distinct text; doc 1 and 2 are the batch-1 firsts;
-    // "cc" first appears as doc 5 in batch 2
-    assert(got.values.toSeq.sorted == Seq("aa", "bb", "cc"))
-    assert(got.contains(5L))
-    assert(!got.contains(3L) && !got.contains(4L) && !got.contains(6L))
   }
 
   test("streaming gate queries: repeated runs return equal rows and " +
