@@ -68,8 +68,9 @@ object Bench {
     * a round verdict by up to 6x; the second (warm) time is the
     * steady-state signal regressions should be adjudicated against.
     * Caches are query-scoped (Harness.run drains them), so the warm pass
-    * rebuilds its own (steady-state service semantics, not a cache-hit
-    * rerun). A query that throws in either pass is `Left`, never timed.
+    * rebuilds its own (not a cache-hit rerun); staged files are reused
+    * when their key matches ([[graft.pipeline.Pipeline.stage]]). A query
+    * that throws in either pass is `Left`, never timed.
     * With `explain`, each query's plan goes to stderr after its passes. */
   private[graft] def battery(spark: SparkSession, sfDir: String,
                              queries: Seq[(String, Harness.Query)],

@@ -7,8 +7,8 @@ import org.apache.spark.storage.StorageLevel
   * `.cache()` inside a builder cannot be unpersisted by the builder
   * itself — the materialization happens later, in the driver action
   * (Verify's parquet write, Bench's count, a spec's collect). Left
-  * alone, those caches live for the session: across a 60-query battery
-  * (or a long-lived service session) they accumulate without bound.
+  * alone, those caches live for the session: across an 81-query
+  * battery they accumulate without bound.
   *
   * Discipline: builders register every cache here instead of calling
   * `.cache()` directly; each driver harness calls [[drain]] once the
@@ -19,8 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * Scope: registrations are keyed by the REGISTERING THREAD, and
   * [[drain]] releases only the calling thread's registrations — so two
   * queries built and drained on different threads (parallel spec
-  * suites, a concurrent service harness) cannot evict each other's
-  * in-flight caches. The invariant this encodes: build → action →
+  * suites) cannot evict each other's in-flight caches. The invariant this encodes: build → action →
   * drain happen on one thread per query, which is how every harness
   * (`graft.Harness.run` for Verify and Bench; specs)
   * drives queries. A builder that registers on one thread but is

@@ -10,20 +10,21 @@ import org.apache.spark.sql.functions._
   * or an entity-bucketed rejoin prunes (nBuckets − 1)/nBuckets of the
   * data at the SCAN (PartitionFilters, verified in SourcesSinksSpec);
   * files are sorted by (entity, ts) so downstream merge scans and
-  * min/max row-group skipping work; `maxRecordsPerFile` bounds file
+  * min/max row-group skipping work; [[MaxRecordsPerFile]] bounds file
   * size independently of partition skew. The bucket function is the
   * same `pmod(hash(entity))` the engine salts and repartitions with —
   * one convention everywhere.
   */
 object Sinks {
 
+  private val MaxRecordsPerFile = 5000000L
+
   def bucketOf(entity: org.apache.spark.sql.Column, nBuckets: Int)
   : org.apache.spark.sql.Column = pmod(hash(entity), lit(nBuckets))
 
   /** Write `df` bucketed by `entityCol` into `path`. */
   def writeBucketed(df: DataFrame, path: String, entityCol: String,
-                    tsCol: String, nBuckets: Int,
-                    maxRecordsPerFile: Long = 5000000L): Unit =
+                    tsCol: String, nBuckets: Int): Unit =
     df.withColumn("bucket", bucketOf(col(entityCol), nBuckets))
       .repartition(col("bucket"))
       // bucket leads the sort: partitionBy's writer requires ordering on
@@ -33,7 +34,7 @@ object Sinks {
       // and (entity, ts) is guaranteed within every file
       .sortWithinPartitions(col("bucket"), col(entityCol), col(tsCol))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       .partitionBy("bucket")
       .parquet(path)
 

@@ -1,9 +1,10 @@
 package graft.queries
 
-import graft.core.{Caches, Scratch, Tables}
+import graft.core.{Caches, Tables}
 import graft.functions.Hash64
 import graft.functions.Vectors.dot
 import graft.operators.Banded
+import graft.pipeline.Pipeline
 import graft.queries.EmbedQueries.{cosSim, normed, top3}
 import graft.queries.SqlGen.{U64, md5u64, signed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -84,38 +85,28 @@ object DedupQueries {
     sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** Per-process dedup feature store (§2.0 sink path): the shingle-hash
-    * and signature stages are materialized ONCE per input dir through
-    * [[graft.core.Sinks.writeBucketed]] and read back by every
-    * subsequent invocation in the process (Bench warm passes, service
-    * mode). This is the 100-TB posture — signatures are a stored,
+  /** Dedup feature store (§2.0 sink path): the shingle-hash and
+    * signature stages are materialized through
+    * [[graft.core.Sinks.writeBucketed]] as two checkpointed stages under
+    * one root per input dir, and every later invocation whose documents
+    * files are unchanged reads them back ([[Pipeline.stage]]'s reuse
+    * rule). This is the 100-TB posture — signatures are a stored,
     * entity-bucketed feature table, not a per-query recompute from raw
     * text — and it replaces the round-4 in-memory `.cache()` of the
     * shingle table, which cannot hold a corpus-scale exploded table.
-    * Single-driver invariant: a (dir, content) pair stages at most once
-    * per process; the staged parquet outlives bench-ladder session
-    * teardowns — staged and re-staged on content change by
-    * [[graft.core.Scratch.keyed]]. */
+    * Signatures derive from the STORED shingles, so the 16-way min-agg
+    * reads the narrow bucketed table instead of re-shingling raw text. */
   private[graft] def minhashStore(spark: SparkSession, dir: String)
   : (DataFrame, DataFrame) = {
-    val root = Scratch.keyed(spark, "dedup_store", dir, "documents") {
-      stageStore(spark, dir, _)
-    }
-    (spark.read.parquet(s"$root/shingles").select(col("doc_id"), col("shh")),
-      spark.read.parquet(s"$root/signatures").drop("bucket"))
-  }
-
-  private def stageStore(spark: SparkSession, dir: String,
-                         p: String): Unit = {
-    val sh = shingleHashes(Tables.documents(spark, dir))
-    graft.core.Sinks.writeBucketed(sh, s"$p/shingles", "doc_id", "shh", 32)
-    // signatures derive from the STORED stage — lineage flows through
-    // the store, and the 16-way min-agg reads the narrow bucketed
-    // table instead of re-shingling raw text
-    val shBack = spark.read.parquet(s"$p/shingles")
+    val root = Pipeline.tmpRoot("dedup_store", dir)
+    def bucketed(ts: String)(df: DataFrame, p: String): Unit =
+      graft.core.Sinks.writeBucketed(df, p, "doc_id", ts, 32)
+    val sh = Pipeline.stage(spark, root, "shingles", bucketed("shh"))(
+      shingleHashes(Tables.documents(spark, dir)))
       .select(col("doc_id"), col("shh"))
-    graft.core.Sinks.writeBucketed(signatures(shBack),
-      s"$p/signatures", "doc_id", "doc_id", 32)
+    val sig = Pipeline.stage(spark, root, "signatures", bucketed("doc_id"))(
+      signatures(sh))
+    (sh, sig.drop("bucket"))
   }
 
   /** MinHash + LSH banding: candidate pairs from band-bucket collisions

@@ -423,7 +423,7 @@ class DedupSpec extends SparkSpec {
     val (sh2, _) = graft.queries.DedupQueries.minhashStore(spark, dir)
     assert(sh2.count() != n1,
       "store served stale shingles after the input dir changed")
-    // unchanged content re-serves the same staged store (memo hit)
+    // unchanged content re-serves the same staged store (resumed)
     val (sh3, _) = graft.queries.DedupQueries.minhashStore(spark, dir)
     assert(sh3.count() == sh2.count())
   }

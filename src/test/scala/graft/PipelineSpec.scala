@@ -2,6 +2,9 @@ package graft
 
 import graft.core.TokenGen
 import graft.pipeline.{FeaturePipeline, Pipeline}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
@@ -14,6 +17,7 @@ import scala.jdk.CollectionConverters._
 class PipelineSpec extends SparkSpec {
 
   import spark.implicits._
+  import PipelineSpec.{cfg, pointRows}
 
   private def tempDir(prefix: String): Path = {
     val p = Files.createTempDirectory(prefix)
@@ -21,21 +25,30 @@ class PipelineSpec extends SparkSpec {
     p
   }
 
-  // --- deterministic small input: 3 entities, gappy non-uniform ts ---
-  private lazy val pointRows: Seq[(String, Long, Double)] = for {
-    e <- 0 until 3
-    doc = TokenGen.makeDoc(e.toLong, skewed = false)
-    toks = doc.tokens.take(120)
-    cum = toks.map(t => 1L + (t % 19)).scanLeft(0L)(_ + _).drop(1)
-    i <- toks.indices
-  } yield (doc.doc_id, cum(i), toks(i).toDouble)
+  private lazy val points = PipelineSpec.points(spark)
 
-  private lazy val points =
-    pointRows.toDF("entity_id", "ts", "value")
+  /** `body`'s result and the job group ids of the jobs it ran. */
+  private def jobGroups[T](body: => T): (T, Seq[String]) = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      (out, groups.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
-  private val cfg = FeaturePipeline.Config(
-    wsize = 60L, wstep = 30L, minWindowLen = 4L,
-    sessionGap = 40L, maxStaleness = Some(240L))
+  private def pipelineRows(c: FeaturePipeline.Config, pts: DataFrame,
+                           checkpoint: Option[String]): Seq[String] =
+    FeaturePipeline.run(spark, pts, "entity_id", "ts", "value", c,
+      checkpoint).orderBy($"entity_id", $"ts").collect().map(_.toString)
+      .toSeq
 
   // --- brute-force oracle (pymhealth slice semantics) ---
   private def oracle: Map[(String, Long), (Long, Option[IndexedSeq[Double]])] = {
@@ -158,27 +171,77 @@ class PipelineSpec extends SparkSpec {
   test("checkpointed stages write per-partition lineage and resume " +
     "without recomputation") {
     val root = tempDir("graft-ckpt").toString
-    var computes = 0
-    def runOnce(): Array[org.apache.spark.sql.Row] = {
-      val df = Pipeline.stage(spark, root, "stageA") {
-        computes += 1
+    def runOnce(): Array[org.apache.spark.sql.Row] =
+      Pipeline.stage(spark, root, "stageA") {
         points.groupBy($"entity_id").agg(count(lit(1)).as("n"),
           sum($"value").as("s"))
-      }
-      df.orderBy($"entity_id").collect()
-    }
-    val first = runOnce()
-    assert(computes == 1)
+      }.orderBy($"entity_id").collect()
+    val (first, ran) = jobGroups(runOnce())
+    assert(ran.contains("graft-stage-stageA"), s"no stage write job: $ran")
     val lineage = Pipeline.readLineage(spark, root, "stageA")
     assert(lineage.isDefined, "lineage sidecar written")
     val js = lineage.get
     assert(js.contains("\"records\":3"), s"3 output rows recorded: $js")
     assert(js.contains("\"partition\""), "per-partition entries present")
 
-    val second = runOnce()
-    assert(computes == 1, "resumed stage must not recompute")
+    val (second, resumed) = jobGroups(runOnce())
+    assert(!resumed.contains("graft-stage-stageA"),
+      "resumed stage must not recompute")
+    assert(Pipeline.readLineage(spark, root, "stageA") == lineage,
+      "resume rewrote the sidecar")
     assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq,
       "resumed output identical")
+
+    // the key cannot see what an RDD holds: such a stage never resumes
+    val fromRdd = spark.createDataFrame(points.rdd, points.schema)
+    Seq(1, 2).foreach { call =>
+      val (_, groups) = jobGroups(Pipeline.stage(spark, root, "stageB")(
+        fromRdd))
+      assert(groups.contains("graft-stage-stageB"),
+        s"call $call of an RDD-backed stage resumed")
+    }
+  }
+
+  test("a reused checkpoint root recomputes after a config change and " +
+    "after an input change: stages resume only on an equal content key") {
+    val root = tempDir("graft-ckpt-key").toString
+    val a = cfg.copy(wsize = 64L, wstep = 32L)
+    val b = a.copy(wsize = 96L)
+    val x10 = pointRows.map { case (e, t, v) => (e, t, v * 10) }
+      .toDF("entity_id", "ts", "value")
+    val runA = pipelineRows(a, points, Some(root))
+    val s1 = Pipeline.readLineage(spark, root, "s1_sessionized")
+
+    val wantB = pipelineRows(b, points, None)
+    assert(wantB != runA, "fixture: wsize 64 -> 96 changed no row")
+    assert(pipelineRows(b, points, Some(root)) == wantB,
+      "the config change resumed stale stages")
+    assert(Pipeline.readLineage(spark, root, "s1_sessionized") == s1,
+      "stage 1 does not read wsize, so it must resume")
+
+    val wantX = pipelineRows(b, x10, None)
+    assert(wantX != wantB, "fixture: values x10 changed no row")
+    assert(pipelineRows(b, x10, Some(root)) == wantX,
+      "the input change resumed stale stages")
+  }
+
+  test("a checkpoint root written by another process and session " +
+    "resumes with no write job and identical rows") {
+    val root = tempDir("graft-xproc").toString
+    val log = new java.io.File(s"$root.log")
+    log.deleteOnExit()
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray ++
+      Seq("-cp", sys.props("java.class.path"),
+        "graft.PipelineCheckpointRun", root)
+    val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log).start().waitFor()
+    assert(exit == 0, s"checkpoint run failed, see $log")
+    val (resumed, groups) = jobGroups(pipelineRows(cfg, points, Some(root)))
+    assert(!groups.exists(_.startsWith("graft-stage-")),
+      s"stages recomputed across processes: $groups")
+    assert(resumed == pipelineRows(cfg, points, None),
+      "rows resumed across processes differ from a fresh run")
   }
 
   test("resume after partial failure: only missing stages recompute") {
@@ -261,5 +324,38 @@ class PipelineSpec extends SparkSpec {
     // and the collisions were real: some (entity, ts) pair repeats
     assert(dupRows.groupBy(r => (r._1, r._2)).exists(_._2.size > 1),
       "fixture produced no duplicate (entity, ts) keys")
+  }
+}
+
+object PipelineSpec {
+
+  // --- deterministic small input: 3 entities, gappy non-uniform ts ---
+  lazy val pointRows: Seq[(String, Long, Double)] = for {
+    e <- 0 until 3
+    doc = TokenGen.makeDoc(e.toLong, skewed = false)
+    toks = doc.tokens.take(120)
+    cum = toks.map(t => 1L + (t % 19)).scanLeft(0L)(_ + _).drop(1)
+    i <- toks.indices
+  } yield (doc.doc_id, cum(i), toks(i).toDouble)
+
+  def points(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    pointRows.toDF("entity_id", "ts", "value")
+  }
+
+  val cfg: FeaturePipeline.Config = FeaturePipeline.Config(
+    wsize = 60L, wstep = 30L, minWindowLen = 4L,
+    sessionGap = 40L, maxStaleness = Some(240L))
+}
+
+/** The first half of PipelineSpec's cross-process resume test: one
+  * checkpointed flagship run over [[PipelineSpec.points]] in a session of
+  * its own, into the root given as the only argument. */
+object PipelineCheckpointRun {
+  def main(args: Array[String]): Unit = {
+    val spark = Harness.session(4, partitions = 4)
+    try Harness.noop(FeaturePipeline.run(spark, PipelineSpec.points(spark),
+      "entity_id", "ts", "value", PipelineSpec.cfg, Some(args(0))))
+    finally spark.stop()
   }
 }

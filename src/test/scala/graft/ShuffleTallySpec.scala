@@ -70,10 +70,10 @@ class ShuffleTallySpec extends SparkSpec {
 
   test("top-shuffle queries stay inside their byte envelopes at sf0.01") {
     val sf = "/root/testdata/sf0.01"
-    // stage the per-process stores OUTSIDE the tally (first invocation
-    // writes the dedup signature store / resume checkpoint tree; the
-    // budget pins the steady-state plan, which is what every later
-    // invocation in a service runs)
+    // stage the stores OUTSIDE the tally (a first invocation may write
+    // the dedup signature store / resume checkpoint tree; the budget
+    // pins the steady-state plan, which is what every later invocation
+    // runs)
     Seq("q_minhash_lsh", "q_feature_pipeline_resume").foreach { name =>
       SparkEntry.queries(name)(spark, sf).write
         .format("noop").mode("overwrite").save()
