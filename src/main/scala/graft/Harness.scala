@@ -12,6 +12,10 @@ object Harness {
 
   type Query = (SparkSession, String) => DataFrame
 
+  /** One gate query: its builder, and the DuckDB SQL its result must
+    * hash-equal on the same parquet tables. */
+  final case class Gate(build: Query, oracle: String)
+
   /** SPARK_GRAFT_CPUS, else the host's available processors. */
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)

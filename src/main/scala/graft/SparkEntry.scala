@@ -1,14 +1,17 @@
 package graft
 
+import graft.Harness.{Gate, Query}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The correctness-gate contract — see SURVEY.md §7.
   *
-  * `queries` is the engine's operator inventory (one entry per implemented
-  * operator family, SURVEY.md §2); `oracleSql` carries the DuckDB-equivalent
-  * SQL that DuckDB runs on the same parquet tables. Column names are
-  * aligned on both sides, and each query rounds its own outputs the
-  * same way its oracle does.
+  * Each query module declares its gate queries once, as name →
+  * [[Harness.Gate]]: the builder and the DuckDB-equivalent SQL that
+  * DuckDB runs on the same parquet tables. Every query has an oracle.
+  * Column names are aligned on both sides, and each query rounds its
+  * own outputs the same way its oracle does. `queries` and `oracleSql`
+  * are the two views of that one merge.
   */
 object SparkEntry {
 
@@ -16,37 +19,30 @@ object SparkEntry {
     * Runs the full north-rule pipeline: sessionize → anchored window
     * features → point-in-time as-of join (one vector per entity×ts). */
   def entry(spark: SparkSession): DataFrame =
-    graft.queries.PipelineQueries.qFeaturePipeline(
-      spark, "/root/testdata/sf0.001")
+    PipelineQueries.qFeaturePipeline(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.all ++
-      graft.queries.TextQueries.all ++
-      graft.queries.CurationQueries.all ++
-      graft.queries.EmbedQueries.all ++
-      graft.queries.SeqQueries.all ++
-      graft.queries.PipelineQueries.all ++
-      graft.queries.DedupQueries.all ++
-      graft.queries.SignalQueries.all ++
-      graft.queries.InertialQueries.all ++
-      graft.queries.FractalQueries.all ++
-      graft.queries.RqaQueries.all ++
-      graft.queries.StreamQueries.all
+  private lazy val gate: Map[String, Gate] = merge(Seq(
+    CoreQueries.gate, TextQueries.gate, CurationQueries.gate,
+    EmbedQueries.gate, SeqQueries.gate, PipelineQueries.gate,
+    DedupQueries.gate, SignalQueries.gate, InertialQueries.gate,
+    FractalQueries.gate, RqaQueries.gate, StreamQueries.gate))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracle ++
-      graft.queries.TextQueries.oracle ++
-      graft.queries.CurationQueries.oracle ++
-      graft.queries.EmbedQueries.oracle ++
-      graft.queries.SeqQueries.oracle ++
-      graft.queries.PipelineQueries.oracle ++
-      graft.queries.DedupQueries.oracle ++
-      graft.queries.SignalQueries.oracle ++
-      graft.queries.InertialQueries.oracle ++
-      graft.queries.FractalQueries.oracle ++
-      graft.queries.RqaQueries.oracle ++
-      graft.queries.StreamQueries.oracle
+  /** The modules' maps as one; a name declared in two modules fails
+    * fast, naming the query, instead of one entry silently winning. */
+  private[graft] def merge(
+      modules: Seq[Map[String, Gate]]): Map[String, Gate] =
+    modules.foldLeft(Map.empty[String, Gate]) { (all, m) =>
+      val twice = all.keySet.intersect(m.keySet)
+      require(twice.isEmpty,
+        s"gate queries declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+      all ++ m
+    }
+
+  /** Each gate query's builder, by name. */
+  lazy val queries: Map[String, Query] =
+    gate.map { case (n, g) => n -> g.build }
+
+  /** Each gate query's DuckDB SQL, by name (same keys as [[queries]]). */
+  lazy val oracleSql: Map[String, String] =
+    gate.map { case (n, g) => n -> g.oracle }
 }

@@ -18,7 +18,8 @@ object Verify {
         .left.foreach(e =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
-    val json = SparkEntry.oracleSql
+    // keys in name order, so two dumps compare byte for byte
+    val json = SparkEntry.oracleSql.toSeq.sorted
       .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

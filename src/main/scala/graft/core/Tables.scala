@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Table access + output-normalization helpers shared by every query.
@@ -35,20 +36,17 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "events")
 
+  /** The per-user event order, ties broken by event_id: what every
+    * oracle's `PARTITION BY user_id ORDER BY ts, event_id` spells.
+    * Callers append their own frames. */
+  val byUserTs: WindowSpec =
+    Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "documents")
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "embeddings")
-
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame =
-    t(spark, sfDir, "lineitem")
-
-  def orders(spark: SparkSession, sfDir: String): DataFrame =
-    t(spark, sfDir, "orders")
-
-  def customer(spark: SparkSession, sfDir: String): DataFrame =
-    t(spark, sfDir, "customer")
 
   /** NaN→NULL for verify outputs (engine-internal math keeps NaN for numpy
     * parity; the DuckDB compare is NULL-based). */

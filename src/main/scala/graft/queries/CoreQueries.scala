@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.core.Tables.b100
 import graft.functions.{Geo, Stats, TimeDomain}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Core windowed/sequential feature queries over the `events` table
   * (entity = user_id, event time = ts, signal = value) — each with a
-  * DuckDB-equivalent oracle in [[oracle]].
+  * DuckDB-equivalent oracle in [[gate]].
   *
   * Cross-engine determinism rule: `value` has exactly 2 decimals, so all
   * moment-family aggregates are computed over b = round(value·100) — an
@@ -27,16 +28,13 @@ import org.apache.spark.sql.types.DecimalType
   */
 object CoreQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val sqrt2 = sqrt(lit(2.0))
 
   /** Per-user rolling 16-row stats (reference rolling_apply family,
     * windows.py:54-119 — multi-agg single scan). */
   def qRollingStats(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir).withColumn("b", b100(col("value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Tables.byUserTs
     val f = w.rowsBetween(-15, 0)
     val s1 = sum(col("b")).over(f)
     val s2 = sum(col("b") * col("b")).over(f)
@@ -62,8 +60,7 @@ object CoreQueries {
     * pt_differentiate bug-for-bug (qrs.py:12-16). */
   def qLagFeatures(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Tables.byUserTs
     val v = col("value")
     ev.select(
       col("user_id"), col("event_id"),
@@ -126,8 +123,7 @@ object CoreQueries {
     * and Lorenz csi/cvi/mcsi. */
   def qHrv(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir).withColumn("b", b100(col("value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Tables.byUserTs
     val d = ev.select(col("user_id"), col("b"),
       (col("b") - lag(col("b"), 1).over(w)).as("dv"),
       (col("b") + lag(col("b"), 1).over(w)).as("pv"))
@@ -277,8 +273,7 @@ object CoreQueries {
         (col("event_id") * 37 % 17000).cast("double") / 100.0 - 85.0)
       .withColumn("lon",
         (col("event_id") * 73 % 36000).cast("double") / 100.0 - 180.0)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Tables.byUserTs
     ev.select(col("user_id"), col("lat"), col("lon"),
       Geo.successiveDistance(col("lat"), col("lon"), w).as("d"))
       .groupBy(col("user_id"))
@@ -312,23 +307,23 @@ object CoreQueries {
       .orderBy(col("event_type"))
   }
 
-  val all: Map[String, Q] = Map(
-    "q_rolling_stats" -> (qRollingStats _),
-    "q_json_props" -> (qJsonProps _),
-    "q_lag_features" -> (qLagFeatures _),
-    "q_stats_profile" -> (qStatsProfile _),
-    "q_hrv" -> (qHrv _),
-    "q_sessionize" -> (qSessionize _),
-    "q_backfill" -> (qBackfill _),
-    "q_asof_join" -> (qAsOfJoin _),
-    "q_anchored_windows" -> (qAnchoredWindows _),
-    "q_count_windows" -> (qCountWindows _),
-    "q_entropy" -> (qEntropy _),
-    "q_geo" -> (qGeo _)
-  )
+  /** q_asof_join's oracle, also q_asof_stream's: the streaming as-of
+    * must reproduce the batch result exactly. */
+  private[queries] val asOfJoinOracle: String =
+    """WITH l AS (
+      |  SELECT user_id, ts, event_id FROM events
+      |  WHERE event_type <> 'error'),
+      |r AS (
+      |  SELECT user_id, ts, value FROM events WHERE event_type = 'error')
+      |SELECT l.user_id, l.event_id,
+      |  r.value AS last_err_value,
+      |  epoch_us(r.ts) AS last_err_us
+      |FROM l ASOF LEFT JOIN r
+      |  ON l.user_id = r.user_id AND l.ts >= r.ts
+      |ORDER BY l.user_id, l.event_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_json_props" ->
+  val gate: Map[String, Gate] = Map(
+    "q_json_props" -> Gate(qJsonProps,
       """WITH e AS (
         |  SELECT event_type,
         |    json_extract_string(props, '$.k')::BIGINT AS k
@@ -336,8 +331,8 @@ object CoreQueries {
         |SELECT event_type, count(*) AS n, count(k) AS n_parsed,
         |  sum(k)::BIGINT AS k_sum, min(k) AS k_min, max(k) AS k_max,
         |  sum(k)::BIGINT / count(k) AS k_avg
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_rolling_stats" ->
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_rolling_stats" -> Gate(qRollingStats,
       """WITH v AS (SELECT user_id, event_id, ts, round(value*100) AS b
         |  FROM events)
         |SELECT user_id, event_id,
@@ -355,8 +350,8 @@ object CoreQueries {
         |  o AS (PARTITION BY user_id ORDER BY ts, event_id),
         |  f AS (o ROWS BETWEEN 15 PRECEDING AND CURRENT ROW),
         |  c AS (o ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_lag_features" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    "q_lag_features" -> Gate(qLagFeatures,
       """SELECT user_id, event_id,
         |  round(value - lag(value) OVER o, 6) AS dv,
         |  round(CASE
@@ -373,8 +368,8 @@ object CoreQueries {
         |    THEN value - lag(value, 8) OVER o ELSE 0.0 END, 6) AS slope_sum8
         |FROM events
         |WINDOW o AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stats_profile" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    "q_stats_profile" -> Gate(qStatsProfile,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    (round(value*100))::BIGINT::HUGEINT AS h
@@ -408,8 +403,8 @@ object CoreQueries {
         |    / ((s2/n - (s1/n)*(s1/n)) * (s2/n - (s1/n)*(s1/n))) END - 3.0, 6)
         |    AS kurt_excess,
         |  sqrt(s2/n - (s1/n)*(s1/n)) / (s1/n) AS coeff_var
-        |FROM a ORDER BY user_id""".stripMargin,
-    "q_hrv" ->
+        |FROM a ORDER BY user_id""".stripMargin),
+    "q_hrv" -> Gate(qHrv,
       """WITH v AS (
         |  SELECT user_id, ts, event_id, round(value*100) AS b FROM events),
         |d AS (
@@ -436,8 +431,8 @@ object CoreQueries {
         |  (sqrt(d2/nd - (d1/nd)*(d1/nd))/100/sqrt(2.0))
         |    * (sqrt(d2/nd - (d1/nd)*(d1/nd))/100/sqrt(2.0))
         |    / (sqrt(q2/nd - (q1/nd)*(q1/nd))/100/sqrt(2.0)) AS lorenz_mcsi
-        |FROM a ORDER BY user_id""".stripMargin,
-    "q_sessionize" ->
+        |FROM a ORDER BY user_id""".stripMargin),
+    "q_sessionize" -> Gate(qSessionize,
       """WITH v AS (
         |  SELECT user_id, ts, event_id, round(value*100) AS b,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
@@ -455,8 +450,8 @@ object CoreQueries {
         |  min(epoch_us(ts)) AS start_us,
         |  max(epoch_us(ts)) AS end_us
         |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q_backfill" ->
+        |ORDER BY user_id, session_id""".stripMargin),
+    "q_backfill" -> Gate(qBackfill,
       """WITH g AS (
         |  SELECT user_id, event_id, ts, value, event_type,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
@@ -474,20 +469,9 @@ object CoreQueries {
         |      ELSE value END IGNORE NULLS)
         |    OVER (PARTITION BY user_id, session_id ORDER BY ts, event_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-        |FROM s ORDER BY user_id, event_id""".stripMargin,
-    "q_asof_join" ->
-      """WITH l AS (
-        |  SELECT user_id, ts, event_id FROM events
-        |  WHERE event_type <> 'error'),
-        |r AS (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'error')
-        |SELECT l.user_id, l.event_id,
-        |  r.value AS last_err_value,
-        |  epoch_us(r.ts) AS last_err_us
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.user_id, l.event_id""".stripMargin,
-    "q_anchored_windows" ->
+        |FROM s ORDER BY user_id, event_id""".stripMargin),
+    "q_asof_join" -> Gate(qAsOfJoin, asOfJoinOracle),
+    "q_anchored_windows" -> Gate(qAnchoredWindows,
       """WITH p AS (
         |  SELECT user_id, epoch_us(ts) AS t, round(value*100) AS b
         |  FROM events),
@@ -513,8 +497,8 @@ object CoreQueries {
         |  CASE WHEN n >= 2 THEN
         |    sqrt(s2/n - (s1/n)*(s1/n))/100 END AS w_std,
         |  CASE WHEN n >= 2 THEN rng/100 END AS w_range
-        |FROM j ORDER BY user_id, window_start""".stripMargin,
-    "q_count_windows" ->
+        |FROM j ORDER BY user_id, window_start""".stripMargin),
+    "q_count_windows" -> Gate(qCountWindows,
       """WITH v AS (
         |  SELECT user_id, event_id, round(value*100) AS b FROM events),
         |s AS (
@@ -532,8 +516,8 @@ object CoreQueries {
         |  sqrt(s2/nf - (s1/nf)*(s1/nf))/100 AS w_std,
         |  mn/100 AS w_min, mx/100 AS w_max
         |FROM s WHERE rn0 % 8 = 0 AND rn0 <= n - 32
-        |ORDER BY user_id, window_index""".stripMargin,
-    "q_entropy" ->
+        |ORDER BY user_id, window_index""".stripMargin),
+    "q_entropy" -> Gate(qEntropy,
       """WITH c AS (
         |  SELECT user_id, event_type, count(*)::DOUBLE AS c
         |  FROM events GROUP BY user_id, event_type),
@@ -543,8 +527,8 @@ object CoreQueries {
         |SELECT user_id,
         |  round(sum(-(c/total + 1e-30) * ln(c/total + 1e-30)), 6)
         |    AS type_entropy
-        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_geo" ->
+        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin),
+    "q_geo" -> Gate(qGeo,
       """WITH p AS (
         |  SELECT user_id, ts, event_id,
         |    ((event_id * 37) % 17000)::DOUBLE / 100.0 - 85.0 AS lat,
@@ -561,6 +545,6 @@ object CoreQueries {
         |  WINDOW o AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, round(sum(dist), 4) AS travel_km,
         |  round(var_pop(lat) + var_pop(lon), 4) AS loc_var
-        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin
+        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin)
   )
 }

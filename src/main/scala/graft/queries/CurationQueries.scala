@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.functions.{Hash64, Kmv}
 import graft.queries.SqlGen.{md5u64, signed}
@@ -67,9 +68,9 @@ object CurationQueries {
     // Hash64.md5_64 domain the oracle replays. lang attaches by joining
     // the narrow doc_id → lang projection (size-based broadcast at gate
     // scale, shuffle equi-join at corpus scale).
-    val (sh, _) = DedupQueries.minhashStore(spark, dir)
-    val langs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"))
+    val docs = Tables.documents(spark, dir)
+    val (sh, _) = DedupQueries.minhashStore(spark, dir, docs)
+    val langs = docs.select(col("doc_id"), col("lang"))
     val hashes = sh.join(langs, "doc_id")
       .select(col("lang"), col("shh").as("h"))
     val nk = size(col("ks"))
@@ -515,23 +516,8 @@ object CurationQueries {
 
   // ---------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sample_split" -> (qSampleSplit _),
-    "q_distinct_kmv" -> (qDistinctKmv _),
-    "q_tfidf_topterms" -> (qTfidfTopterms _),
-    "q_gopher_repetition" -> (qGopherRepetition _),
-    "q_unigram_logprob" -> (qUnigramLogprob _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_source_caps" -> (qSourceCaps _),
-    "q_chunk_dedup" -> (qChunkDedup _),
-    "q_chunk_rewrite" -> (qChunkRewrite _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_bpe_merges" -> (qBpeMerges _),
-    "q_bpe_tokenize" -> (qBpeTokenize _))
-
-  val oracle: Map[String, String] = Map(
-    "q_sample_split" ->
+  val gate: Map[String, Gate] = Map(
+    "q_sample_split" -> Gate(qSampleSplit,
       s"""WITH s AS (
          |  SELECT doc_id, lang,
          |    ${signed(md5u64("'split|' || doc_id::VARCHAR"))} AS h
@@ -541,8 +527,8 @@ object CurationQueries {
          |SELECT doc_id, lang, h, bucket,
          |  CASE WHEN bucket < 80 THEN 'train'
          |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-    "q_distinct_kmv" ->
+         |FROM b ORDER BY doc_id""".stripMargin),
+    "q_distinct_kmv" -> Gate(qDistinctKmv,
       s"""WITH t AS (
          |  SELECT lang, string_split(text, ' ') AS ws FROM documents),
          |g AS (
@@ -560,8 +546,8 @@ object CurationQueries {
          |             // greatest(hu // 4294967296, 1))::BIGINT END
          |    AS est_distinct
          |FROM r WHERE rk = least(nd, $K)
-         |ORDER BY lang""".stripMargin,
-    "q_tfidf_topterms" ->
+         |ORDER BY lang""".stripMargin),
+    "q_tfidf_topterms" -> Gate(qTfidfTopterms,
       """WITH w AS (
         |  SELECT doc_id, u.word AS term
         |  FROM documents, unnest(string_split(text, ' ')) AS u(word)),
@@ -576,8 +562,8 @@ object CurationQueries {
         |    ORDER BY score DESC, term) AS rk
         |  FROM s)
         |SELECT doc_id, rk, term, tf, df, score
-        |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-    "q_gopher_repetition" ->
+        |FROM r WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin),
+    "q_gopher_repetition" -> Gate(qGopherRepetition,
       """WITH tt AS (
         |  SELECT doc_id, lang, string_split(text, ' ') AS ws
         |  FROM documents),
@@ -619,8 +605,8 @@ object CurationQueries {
         |JOIN wt USING (doc_id)
         |LEFT JOIN bn USING (doc_id)
         |LEFT JOIN bt USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q_unigram_logprob" ->
+        |ORDER BY doc_id""".stripMargin),
+    "q_unigram_logprob" -> Gate(qUnigramLogprob,
       """WITH w AS (
         |  SELECT doc_id, lang, u.w AS w
         |  FROM documents, unnest(string_split(text, ' ')) AS u(w)),
@@ -637,8 +623,8 @@ object CurationQueries {
         |  FROM tf JOIN s USING (w) GROUP BY 1, 2)
         |SELECT doc_id, lang, n_words, nll_u6,
         |  nll_u6 / (n_words * 1000000) AS mean_nll
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "q_stratified_sample" ->
+        |FROM d ORDER BY doc_id""".stripMargin),
+    "q_stratified_sample" -> Gate(qStratifiedSample,
       s"""WITH c AS (
          |  SELECT doc_id, lang,
          |    count(*) OVER (PARTITION BY lang) AS c_lang,
@@ -648,8 +634,8 @@ object CurationQueries {
          |        ((h % c_lang) + c_lang) % c_lang AS hmod
          |      FROM c)
          |SELECT doc_id, lang, c_lang, target, hmod
-         |FROM t WHERE hmod < target ORDER BY doc_id""".stripMargin,
-    "q_source_caps" ->
+         |FROM t WHERE hmod < target ORDER BY doc_id""".stripMargin),
+    "q_source_caps" -> Gate(qSourceCaps,
       s"""WITH s AS (
          |  SELECT doc_id, source,
          |    ${md5u64("'cap|' || doc_id::VARCHAR")} AS hu
@@ -664,8 +650,8 @@ object CurationQueries {
          |SELECT s.doc_id, s.source, ${signed("s.hu")} AS h,
          |  ${signed("t.kthu")} AS kth, n.n_src
          |FROM s JOIN t USING (source) JOIN n USING (source)
-         |WHERE s.hu <= t.kthu ORDER BY s.doc_id""".stripMargin,
-    "q_chunk_dedup" ->
+         |WHERE s.hu <= t.kthu ORDER BY s.doc_id""".stripMargin),
+    "q_chunk_dedup" -> Gate(qChunkDedup,
       s"""WITH t AS (
          |  SELECT doc_id, lang, string_split(text, ' ') AS ws
          |  FROM documents),
@@ -688,8 +674,8 @@ object CurationQueries {
          |  CASE WHEN d.n_chunks > 0 THEN d.n_dup / d.n_chunks <= 0.25 END
          |    AS keep
          |FROM t LEFT JOIN d USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q_chunk_rewrite" ->
+         |ORDER BY doc_id""".stripMargin),
+    "q_chunk_rewrite" -> Gate(qChunkRewrite,
       s"""WITH x AS (
          |  SELECT doc_id, lang, string_split(text, ' ') AS ws,
          |    len(string_split(text, ' ')) AS n,
@@ -716,8 +702,8 @@ object CurationQueries {
          |      p -> ws[p*8+1:p*8+8])),
          |    ws[nc*8+1:n]), ' '), '') AS text_clean
          |FROM x LEFT JOIN g USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q_token_budget" ->
+         |ORDER BY doc_id""".stripMargin),
+    "q_token_budget" -> Gate(qTokenBudget,
       s"""WITH d AS (
          |  SELECT doc_id, lang,
          |    len(string_split(text, ' '))::BIGINT AS nt,
@@ -733,8 +719,8 @@ object CurationQueries {
          |  FROM d)
          |SELECT c.doc_id, c.lang, c.nt AS n_tokens, c.cum_before, b.budget
          |FROM c JOIN b USING (lang) WHERE c.cum_before < b.budget
-         |ORDER BY doc_id""".stripMargin,
-    "q_source_overlap" ->
+         |ORDER BY doc_id""".stripMargin),
+    "q_source_overlap" -> Gate(qSourceOverlap,
       s"""WITH x AS (
          |  SELECT source, string_split(text, ' ') AS ws,
          |    len(string_split(text, ' ')) // 8 AS nc
@@ -756,13 +742,13 @@ object CurationQueries {
          |FROM p
          |JOIN n na ON na.source = p.src_a
          |JOIN n nb ON nb.source = p.src_b
-         |ORDER BY src_a, src_b""".stripMargin,
-    "q_bpe_merges" -> (bpeChainSql + """
+         |ORDER BY src_a, src_b""".stripMargin),
+    "q_bpe_merges" -> Gate(qBpeMerges, bpeChainSql + """
          |SELECT 1 AS round, a, b, cnt, a || b AS merged FROM b1
          |UNION ALL SELECT 2, a, b, cnt, a || b FROM b2
          |UNION ALL SELECT 3, a, b, cnt, a || b FROM b3
          |ORDER BY round""".stripMargin),
-    "q_bpe_tokenize" -> (bpeChainSql + """,
+    "q_bpe_tokenize" -> Gate(qBpeTokenize, bpeChainSql + """,
          |tok AS (
          |  SELECT w, len(syms)::BIGINT AS ntw, len(w)::BIGINT AS ncw
          |  FROM s3),
@@ -776,13 +762,14 @@ object CurationQueries {
          |  sum(tok.ncw)::BIGINT AS n_chars,
          |  sum(tok.ncw) / sum(tok.ntw) AS chars_per_token
          |FROM dw JOIN tok USING (w)
-         |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin))
+         |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin)
+  )
 
   /** The 3-round BPE training replay ([[qBpeMerges]] scaladoc): word
     * frequencies, char-split symbol state s0, then per round r the pair
     * counts p_r, the winner b_r, and the rewritten state s_r through
     * the same delimiter-wrapped replace() the engine uses. (lazy:
-    * referenced by `oracle` above.) */
+    * referenced by `gate` above.) */
   private lazy val bpeChainSql: String = {
     def round(r: Int): String =
       s"""p$r AS (

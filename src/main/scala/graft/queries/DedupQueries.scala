@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.{Caches, Tables}
 import graft.functions.Hash64
 import graft.functions.Vectors.dot
@@ -95,14 +96,16 @@ object DedupQueries {
     * text — and it replaces the round-4 in-memory `.cache()` of the
     * shingle table, which cannot hold a corpus-scale exploded table.
     * Signatures derive from the STORED shingles, so the 16-way min-agg
-    * reads the narrow bucketed table instead of re-shingling raw text. */
-  private[graft] def minhashStore(spark: SparkSession, dir: String)
-  : (DataFrame, DataFrame) = {
+    * reads the narrow bucketed table instead of re-shingling raw text.
+    * `docs` is `dir`'s documents table as the caller already built it:
+    * each parquet load costs a schema-inference job. */
+  private[graft] def minhashStore(spark: SparkSession, dir: String,
+                                  docs: DataFrame): (DataFrame, DataFrame) = {
     val root = Pipeline.tmpRoot("dedup_store", dir)
     def bucketed(ts: String)(df: DataFrame, p: String): Unit =
       graft.core.Sinks.writeBucketed(df, p, "doc_id", ts, 32)
     val sh = Pipeline.stage(spark, root, "shingles", bucketed("shh"))(
-      shingleHashes(Tables.documents(spark, dir)))
+      shingleHashes(docs))
       .select(col("doc_id"), col("shh"))
     val sig = Pipeline.stage(spark, root, "signatures", bucketed("doc_id"))(
       signatures(sh))
@@ -114,14 +117,16 @@ object DedupQueries {
     * Jaccard verification on candidates only. Stages come from the
     * materialized store ([[minhashStore]]). */
   def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashVerified(spark, dir).orderBy(col("a_id"), col("b_id"))
+    minhashVerified(spark, dir, Tables.documents(spark, dir))
+      .orderBy(col("a_id"), col("b_id"))
 
   /** The verified pair table WITHOUT the gate's final global sort —
     * q_dup_components consumes this (its edges don't need an order, and
     * the sort would otherwise cost a sample job + range exchange inside
     * the edge checkpoint). */
-  private def minhashVerified(spark: SparkSession, dir: String): DataFrame = {
-    val (sh, sig) = minhashStore(spark, dir)
+  private def minhashVerified(spark: SparkSession, dir: String,
+                              docs: DataFrame): DataFrame = {
+    val (sh, sig) = minhashStore(spark, dir, docs)
     minhashPairsFrom(sh, sig, BucketCap)
   }
 
@@ -139,14 +144,15 @@ object DedupQueries {
     * fixpoint as a recursive reachability CTE, so the gate proves the
     * early-exit result IS the fixpoint on this corpus. */
   def qDupComponents(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
     // cached: minLabel's edge union reads the pair table TWICE (both
     // edge directions) — without the cache the whole verify chain
     // (candidate join + Jaccard verify) executed once per direction
     val pairs = Caches.cachedCompact(
-      minhashVerified(spark, dir).select(col("a_id"), col("b_id")))
+      minhashVerified(spark, dir, docs).select(col("a_id"), col("b_id")))
     val lbl = graft.operators.Components.minLabel(pairs, rounds = 64)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val full = docs.join(lbl.select(col("id").as("doc_id"), col("component")),
+    val full = docs.select(col("doc_id"))
+      .join(lbl.select(col("id").as("doc_id"), col("component")),
         Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("component"))
@@ -475,17 +481,6 @@ object DedupQueries {
     top3(cand, col("cos_sim").desc)
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_minhash_lsh" -> (qMinhashLsh _),
-    "q_dup_components" -> (qDupComponents _),
-    "q_simhash" -> (qSimhash _),
-    "q_simhash64" -> (qSimhash64 _),
-    "q_embed_neardup" -> (qEmbedNeardup _),
-    "q_embed_neardup_lsh" -> (qEmbedNeardupLsh _),
-    "q_ann_lsh_buckets" -> (qAnnLshBuckets _),
-    "q_ann_lsh_topk" -> (qAnnLshTopk _)
-  )
-
   // ---------------------------------------------------------------------
   // DuckDB oracles
   // ---------------------------------------------------------------------
@@ -577,11 +572,11 @@ object DedupQueries {
         |    >= 0.5)""".stripMargin
     }
 
-  val oracle: Map[String, String] = Map(
-    "q_minhash_lsh" -> (minhashPairsSql + """
+  val gate: Map[String, Gate] = Map(
+    "q_minhash_lsh" -> Gate(qMinhashLsh, minhashPairsSql + """
       |SELECT a_id, b_id, inter, nsa, nsb, jaccard FROM pairs
       |ORDER BY a_id, b_id""".stripMargin),
-    "q_dup_components" -> (minhashPairsSql + """,
+    "q_dup_components" -> Gate(qDupComponents, minhashPairsSql + """,
       |edges AS MATERIALIZED (
       |  SELECT a_id AS s, b_id AS d FROM pairs
       |  UNION SELECT b_id, a_id FROM pairs),
@@ -599,7 +594,7 @@ object DedupQueries {
       |  (f.doc_id = f.component) AS is_rep
       |FROM full_lbl f JOIN cs c USING (component)
       |ORDER BY doc_id""".stripMargin),
-    "q_simhash" -> {
+    "q_simhash" -> Gate(qSimhash, {
       val bitSums = (0 until 16).map(j =>
         s"sum(CASE WHEN ascii(substr(md5(w), ${j + 1}, 1)) % 2 = 1 " +
           s"THEN 1 ELSE -1 END) AS s$j").mkString(",\n        |    ")
@@ -642,8 +637,8 @@ object DedupQueries {
         |  WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
         |  UNION ALL SELECT a_id, b_id, ha, hb, hamming FROM links)
         |ORDER BY a_id, b_id""".stripMargin
-    },
-    "q_simhash64" -> {
+    }),
+    "q_simhash64" -> Gate(qSimhash64, {
       // bit j of the word's 64-bit hash, occurrence-weighted sign sums;
       // the fingerprint assembles in unsigned HUGEINT and converts to
       // the signed BIGINT Spark carries
@@ -697,8 +692,8 @@ object DedupQueries {
         |  WHERE bit_count(xor(x.simhash, y.simhash)) <= 3
         |  UNION ALL SELECT a_id, b_id, ha, hb, hamming FROM links)
         |ORDER BY a_id, b_id""".stripMargin
-    },
-    "q_embed_neardup" ->
+    }),
+    "q_embed_neardup" -> Gate(qEmbedNeardup,
       s"""WITH e AS (
         |  SELECT vec_id, embedding FROM embeddings
         |  WHERE vec_id < $NeardupCap)
@@ -719,8 +714,8 @@ object DedupQueries {
         |        x -> x::DOUBLE * x::DOUBLE)))
         |      * sqrt(list_sum(list_transform(b.embedding,
         |        x -> x::DOUBLE * x::DOUBLE)))), 6) >= 0.9
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q_embed_neardup_lsh" -> {
+        |ORDER BY a_id, b_id""".stripMargin),
+    "q_embed_neardup_lsh" -> Gate(qEmbedNeardupLsh, {
       // the 16 per-table bucket ids as paired unnests; each bucket =
       // 16 sign-bit planes written as the same ± term sequence the
       // native SparseSignedDotExpr evaluates (identical float adds)
@@ -774,8 +769,8 @@ object DedupQueries {
         |FROM cand
         |UNION ALL SELECT a_id, b_id, cos_sim, is_dup FROM links
         |ORDER BY a_id, b_id""".stripMargin
-    },
-    "q_ann_lsh_topk" -> {
+    }),
+    "q_ann_lsh_topk" -> Gate(qAnnLshTopk, {
       val bucketExprs = (0 until LshTables).map { t =>
         (0 until LshPlanes).map { i =>
           val proj = planeTerms(t, i).map { case (d, s) =>
@@ -811,8 +806,8 @@ object DedupQueries {
         |  FROM cand)
         |SELECT a_id, b_id, cos_sim, rank FROM r WHERE rank <= 3
         |ORDER BY a_id, rank""".stripMargin
-    },
-    "q_ann_lsh_buckets" -> {
+    }),
+    "q_ann_lsh_buckets" -> Gate(qAnnLshBuckets, {
       val planeExprs = (0 until 8).map { i =>
         val signs = (0 until 64).map { d =>
           if (((i.toLong * 2654435761L + d.toLong * 40503L) % 97) < 48)
@@ -831,6 +826,6 @@ object DedupQueries {
         |SELECT bucket::BIGINT AS bucket, count(*) AS n,
         |  round(avg(nrm), 6) AS mean_norm
         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
-    }
+    })
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.{Caches, Tables}
 import graft.functions.Vectors.{dot, l2DistSq}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -260,16 +261,6 @@ object EmbedQueries {
     top3(adc, col("adc_d2_u6"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_embed_topk" -> (qEmbedTopk _),
-    "q_embed_label_stats" -> (qEmbedLabelStats _),
-    "q_ivf_cells" -> (qIvfCells _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_pq_codes" -> (qPqCodes _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_ivfpq" -> (qAnnIvfPq _)
-  )
-
   /** Σ (x_i − c_i)² as the same left-to-right fold as the native
     * l2DistSq, so the argmin (tie → cid) is bit-exact. */
   private def l2Sql(x: String, c: String): String =
@@ -338,11 +329,11 @@ object EmbedQueries {
       |  FROM ${p}es e JOIN ${p}c1 c ON c.sub = e.sub
       |  WHERE e.vec_id < 20)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_ivf_cells" -> (ivfChain + """
+  val gate: Map[String, Gate] = Map(
+    "q_ivf_cells" -> Gate(qIvfCells, ivfChain + """
       |SELECT vec_id, cell, round(d2 + 1e-9, 6) AS d2
       |FROM a2 ORDER BY vec_id""".stripMargin),
-    "q_ann_ivf" -> (ivfChain + ",\n" + ivfCand + """,
+    "q_ann_ivf" -> Gate(qAnnIvf, ivfChain + ",\n" + ivfCand + """,
       |sc AS (
       |  SELECT c.a_id, c.b_id,
       |    round(
@@ -363,7 +354,7 @@ object EmbedQueries {
       |  FROM sc)
       |SELECT a_id, b_id, cos_sim, rank FROM rk WHERE rank <= 3
       |ORDER BY a_id, rank""".stripMargin),
-    "q_embed_topk" ->
+    "q_embed_topk" -> Gate(qEmbedTopk,
       """WITH q AS (
         |  SELECT vec_id AS a_id, embedding AS ea FROM embeddings
         |  WHERE vec_id < 20),
@@ -383,14 +374,14 @@ object EmbedQueries {
         |      ORDER BY cos_sim DESC, b_id) AS rank
         |  FROM s)
         |SELECT a_id, b_id, cos_sim, rank FROM r WHERE rank <= 3
-        |ORDER BY a_id, rank""".stripMargin,
-    "q_embed_label_stats" ->
+        |ORDER BY a_id, rank""".stripMargin),
+    "q_embed_label_stats" -> Gate(qEmbedLabelStats,
       """SELECT label, count(*) AS n,
         |  round(avg(sqrt(list_sum(list_transform(embedding,
         |    x -> x::DOUBLE * x::DOUBLE)))), 6) AS mean_norm,
         |  round(avg(embedding[1]::DOUBLE), 6) AS mean_c1
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-    "q_pq_codes" -> (pqChain + """
+        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin),
+    "q_pq_codes" -> Gate(qPqCodes, pqChain + """
       |SELECT vec_id,
       |  max(CASE WHEN sub = 0 THEN code END) AS code0,
       |  max(CASE WHEN sub = 1 THEN code END) AS code1,
@@ -398,7 +389,7 @@ object EmbedQueries {
       |  max(CASE WHEN sub = 3 THEN code END) AS code3,
       |  sum(round(d2 * 1000000 + 0.001, 0)::BIGINT)::BIGINT AS recon_d2_u6
       |FROM a2 GROUP BY vec_id ORDER BY vec_id""".stripMargin),
-    "q_ann_pq" -> (pqChain + ",\n" + pqLutCte("") + """,
+    "q_ann_pq" -> Gate(qAnnPq, pqChain + ",\n" + pqLutCte("") + """,
       |adc AS (
       |  SELECT l.a_id, f.vec_id AS b_id,
       |    sum(l.ld2)::BIGINT AS adc_d2_u6
@@ -412,7 +403,8 @@ object EmbedQueries {
       |  FROM adc)
       |SELECT a_id, b_id, adc_d2_u6, rank FROM rkd WHERE rank <= 3
       |ORDER BY a_id, rank""".stripMargin),
-    "q_ann_ivfpq" -> (ivfChain + ",\n" + pqCtes("pq_") + ",\n" + ivfCand +
+    "q_ann_ivfpq" -> Gate(qAnnIvfPq,
+      ivfChain + ",\n" + pqCtes("pq_") + ",\n" + ivfCand +
       ",\n" + pqLutCte("pq_") + """,
       |adc AS (
       |  SELECT cd.a_id, cd.b_id, sum(l.ld2)::BIGINT AS adc_d2_u6
@@ -474,7 +466,7 @@ object EmbedQueries {
       |    FROM ${p}s2) WHERE rk = 1)""".stripMargin
 
   /** Standalone PQ replay: `ed` + the unprefixed CTE list. (lazy:
-    * referenced by `oracle` above; object-init order would otherwise
+    * referenced by `gate` above; object-init order would otherwise
     * read it before assignment) */
   private lazy val pqChain: String =
     """WITH ed AS (

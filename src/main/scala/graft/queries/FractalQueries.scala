@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.operators.Dfa
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,11 +18,9 @@ object FractalQueries {
   private val Sizes = Seq(4, 8, 16, 32)
 
   def qDfa(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val pts = Tables.events(spark, dir)
       .withColumn("b", Tables.b100(col("value")))
-      .withColumn("i", (row_number().over(w) - 1).cast("long"))
+      .withColumn("i", (row_number().over(Tables.byUserTs) - 1).cast("long"))
       .select(col("user_id").as("entity_id"), col("i").as("pos"),
         col("b"))
     Dfa.exponent(pts, "entity_id", "pos", "b", Sizes)
@@ -32,10 +30,8 @@ object FractalQueries {
       .orderBy(col("user_id"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map("q_dfa" -> (qDfa _))
-
-  val oracle: Map[String, String] = Map(
-    "q_dfa" -> {
+  val gate: Map[String, Gate] = Map(
+    "q_dfa" -> Gate(qDfa, {
       // NB: DuckDB `/` on integers is FLOAT division and ::BIGINT casts
       // ROUND — `//` is the floor division the window index needs.
       val branches = Sizes.map { w =>
@@ -75,6 +71,6 @@ object FractalQueries {
         |  round(regr_slope(ln(f), ln(w::DOUBLE)), 6) AS dfa_exponent,
         |  count(*) AS n_window_sizes
         |FROM fw GROUP BY user_id ORDER BY user_id""".stripMargin
-    }
+    })
   )
 }

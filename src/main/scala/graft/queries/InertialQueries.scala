@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.api.MHealth
 import graft.core.Tables
 import graft.functions.{Accel, Stats}
@@ -87,10 +88,8 @@ object InertialQueries {
   /** The tri-axial series per user at row-number positions: (uid, rn,
     * x, y, z), the deterministic axis values of [[qAccel]]. */
   private def axes(spark: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("rn", row_number().over(Tables.byUserTs).cast("long"))
       .select(col("user_id").cast("string").as("uid"), col("rn"),
         ((col("event_id") * 31 % 2001) / 1000.0 - 1.0).as("x"),
         ((col("event_id") * 57 % 2001) / 1000.0 - 1.0).as("y"),
@@ -164,14 +163,6 @@ object InertialQueries {
       .select(col("user_id"), col("event_id"), col("cluster"),
         col("is_core"))
       .orderBy(col("user_id"), col("event_id"))
-
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_accel" -> (qAccel _),
-    "q_location_clusters" -> (qLocationClusters _),
-    "q_location_dbscan" -> (qLocationDbscan _),
-    "q_linear_filter" -> (qLinearFilter _),
-    "q_gravity_filter" -> (qGravityFilter _)
-  )
 
   /** The stacked tri-axial series as the filtfilt chain's sig contract:
     * (user:axis) entities, 0-based position i, deterministic axis values
@@ -261,13 +252,13 @@ object InertialQueries {
       |ORDER BY p.user_id, p.event_id""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_location_dbscan" -> dbscanOracle,
-    "q_linear_filter" -> axisFilterOracle(
-      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Highpass), "linear"),
-    "q_gravity_filter" -> axisFilterOracle(
-      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Lowpass), "gravity"),
-    "q_accel" ->
+  val gate: Map[String, Gate] = Map(
+    "q_location_dbscan" -> Gate(qLocationDbscan, dbscanOracle),
+    "q_linear_filter" -> Gate(qLinearFilter, axisFilterOracle(
+      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Highpass), "linear")),
+    "q_gravity_filter" -> Gate(qGravityFilter, axisFilterOracle(
+      Butterworth.design(5, Seq(0.5 / 64), Butterworth.Lowpass), "gravity")),
+    "q_accel" -> Gate(qAccel,
       """WITH ev AS (
         |  SELECT user_id, event_id,
         |    ((event_id * 31) % 2001) / 1000.0 - 1.0 AS ax,
@@ -287,8 +278,8 @@ object InertialQueries {
         |  pu.magnitude_dot
         |FROM ev JOIN pu ON pu.user_id = ev.user_id
         |WHERE event_id % 7 = 0
-        |ORDER BY ev.user_id, event_id""".stripMargin,
-    "q_location_clusters" ->
+        |ORDER BY ev.user_id, event_id""".stripMargin),
+    "q_location_clusters" -> Gate(qLocationClusters,
       """WITH p AS (
         |  SELECT user_id,
         |    (event_id * 37) % 17000 AS li,
@@ -326,6 +317,6 @@ object InertialQueries {
         |SELECT lv.user_id, location_variance, n_points, e.n_clusters,
         |  cluster_entropy, norm_cluster_entropy
         |FROM lv JOIN e ON e.user_id = lv.user_id
-        |ORDER BY lv.user_id""".stripMargin
+        |ORDER BY lv.user_id""".stripMargin)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.pipeline.{FeaturePipeline, Pipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -73,14 +74,12 @@ object PipelineQueries {
     runPipeline(spark, dir, Some(root))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_feature_pipeline" -> (qFeaturePipeline _),
-    "q_feature_pipeline_resume" -> (qFeaturePipelineResume _))
-
   // the resume query must produce the IDENTICAL result — same oracle
-  val oracle: Map[String, String] = Map(
-    "q_feature_pipeline_resume" -> pipelineOracle,
-    "q_feature_pipeline" -> pipelineOracle)
+  val gate: Map[String, Gate] = Map(
+    "q_feature_pipeline_resume" ->
+      Gate(qFeaturePipelineResume, pipelineOracle),
+    "q_feature_pipeline" -> Gate(qFeaturePipeline, pipelineOracle)
+  )
 
   private lazy val pipelineOracle: String =
       s"""WITH p AS (

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.functions.Stats
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -29,11 +30,9 @@ object RqaQueries {
   private val MinLen = 2
 
   def qRqaLengths(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val pts = Tables.events(spark, dir)
       .select(col("user_id"), Tables.b100(col("value")).as("b"),
-        row_number().over(w).as("rn"))
+        row_number().over(Tables.byUserTs).as("rn"))
       .where(col("rn") <= N)
     val a = pts.select(col("user_id"), col("rn").as("i"), col("b").as("bi"))
     val b = pts.select(col("user_id").as("u2"), col("rn").as("j"),
@@ -111,11 +110,8 @@ object RqaQueries {
       .orderBy(col("user_id"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_rqa_lengths" -> (qRqaLengths _))
-
-  val oracle: Map[String, String] = Map(
-    "q_rqa_lengths" ->
+  val gate: Map[String, Gate] = Map(
+    "q_rqa_lengths" -> Gate(qRqaLengths,
       s"""WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -180,4 +176,5 @@ object RqaQueries {
         |LEFT JOIN lam ON lam.user_id = ds.user_id
         |JOIN nm ON nm.user_id = ds.user_id
         |ORDER BY ds.user_id""".stripMargin)
+  )
 }

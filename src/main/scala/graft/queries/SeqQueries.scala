@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.core.Tables.b100
 import graft.functions.Geo
@@ -49,13 +50,11 @@ object SeqQueries {
     * to decimal(38,0) / HUGEINT on both engines to keep the hash parity
     * (the DuckDB side already aggregates in HUGEINT). */
   def qO1fit(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val ev = Tables.events(spark, dir)
       .withColumn("b", b100(col("value")))
       .withColumn("y2", col("b") * col("b"))
       .withColumn("y3", abs(col("b") - 25000))
-      .withColumn("x", row_number().over(w).cast("double"))
+      .withColumn("x", row_number().over(Tables.byUserTs).cast("double"))
     val agg = ev.groupBy(col("user_id")).agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("x") * col("x")).as("sxx"),
@@ -126,8 +125,7 @@ object SeqQueries {
     * integer-scaled central-difference gradients (2·grad stays integral:
     * edges 2·one-sided, interior lead−lag). */
   def qTimedom(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = Tables.byUserTs
     def grad2(c: Column): Column = {
       val p = lag(c, 1).over(w)
       val nx = lead(c, 1).over(w)
@@ -175,13 +173,11 @@ object SeqQueries {
     * with a diagonal neighbor. Windowed theta self-join — pair rows,
     * never a materialized matrix. */
   def qRqa(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     // cached: both self-join sides and the nPts agg consume pts — the
     // events scan + rank window otherwise run three times
     val pts = graft.core.Caches.cached(Tables.events(spark, dir)
       .select(col("user_id"), b100(col("value")).as("b"),
-        row_number().over(w).as("rn"))
+        row_number().over(Tables.byUserTs).as("rn"))
       .where(col("rn") <= 64))
     val a = pts.select(col("user_id"), col("rn").as("i"), col("b").as("bi"))
     val b = pts.select(col("user_id").as("u2"), col("rn").as("j"),
@@ -269,19 +265,8 @@ object SeqQueries {
       .orderBy(col("u1"), col("u2"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_geo_pairs" -> (qGeoPairs _),
-    "q_mode" -> (qMode _),
-    "q_o1fit" -> (qO1fit _),
-    "q_hurst" -> (qHurst _),
-    "q_sdann" -> (qSdann _),
-    "q_timedom" -> (qTimedom _),
-    "q_rqa" -> (qRqa _),
-    "q_home_stay" -> (qHomeStay _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_geo_pairs" ->
+  val gate: Map[String, Gate] = Map(
+    "q_geo_pairs" -> Gate(qGeoPairs,
       """WITH p AS (
         |  SELECT user_id, min(event_id) AS eid FROM events
         |  GROUP BY user_id),
@@ -297,8 +282,8 @@ object SeqQueries {
         |      * sin((radians(b.lon) - radians(a.lon)) / 2.0)^2)), 4)
         |    AS dist_km
         |FROM c a JOIN c b ON a.user_id < b.user_id
-        |ORDER BY u1, u2""".stripMargin,
-    "q_mode" ->
+        |ORDER BY u1, u2""".stripMargin),
+    "q_mode" -> Gate(qMode,
       """WITH c AS (
         |  SELECT user_id, (round(value*100))::BIGINT AS bi, count(*) AS cnt
         |  FROM events GROUP BY 1, 2),
@@ -308,8 +293,8 @@ object SeqQueries {
         |      ORDER BY cnt DESC, bi ASC) AS rk
         |  FROM c)
         |SELECT user_id, bi / 100.0 AS mode_value, cnt AS mode_count
-        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin,
-    "q_o1fit" ->
+        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin),
+    "q_o1fit" -> Gate(qO1fit,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    round(value*100) * round(value*100) AS y2,
@@ -333,8 +318,8 @@ object SeqQueries {
         |  (n*sxy3 - sx*sy3) / (n*sxx - sx*sx) AS slope_absdev,
         |  (sy3 - (n*sxy3 - sx*sy3) / (n*sxx - sx*sx) * sx) / n
         |    AS intercept_absdev
-        |FROM a ORDER BY user_id""".stripMargin,
-    "q_hurst" ->
+        |FROM a ORDER BY user_id""".stripMargin),
+    "q_hurst" -> Gate(qHurst,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -359,8 +344,8 @@ object SeqQueries {
         |  FROM tau GROUP BY user_id)
         |SELECT user_id,
         |  round((k*sxy - sx*sy) / (k*sxx - sx*sx) * 2.0, 6) AS hurst
-        |FROM fit ORDER BY user_id""".stripMargin,
-    "q_sdann" ->
+        |FROM fit ORDER BY user_id""".stripMargin),
+    "q_sdann" -> Gate(qSdann,
       """WITH v AS (
         |  SELECT user_id, epoch_us(ts) AS t, round(value*100) AS b
         |  FROM events),
@@ -378,8 +363,8 @@ object SeqQueries {
         |  round(sqrt(greatest(avg(m*m) - avg(m)*avg(m), 0.0)) / 100, 6) AS sdann,
         |  round(avg(sd) / 100, 6) AS sdnni,
         |  count(*) AS n_segments
-        |FROM segs GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_timedom" ->
+        |FROM segs GROUP BY user_id ORDER BY user_id""".stripMargin),
+    "q_timedom" -> Gate(qTimedom,
       """WITH v AS (
         |  SELECT user_id, ts, event_id, round(value*100) AS b,
         |    CASE WHEN abs(round(value*100) - 25000) <= 10000 THEN 0.0
@@ -417,8 +402,8 @@ object SeqQueries {
         |  sqrt(((u2/n - (u1/n)*(u1/n))/16) / ((t2/n - (t1/n)*(t1/n))/4))
         |    / sqrt(((t2/n - (t1/n)*(t1/n))/4) / (s2/n - (s1/n)*(s1/n)))
         |    AS hjorth_complexity
-        |FROM a ORDER BY user_id""".stripMargin,
-    "q_rqa" ->
+        |FROM a ORDER BY user_id""".stripMargin),
+    "q_rqa" -> Gate(qRqa,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -445,8 +430,8 @@ object SeqQueries {
         |FROM npts
         |LEFT JOIN np ON np.user_id = npts.user_id
         |LEFT JOIN nc ON nc.user_id = npts.user_id
-        |ORDER BY npts.user_id""".stripMargin,
-    "q_home_stay" ->
+        |ORDER BY npts.user_id""".stripMargin),
+    "q_home_stay" -> Gate(qHomeStay,
       """WITH p AS (
         |  SELECT user_id, ts,
         |    ((event_id * 37) % 17000)::DOUBLE / 100.0 - 85.0 AS lat,
@@ -467,6 +452,6 @@ object SeqQueries {
         |  FROM p JOIN night ON night.user_id = p.user_id)
         |SELECT user_id, min(home_lat) AS home_lat, min(home_lon) AS home_lon,
         |  sum(near) / count(*)::DOUBLE AS prop_home_stay
-        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin
+        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin)
   )
 }

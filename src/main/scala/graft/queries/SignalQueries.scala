@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.api.MHealth
 import graft.core.Tables
 import graft.core.Tables.b100
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * O(n²) entropy). Filters, detectors and beat quality run through
   * [[graft.api.MHealth]]; sampen and the two spectra keep their own
   * [[PerEntity]] scans. All 12 are hash-checked against DuckDB oracles
-  * ([[oracle]]); SignalSpec covers the kernels' numerics.
+  * ([[gate]]); SignalSpec covers the kernels' numerics.
   */
 object SignalQueries {
 
@@ -22,10 +23,8 @@ object SignalQueries {
   /** events as a per-user `value` series at row-number positions `t`. */
   private def series(spark: SparkSession, dir: String,
                      value: Column = col("value")): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("rn", row_number().over(Tables.byUserTs).cast("long"))
       .select(col("user_id").cast("string").as("entity_id"),
         col("rn").as("t"), value.as("value"))
   }
@@ -249,21 +248,6 @@ object SignalQueries {
         "1" -> "peak_freq_1_8", "2" -> "rel_power_1_4"))
       .orderBy(col("entity_id"))
   }
-
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_filtfilt" -> (qFiltfilt _),
-    "q_pt_filter" -> (qPtFilter _),
-    "q_ht_filter" -> (qHtFilter _),
-    "q_rpeaks" -> (qRpeaks _),
-    "q_pulse_onsets" -> (qPulseOnsets _),
-    "q_media_resize" -> (qMediaResize _),
-    "q_sampen" -> (qSampen _),
-    "q_power_band" -> (qPowerBand _),
-    "q_hrv_freq" -> (qHrvFreq _),
-    "q_quality" -> (qQuality _),
-    "q_quality_bi" -> (qQualityBi _),
-    "q_media_features" -> (qMediaFeatures _)
-  )
 
   /** DuckDB oracles. q_sampen is an exact pair count (template self-join
     * with the Chebyshev predicate on the bit-identical r = 0.2σ);
@@ -582,15 +566,15 @@ object SignalQueries {
        |  mean_pooled, max_pooled, pool_checksum
        |FROM feats ORDER BY doc_id, frame""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_filtfilt" -> filtfiltOracle,
-    "q_pt_filter" -> ptFilterOracle,
-    "q_ht_filter" -> htFilterOracle,
-    "q_rpeaks" -> rpeaksOracle,
-    "q_pulse_onsets" -> pulseOracle,
-    "q_media_features" -> mediaOracle,
-    "q_media_resize" -> mediaResizeOracle,
-    "q_sampen" ->
+  val gate: Map[String, Gate] = Map(
+    "q_filtfilt" -> Gate(qFiltfilt, filtfiltOracle),
+    "q_pt_filter" -> Gate(qPtFilter, ptFilterOracle),
+    "q_ht_filter" -> Gate(qHtFilter, htFilterOracle),
+    "q_rpeaks" -> Gate(qRpeaks, rpeaksOracle),
+    "q_pulse_onsets" -> Gate(qPulseOnsets, pulseOracle),
+    "q_media_features" -> Gate(qMediaFeatures, mediaOracle),
+    "q_media_resize" -> Gate(qMediaResize, mediaResizeOracle),
+    "q_sampen" -> Gate(qSampen,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -622,8 +606,8 @@ object SignalQueries {
         |  CASE WHEN p.aa > 0 AND p.bb > 0
         |    THEN round(-ln(p.aa::DOUBLE / p.bb), 6) END AS sampen
         |FROM st LEFT JOIN p ON p.user_id = st.user_id
-        |ORDER BY entity_id""".stripMargin,
-    "q_power_band" ->
+        |ORDER BY entity_id""".stripMargin),
+    "q_power_band" -> Gate(qPowerBand,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -658,7 +642,7 @@ object SignalQueries {
         |  round(band / total, 4) AS rel_power,
         |  round(total, 4) AS total_power
         |FROM agg JOIN pk USING (user_id)
-        |ORDER BY entity_id""".stripMargin,
+        |ORDER BY entity_id""".stripMargin),
     // Ring-buffer closed form: before computing beat q, writes have
     // happened for beat indices k in [1, W] with W = q-1 (interior) or
     // P-2 (the last beat, computed after the loop); slot s therefore
@@ -671,7 +655,7 @@ object SignalQueries {
     // truncated users beyond 8191 events at large scale factors.
     // All slices are zero-padded ±4 windows around position 2·p+1; means
     // divide exact integer sums by 8, so rvv/sxy/yvv are exact.
-    "q_quality" ->
+    "q_quality" -> Gate(qQuality,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -736,7 +720,7 @@ object SignalQueries {
         |SELECT user_id::VARCHAR AS entity_id, bi AS peak_idx,
         |  round(sum(c) / count(*) + 1e-9, 6) + 0.0 AS quality
         |FROM corr GROUP BY user_id, bi
-        |ORDER BY entity_id, peak_idx""".stripMargin,
+        |ORDER BY entity_id, peak_idx""".stripMargin),
     // Bidirectional variant: beats run over [11, B) with B the first
     // beat whose slice clips the signal; prev slot s holds the latest
     // processed beat ≡ s (mod 12), else the all-zero row (corr 0, NOT
@@ -748,7 +732,7 @@ object SignalQueries {
     // quality_bi = max(prev mean, succ mean) over 12 slots each.
     // NB: DuckDB `//` truncates toward zero for negative numerators —
     // the (bi−1−s) and (T−13−s) quotients are guarded non-negative.
-    "q_quality_bi" ->
+    "q_quality_bi" -> Gate(qQualityBi,
       """WITH v AS (
         |  SELECT user_id, round(value*100) AS b,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -842,8 +826,8 @@ object SignalQueries {
         |SELECT b.user_id::VARCHAR AS entity_id, b.bi AS peak_idx,
         |  qb.q AS quality_bi
         |FROM beats b LEFT JOIN qb ON qb.user_id = b.user_id AND qb.bi = b.bi
-        |ORDER BY entity_id, peak_idx""".stripMargin,
-    "q_hrv_freq" ->
+        |ORDER BY entity_id, peak_idx""".stripMargin),
+    "q_hrv_freq" -> Gate(qHrvFreq,
       """WITH v AS (
         |  SELECT user_id, epoch_us(ts) AS t, round(value*100) AS b
         |  FROM events),
@@ -881,6 +865,6 @@ object SignalQueries {
         |  round(pk.peak_f, 4) AS peak_freq_1_8,
         |  round(band / total, 4) AS rel_power_1_4
         |FROM agg JOIN pk USING (user_id)
-        |ORDER BY entity_id""".stripMargin
+        |ORDER BY entity_id""".stripMargin)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -200,16 +201,13 @@ object StreamQueries {
       .orderBy(col("user_id"), col("event_id"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_dedup_stream" -> (qDedupStream _),
-    "q_asof_stream" -> (qAsofStream _))
-
   // identical semantics to the batch duals — deliberately the same
   // oracle texts: the streaming engine must reproduce them exactly
-  val oracle: Map[String, String] = Map(
-    "q_dedup_stream" ->
+  val gate: Map[String, Gate] = Map(
+    "q_dedup_stream" -> Gate(qDedupStream,
       """SELECT md5(text) AS content_hash, count(*) AS n_copies,
         |  min(doc_id) AS rep_doc
-        |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin,
-    "q_asof_stream" -> CoreQueries.oracle("q_asof_join"))
+        |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin),
+    "q_asof_stream" -> Gate(qAsofStream, CoreQueries.asOfJoinOracle)
+  )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Harness.Gate
 import graft.core.Tables
 import graft.operators.Windows
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -268,21 +269,8 @@ object TextQueries {
     ).orderBy(col("doc_id"))
   }
 
-  val all: Map[String, CoreQueries.Q] = Map(
-    "q_tokens_build" -> (qTokensBuild _),
-    "q_tokens_window" -> (qTokensWindow _),
-    "q_tokens_bigrams" -> (qTokensBigrams _),
-    "q_doc_fingerprint" -> (qDocFingerprint _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_word_jaccard" -> (qWordJaccard _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_lang_id" -> (qLangId _),
-    "q_multimodal_meta" -> (qMultimodalMeta _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_tokens_build" ->
+  val gate: Map[String, Gate] = Map(
+    "q_tokens_build" -> Gate(qTokensBuild,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_transform(string_split(text, ' '), w -> length(w)) AS tokens
@@ -292,8 +280,8 @@ object TextQueries {
         |  list_max(tokens) AS tok_max,
         |  tokens[1] AS tok_first,
         |  tokens[len(tokens)] AS tok_last
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_tokens_window" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    "q_tokens_window" -> Gate(qTokensWindow,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_transform(string_split(text, ' '), w -> length(w)) AS tokens
@@ -311,8 +299,8 @@ object TextQueries {
         |  WINDOW f AS (PARTITION BY doc_id ORDER BY pos
         |    ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
         |SELECT * FROM s WHERE (pos - 1) % 4 = 0
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q_tokens_bigrams" ->
+        |ORDER BY doc_id, pos""".stripMargin),
+    "q_tokens_bigrams" -> Gate(qTokensBigrams,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_transform(string_split(text, ' '), w -> length(w)) AS tokens
@@ -328,8 +316,8 @@ object TextQueries {
         |SELECT doc_id, count(*) AS n_tok,
         |  count(DISTINCT tok) AS n_unigram,
         |  count(DISTINCT bigram) AS n_bigram
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_doc_fingerprint" ->
+        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    "q_doc_fingerprint" -> Gate(qDocFingerprint,
       """WITH t AS (
         |  SELECT doc_id, text,
         |    list_transform(string_split(text, ' '), w -> length(w)) AS tokens
@@ -360,8 +348,8 @@ object TextQueries {
         |  list_max(fps) AS fp_max,
         |  len(regexp_extract_all(text, '[a-z]{1,4}'))::BIGINT
         |    AS n_bpe_tokens
-        |FROM w ORDER BY doc_id""".stripMargin,
-    "q_decontaminate" ->
+        |FROM w ORDER BY doc_id""".stripMargin),
+    "q_decontaminate" -> Gate(qDecontaminate,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_transform(string_split(text, ' '), w -> length(w)) AS tokens
@@ -408,12 +396,12 @@ object TextQueries {
         |FROM nfp n
         |LEFT JOIN hits h USING (eval_id)
         |LEFT JOIN worst wr USING (eval_id)
-        |ORDER BY eval_id""".stripMargin,
-    "q_dedup_exact" ->
+        |ORDER BY eval_id""".stripMargin),
+    "q_dedup_exact" -> Gate(qDedupExact,
       """SELECT md5(text) AS content_hash, count(*) AS n_copies,
         |  min(doc_id) AS rep_doc
-        |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin,
-    "q_word_jaccard" ->
+        |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin),
+    "q_word_jaccard" -> Gate(qWordJaccard,
       """WITH w AS (
         |  SELECT DISTINCT doc_id, u.word
         |  FROM documents, unnest(string_split(text, ' ')) AS u(word)
@@ -429,8 +417,8 @@ object TextQueries {
         |JOIN nw na ON na.doc_id = a_id
         |JOIN nw nb ON nb.doc_id = b_id
         |WHERE inter / (na.nw + nb.nw - inter) >= 0.25
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q_text_quality" ->
+        |ORDER BY a_id, b_id""".stripMargin),
+    "q_text_quality" -> Gate(qTextQuality,
       """WITH t AS (
         |  SELECT doc_id, lang, n_chars,
         |    string_split(text, ' ') AS words,
@@ -448,8 +436,8 @@ object TextQueries {
         |    'is','on','for','with','as','by','at','from','or','an')))
         |    / len(words)::DOUBLE * 0.5
         |    + least(len(words) / 100.0, 1.0) * 0.5 AS quality_score
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_lang_id" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    "q_lang_id" -> Gate(qLangId,
       """WITH t AS (
         |  SELECT doc_id, lang,
         |    len(list_filter(string_split(text, ' '), w -> w IN ('the','a',
@@ -461,14 +449,14 @@ object TextQueries {
         |  CASE WHEN ratio >= 0.05 THEN 'en' ELSE 'other' END AS pred_lang,
         |  (CASE WHEN ratio >= 0.05 THEN 'en' ELSE 'other' END) = lang
         |    AS agree
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_multimodal_meta" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    "q_multimodal_meta" -> Gate(qMultimodalMeta,
       """SELECT doc_id,
         |  strlen(text) AS byte_len,
         |  substr(md5(text), 1, 8) AS sig,
         |  32 + n_chars % 224 AS fake_width,
         |  32 + (n_chars * 7) % 224 AS fake_height,
         |  1 + n_chars % 16 AS fake_frames
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
 }

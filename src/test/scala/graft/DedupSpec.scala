@@ -1,6 +1,10 @@
 package graft
 
+import graft.core.Tables
+import graft.pipeline.Pipeline
 import graft.queries.{DedupQueries, EmbedQueries}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 
 /** LSH ANN quality: the bucketed top-k is a correct-by-construction
   * subset search; measure its recall against the exact brute force on
@@ -414,18 +418,21 @@ class DedupSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-    write(Seq("alpha beta gamma delta", "alpha beta gamma delta"))
-    val (sh1, _) = graft.queries.DedupQueries.minhashStore(spark, dir)
-    val n1 = sh1.count()
-    // mutate the corpus under the same dir (new lengths/mtimes)
-    write(Seq("one two three four five six", "seven eight nine ten",
-      "eleven twelve thirteen fourteen"))
-    val (sh2, _) = graft.queries.DedupQueries.minhashStore(spark, dir)
-    assert(sh2.count() != n1,
-      "store served stale shingles after the input dir changed")
-    // unchanged content re-serves the same staged store (resumed)
-    val (sh3, _) = graft.queries.DedupQueries.minhashStore(spark, dir)
-    assert(sh3.count() == sh2.count())
+    def store(): DataFrame =
+      DedupQueries.minhashStore(spark, dir, Tables.documents(spark, dir))._1
+    try {
+      write(Seq("alpha beta gamma delta", "alpha beta gamma delta"))
+      val n1 = store().count()
+      // mutate the corpus under the same dir (new lengths/mtimes)
+      write(Seq("one two three four five six", "seven eight nine ten",
+        "eleven twelve thirteen fourteen"))
+      val n2 = store().count()
+      assert(n2 != n1,
+        "store served stale shingles after the input dir changed")
+      // unchanged content re-serves the same staged store (resumed)
+      assert(store().count() == n2)
+    } finally FileUtils.deleteDirectory(
+      new java.io.File(Pipeline.tmpRoot("dedup_store", dir)))
   }
 
   test("min-label fixpoint: a deep path converges under a large cap " +

@@ -54,6 +54,21 @@ class HarnessSpec extends SparkSpec {
       !e.getMessage.contains("q_asof_join"), e.getMessage)
   }
 
+  test("the gate merge: a name declared in two modules fails naming " +
+    "it; the real merge holds 81 queries, each with a non-empty oracle") {
+    val g = Harness.Gate((_, _) => throw new IllegalStateException, "SELECT 1")
+    assert(SparkEntry.merge(Seq(Map("q_a" -> g), Map("q_b" -> g))).keySet ==
+      Set("q_a", "q_b"))
+    val e = intercept[IllegalArgumentException](SparkEntry.merge(Seq(
+      Map("q_a" -> g, "q_twice" -> g), Map("q_b" -> g, "q_twice" -> g))))
+    assert(e.getMessage.contains("q_twice") &&
+      !e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"),
+      e.getMessage)
+    assert(SparkEntry.queries.size == 81)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.oracleSql.forall(_._2.trim.nonEmpty))
+  }
+
   test("the bench battery tallies a good query's warm pass and lists a " +
     "failing one only among the errors") {
     clean()

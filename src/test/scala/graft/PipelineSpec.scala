@@ -2,6 +2,7 @@ package graft
 
 import graft.core.TokenGen
 import graft.pipeline.{FeaturePipeline, Pipeline}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -284,14 +285,17 @@ class PipelineSpec extends SparkSpec {
         ((col("id") * 37 % 101) / 10.0 * scale).as("value"),
         col("id").as("event_id"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    write(1.0)
-    val before = qFeaturePipelineResume(spark, dir).collect().toSeq
-    write(10.0)
-    val want = qFeaturePipeline(spark, dir).collect().toSeq
-    val changed = want != before
-    assert(changed, "fixture: scaling the values changed nothing")
-    val fresh = qFeaturePipelineResume(spark, dir).collect().toSeq == want
-    assert(fresh, "resume served checkpoints of the old events files")
+    try {
+      write(1.0)
+      val before = qFeaturePipelineResume(spark, dir).collect().toSeq
+      write(10.0)
+      val want = qFeaturePipeline(spark, dir).collect().toSeq
+      val changed = want != before
+      assert(changed, "fixture: scaling the values changed nothing")
+      val fresh = qFeaturePipelineResume(spark, dir).collect().toSeq == want
+      assert(fresh, "resume served checkpoints of the old events files")
+    } finally FileUtils.deleteDirectory(
+      new java.io.File(Pipeline.tmpRoot("ckpt_resume", dir)))
   }
 
   test("duplicated (entity, ts) rows: threading a tie column makes " +

@@ -47,7 +47,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("filter + projection reach the parquet scan (pushdown + pruning)") {
-    val plan = planOf(graft.core.Tables.lineitem(spark, sf)
+    val plan = planOf(graft.core.Tables.t(spark, sf, "lineitem")
       .where(col("l_quantity") > 45)
       .select(col("l_orderkey"), col("l_quantity")))
     assert(plan.contains("PushedFilters: [IsNotNull(l_quantity), " +
