@@ -20,10 +20,13 @@ object Harness {
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** NB: shuffle partitions are FIXED across parallelism levels so the
-    * low- and high-core runs of a ladder execute the IDENTICAL physical
-    * plan — the scaling measurement varies cores only, as a cluster
-    * would vary executors against a fixed partitioning. */
+  /** NB: shuffle partitions are FIXED across parallelism levels, as a
+    * cluster would vary executors against a fixed partitioning. The
+    * low- and high-core legs of a ladder still do not run identical
+    * task sets: Spark sizes file splits from the default parallelism
+    * (= cores here), so perfbench's flagship input (16 files, 1.1 MB)
+    * scans in 4 tasks at 4 cores and in 1 task at 1 core, while the
+    * pass's post-exchange stage runs the same 8 tasks on both legs. */
   def session(cores: Int, partitions: Int = 128): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")

@@ -17,10 +17,11 @@ import scala.collection.mutable
   * per-partition lineage + metrics"), and the one rule for when a
   * staged file tree may be reused.
   *
-  * Each stage writes its output under `<root>/<name>` plus a
-  * `_lineage.json` sidecar recording, per write task (= per output
-  * partition): records written, bytes written, run time, plus stage
-  * totals and the stage's content key ([[fingerprint]]). A stage whose
+  * Each stage writes its output as plain parquet (the one staged-file
+  * writer) under `<root>/<name>` plus a `_lineage.json` sidecar
+  * recording, per write task (= per output partition): records
+  * written, bytes written, run time, plus stage totals and the stage's
+  * content key ([[fingerprint]]). A stage whose
   * `_SUCCESS` marker exists and whose sidecar holds the key of the plan
   * asked for now is NOT recomputed — it is read back, so a killed run
   * re-executes only the stages after the last completed checkpoint. Any
@@ -66,16 +67,15 @@ object Pipeline {
     *
     * @param root    checkpoint root directory (any Hadoop-visible URI)
     * @param name    stage name — becomes the subdirectory
-    * @param write   writes the stage's rows to its dir (plain parquet
-    *                unless the stage needs another layout)
     * @param compute the stage plan; built on every call to key it, run
-    *                only when the stage does not resume
+    *                only when the stage does not resume. It is written
+    *                as plain parquet, so any layout the stage needs (a
+    *                sort within files, a partition count) belongs in
+    *                the plan, where the content key sees it
     * @return        the stage output read back from the checkpoint (so
     *                downstream stages cut lineage and re-read columnar)
     */
-  def stage(spark: SparkSession, root: String, name: String,
-            write: (DataFrame, String) => Unit = (df, dir) =>
-              df.write.mode("overwrite").parquet(dir))
+  def stage(spark: SparkSession, root: String, name: String)
            (compute: => DataFrame): DataFrame = synchronized {
     val dir = s"$root/$name"
     val fs = new Path(root).getFileSystem(
@@ -93,7 +93,7 @@ object Pipeline {
       val t0 = System.nanoTime()
       try {
         spark.sparkContext.setJobGroup(groupId, s"stage $name", false)
-        write(plan, dir)
+        plan.write.mode("overwrite").parquet(dir)
       } finally {
         spark.sparkContext.clearJobGroup()
         // listener-bus delivery is async; drain the bus so every task-end

@@ -62,8 +62,8 @@ object CurationQueries {
     * so the bounded Aggregator is hash-checked bit-for-bit. */
   def qDistinctKmv(spark: SparkSession, dir: String): DataFrame = {
     // source = the dedup battery's MATERIALIZED shingle store
-    // (DedupQueries.minhashStore, staged once per input dir through the
-    // bucketed feature-store sink): the 3-shingle md5 pass is shared
+    // (DedupQueries.minhashStore, staged once per input dir through
+    // Pipeline.stage): the 3-shingle md5 pass is shared
     // with q_minhash_lsh instead of recomputed here — the same
     // Hash64.md5_64 domain the oracle replays. lang attaches by joining
     // the narrow doc_id → lang projection (size-based broadcast at gate

@@ -86,30 +86,27 @@ object DedupQueries {
     sh.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** Dedup feature store (§2.0 sink path): the shingle-hash and
-    * signature stages are materialized through
-    * [[graft.core.Sinks.writeBucketed]] as two checkpointed stages under
-    * one root per input dir, and every later invocation whose documents
-    * files are unchanged reads them back ([[Pipeline.stage]]'s reuse
-    * rule). This is the 100-TB posture — signatures are a stored,
-    * entity-bucketed feature table, not a per-query recompute from raw
-    * text — and it replaces the round-4 in-memory `.cache()` of the
-    * shingle table, which cannot hold a corpus-scale exploded table.
-    * Signatures derive from the STORED shingles, so the 16-way min-agg
-    * reads the narrow bucketed table instead of re-shingling raw text.
-    * `docs` is `dir`'s documents table as the caller already built it:
-    * each parquet load costs a schema-inference job. */
+  /** Dedup feature store: the shingle-hash and signature stages are
+    * materialized as two checkpointed [[Pipeline.stage]]s under one
+    * root per input dir, and every later invocation whose documents
+    * files are unchanged reads them back (the stage's reuse rule). This
+    * is the 100-TB posture — signatures are a stored feature table, not
+    * a per-query recompute from raw text — and it replaces the round-4
+    * in-memory `.cache()` of the shingle table, which cannot hold a
+    * corpus-scale exploded table. Signatures derive from the STORED
+    * shingles, so the 16-way min-agg reads the narrow shingle table
+    * instead of re-shingling raw text. The shingle rows are sorted by
+    * (doc_id, shh) within each file: sorted rows compress better, so
+    * the read-back scan writes less shuffle. `docs` is `dir`'s
+    * documents table as the caller already built it: each parquet load
+    * costs a schema-inference job. */
   private[graft] def minhashStore(spark: SparkSession, dir: String,
                                   docs: DataFrame): (DataFrame, DataFrame) = {
     val root = Pipeline.tmpRoot("dedup_store", dir)
-    def bucketed(ts: String)(df: DataFrame, p: String): Unit =
-      graft.core.Sinks.writeBucketed(df, p, "doc_id", ts, 32)
-    val sh = Pipeline.stage(spark, root, "shingles", bucketed("shh"))(
-      shingleHashes(docs))
+    val sh = Pipeline.stage(spark, root, "shingles")(shingleHashes(docs)
+      .sortWithinPartitions(col("doc_id"), col("shh")))
       .select(col("doc_id"), col("shh"))
-    val sig = Pipeline.stage(spark, root, "signatures", bucketed("doc_id"))(
-      signatures(sh))
-    (sh, sig.drop("bucket"))
+    (sh, Pipeline.stage(spark, root, "signatures")(signatures(sh)))
   }
 
   /** MinHash + LSH banding: candidate pairs from band-bucket collisions

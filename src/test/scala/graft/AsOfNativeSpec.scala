@@ -92,43 +92,45 @@ class AsOfNativeSpec extends SparkSpec {
 
   test("pruning through the node: un-projected wide parquet inputs, a " +
     "narrow select — the scans read only keys + referenced payload") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_asof_prune").toString
-    (0 until 500).map(i => ("e" + i % 5, i.toLong, i * 0.5, i * 2.0,
-      s"junkL$i", i.toString * 3))
-      .toDF("entity_id", "ts", "lv", "l_unused", "l_junk1", "l_junk2")
-      .write.mode("overwrite").parquet(s"$dir/l")
-    (0 until 50).map(i => ("e" + i % 5, i.toLong * 10, i * 1.0,
-      s"junkR$i", i * 9.0))
-      .toDF("entity_id", "ts", "f_v", "r_junk", "r_unused")
-      .write.mode("overwrite").parquet(s"$dir/r")
-    // NO caller-side projection: the node claims only its keys, so
-    // Catalyst's ColumnPruning narrows the scans itself
-    val (l, r) = (spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"))
-    val joined = AsOfJoinNative.joinBackward(spark, l, r, "entity_id", "ts")
-    val narrow = Seq("entity_id", "ts", "lv", "f_v").map(col)
-    val fv = joined.collect()
-      .flatMap(row => Option(row.getAs[java.lang.Double]("f_v")))
-    val lKeys = Set("entity_id", "ts")
-    val (lNarrow, rNarrow) = (lKeys + "lv", lKeys + "f_v")
-    Seq(
-      ("narrow select", joined.select(narrow: _*), 500L, Set(lNarrow, rNarrow)),
-      ("filter + select", joined.where(col("f_v") > 3.0).select(narrow: _*),
-        fv.count(_ > 3.0).toLong, Set(lNarrow, rNarrow)),
-      ("groupBy", joined.groupBy("entity_id").agg(sum("f_v")), 5L,
-        Set(lKeys, rNarrow)),
-      ("no projection", joined, 500L, Set(l.columns.toSet, r.columns.toSet))
-    ).foreach { case (shape, df, rows, want) =>
-      assert(df.count() == rows, shape)
-      val plan = df.queryExecution.sparkPlan // before AQE wraps the scans
-      val scans = plan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.requiredSchema.fieldNames.toSet
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.scan.readSchema().fieldNames.toSet
+    withTempDir("graft_asof_prune") { dir =>
+      (0 until 500).map(i => ("e" + i % 5, i.toLong, i * 0.5, i * 2.0,
+        s"junkL$i", i.toString * 3))
+        .toDF("entity_id", "ts", "lv", "l_unused", "l_junk1", "l_junk2")
+        .write.mode("overwrite").parquet(s"$dir/l")
+      (0 until 50).map(i => ("e" + i % 5, i.toLong * 10, i * 1.0,
+        s"junkR$i", i * 9.0))
+        .toDF("entity_id", "ts", "f_v", "r_junk", "r_unused")
+        .write.mode("overwrite").parquet(s"$dir/r")
+      // NO caller-side projection: the node claims only its keys, so
+      // Catalyst's ColumnPruning narrows the scans itself
+      val (l, r) =
+        (spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"))
+      val joined = AsOfJoinNative.joinBackward(spark, l, r, "entity_id", "ts")
+      val narrow = Seq("entity_id", "ts", "lv", "f_v").map(col)
+      val fv = joined.collect()
+        .flatMap(row => Option(row.getAs[java.lang.Double]("f_v")))
+      val lKeys = Set("entity_id", "ts")
+      val (lNarrow, rNarrow) = (lKeys + "lv", lKeys + "f_v")
+      Seq(
+        ("narrow select", joined.select(narrow: _*), 500L,
+          Set(lNarrow, rNarrow)),
+        ("filter + select", joined.where(col("f_v") > 3.0).select(narrow: _*),
+          fv.count(_ > 3.0).toLong, Set(lNarrow, rNarrow)),
+        ("groupBy", joined.groupBy("entity_id").agg(sum("f_v")), 5L,
+          Set(lKeys, rNarrow)),
+        ("no projection", joined, 500L, Set(l.columns.toSet, r.columns.toSet))
+      ).foreach { case (shape, df, rows, want) =>
+        assert(df.count() == rows, shape)
+        val plan = df.queryExecution.sparkPlan // before AQE wraps the scans
+        val scans = plan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.requiredSchema.fieldNames.toSet
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.scan.readSchema().fieldNames.toSet
+        }
+        assert(scans.size == 2 && scans.toSet == want,
+          s"$shape: scans $scans, want $want in\n$plan")
       }
-      assert(scans.size == 2 && scans.toSet == want,
-        s"$shape: scans $scans, want $want in\n$plan")
     }
   }
 

@@ -410,29 +410,39 @@ class DedupSpec extends SparkSpec {
   test("dedup store staging is content-keyed: mutating the input dir " +
     "in-process serves fresh signatures, not the stale store") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_store_key").toString
-    def write(texts: Seq[String]): Unit =
-      texts.zipWithIndex
-        .map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-    def store(): DataFrame =
-      DedupQueries.minhashStore(spark, dir, Tables.documents(spark, dir))._1
-    try {
-      write(Seq("alpha beta gamma delta", "alpha beta gamma delta"))
-      val n1 = store().count()
-      // mutate the corpus under the same dir (new lengths/mtimes)
-      write(Seq("one two three four five six", "seven eight nine ten",
-        "eleven twelve thirteen fourteen"))
-      val n2 = store().count()
-      assert(n2 != n1,
-        "store served stale shingles after the input dir changed")
-      // unchanged content re-serves the same staged store (resumed)
-      assert(store().count() == n2)
-    } finally FileUtils.deleteDirectory(
-      new java.io.File(Pipeline.tmpRoot("dedup_store", dir)))
+    withTempDir("graft_store_key") { dir =>
+      def write(texts: Seq[String]): Unit =
+        texts.zipWithIndex
+          .map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
+          .toDF("doc_id", "text", "lang", "source", "n_chars")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$dir/documents.parquet")
+      def store(): DataFrame =
+        DedupQueries.minhashStore(spark, dir, Tables.documents(spark, dir))._1
+      val root = Pipeline.tmpRoot("dedup_store", dir)
+      try {
+        write(Seq("alpha beta gamma delta", "alpha beta gamma delta"))
+        val n1 = store().count()
+        // mutate the corpus under the same dir (new lengths/mtimes)
+        write(Seq("one two three four five six", "seven eight nine ten",
+          "eleven twelve thirteen fourteen"))
+        val n2 = store().count()
+        assert(n2 != n1,
+          "store served stale shingles after the input dir changed")
+        // unchanged content re-serves the same staged store (resumed)
+        assert(store().count() == n2)
+        // each stage is plain parquet: no partition dirs, and the files
+        // read back with exactly the stage's own columns
+        Seq("shingles" -> Seq("doc_id", "shh"),
+          "signatures" -> ("doc_id" +: (0 until 16).map(i => s"sig$i") :+
+            "nsh")).foreach { case (stage, cols) =>
+          val parts = new java.io.File(s"$root/$stage").list()
+            .filter(_.startsWith("bucket="))
+          assert(parts.isEmpty, s"$stage: ${parts.mkString(", ")}")
+          assert(spark.read.parquet(s"$root/$stage").columns.toSeq == cols)
+        }
+      } finally FileUtils.deleteDirectory(new java.io.File(root))
+    }
   }
 
   test("min-label fixpoint: a deep path converges under a large cap " +

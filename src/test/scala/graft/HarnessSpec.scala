@@ -11,6 +11,11 @@ class HarnessSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  /** A path under `java.io.tmpdir` that nothing creates. */
+  private def missingDir(): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_no_such_sf_${java.util.UUID.randomUUID}").toString
+
   test("a builder that throws returns Left") {
     clean()
     val r = Harness.run(spark, throw new IllegalStateException("boom"))
@@ -19,8 +24,7 @@ class HarnessSpec extends SparkSpec {
 
   test("a gate query on a missing sf dir returns Left") {
     clean()
-    val missing = java.nio.file.Files.createTempDirectory("graft_harness")
-      .resolve("no_such_sf").toString
+    val missing = missingDir()
     val r = Harness.run(spark, SparkEntry.queries("q_asof_join")(spark, missing))
     assert(r.isLeft, r)
   }
@@ -73,8 +77,7 @@ class HarnessSpec extends SparkSpec {
     "failing one only among the errors") {
     clean()
     val asof = SparkEntry.queries("q_asof_join")
-    val missing = java.nio.file.Files.createTempDirectory("graft_harness")
-      .resolve("no_such_sf").toString
+    val missing = missingDir()
     val out = Bench.battery(spark, "/root/testdata/sf0.001", Seq(
       "q_asof_join" -> asof,
       "q_missing" -> ((s, _) => asof(s, missing)))).toMap

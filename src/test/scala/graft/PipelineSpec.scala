@@ -8,7 +8,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** Checkpoint/lineage/resume layer + flagship pipeline end-to-end vs a
@@ -19,12 +18,6 @@ class PipelineSpec extends SparkSpec {
 
   import spark.implicits._
   import PipelineSpec.{cfg, pointRows}
-
-  private def tempDir(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   private lazy val points = PipelineSpec.points(spark)
 
@@ -171,131 +164,136 @@ class PipelineSpec extends SparkSpec {
 
   test("checkpointed stages write per-partition lineage and resume " +
     "without recomputation") {
-    val root = tempDir("graft-ckpt").toString
-    def runOnce(): Array[org.apache.spark.sql.Row] =
-      Pipeline.stage(spark, root, "stageA") {
-        points.groupBy($"entity_id").agg(count(lit(1)).as("n"),
-          sum($"value").as("s"))
-      }.orderBy($"entity_id").collect()
-    val (first, ran) = jobGroups(runOnce())
-    assert(ran.contains("graft-stage-stageA"), s"no stage write job: $ran")
-    val lineage = Pipeline.readLineage(spark, root, "stageA")
-    assert(lineage.isDefined, "lineage sidecar written")
-    val js = lineage.get
-    assert(js.contains("\"records\":3"), s"3 output rows recorded: $js")
-    assert(js.contains("\"partition\""), "per-partition entries present")
+    withTempDir("graft-ckpt") { root =>
+      def runOnce(): Array[org.apache.spark.sql.Row] =
+        Pipeline.stage(spark, root, "stageA") {
+          points.groupBy($"entity_id").agg(count(lit(1)).as("n"),
+            sum($"value").as("s"))
+        }.orderBy($"entity_id").collect()
+      val (first, ran) = jobGroups(runOnce())
+      assert(ran.contains("graft-stage-stageA"), s"no stage write job: $ran")
+      val lineage = Pipeline.readLineage(spark, root, "stageA")
+      assert(lineage.isDefined, "lineage sidecar written")
+      val js = lineage.get
+      assert(js.contains("\"records\":3"), s"3 output rows recorded: $js")
+      assert(js.contains("\"partition\""), "per-partition entries present")
 
-    val (second, resumed) = jobGroups(runOnce())
-    assert(!resumed.contains("graft-stage-stageA"),
-      "resumed stage must not recompute")
-    assert(Pipeline.readLineage(spark, root, "stageA") == lineage,
-      "resume rewrote the sidecar")
-    assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq,
-      "resumed output identical")
+      val (second, resumed) = jobGroups(runOnce())
+      assert(!resumed.contains("graft-stage-stageA"),
+        "resumed stage must not recompute")
+      assert(Pipeline.readLineage(spark, root, "stageA") == lineage,
+        "resume rewrote the sidecar")
+      assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq,
+        "resumed output identical")
 
-    // the key cannot see what an RDD holds: such a stage never resumes
-    val fromRdd = spark.createDataFrame(points.rdd, points.schema)
-    Seq(1, 2).foreach { call =>
-      val (_, groups) = jobGroups(Pipeline.stage(spark, root, "stageB")(
-        fromRdd))
-      assert(groups.contains("graft-stage-stageB"),
-        s"call $call of an RDD-backed stage resumed")
+      // the key cannot see what an RDD holds: such a stage never resumes
+      val fromRdd = spark.createDataFrame(points.rdd, points.schema)
+      Seq(1, 2).foreach { call =>
+        val (_, groups) = jobGroups(Pipeline.stage(spark, root, "stageB")(
+          fromRdd))
+        assert(groups.contains("graft-stage-stageB"),
+          s"call $call of an RDD-backed stage resumed")
+      }
     }
   }
 
   test("a reused checkpoint root recomputes after a config change and " +
     "after an input change: stages resume only on an equal content key") {
-    val root = tempDir("graft-ckpt-key").toString
-    val a = cfg.copy(wsize = 64L, wstep = 32L)
-    val b = a.copy(wsize = 96L)
-    val x10 = pointRows.map { case (e, t, v) => (e, t, v * 10) }
-      .toDF("entity_id", "ts", "value")
-    val runA = pipelineRows(a, points, Some(root))
-    val s1 = Pipeline.readLineage(spark, root, "s1_sessionized")
+    withTempDir("graft-ckpt-key") { root =>
+      val a = cfg.copy(wsize = 64L, wstep = 32L)
+      val b = a.copy(wsize = 96L)
+      val x10 = pointRows.map { case (e, t, v) => (e, t, v * 10) }
+        .toDF("entity_id", "ts", "value")
+      val runA = pipelineRows(a, points, Some(root))
+      val s1 = Pipeline.readLineage(spark, root, "s1_sessionized")
 
-    val wantB = pipelineRows(b, points, None)
-    assert(wantB != runA, "fixture: wsize 64 -> 96 changed no row")
-    assert(pipelineRows(b, points, Some(root)) == wantB,
-      "the config change resumed stale stages")
-    assert(Pipeline.readLineage(spark, root, "s1_sessionized") == s1,
-      "stage 1 does not read wsize, so it must resume")
+      val wantB = pipelineRows(b, points, None)
+      assert(wantB != runA, "fixture: wsize 64 -> 96 changed no row")
+      assert(pipelineRows(b, points, Some(root)) == wantB,
+        "the config change resumed stale stages")
+      assert(Pipeline.readLineage(spark, root, "s1_sessionized") == s1,
+        "stage 1 does not read wsize, so it must resume")
 
-    val wantX = pipelineRows(b, x10, None)
-    assert(wantX != wantB, "fixture: values x10 changed no row")
-    assert(pipelineRows(b, x10, Some(root)) == wantX,
-      "the input change resumed stale stages")
+      val wantX = pipelineRows(b, x10, None)
+      assert(wantX != wantB, "fixture: values x10 changed no row")
+      assert(pipelineRows(b, x10, Some(root)) == wantX,
+        "the input change resumed stale stages")
+    }
   }
 
   test("a checkpoint root written by another process and session " +
     "resumes with no write job and identical rows") {
-    val root = tempDir("graft-xproc").toString
-    val log = new java.io.File(s"$root.log")
-    log.deleteOnExit()
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
-      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray ++
-      Seq("-cp", sys.props("java.class.path"),
-        "graft.PipelineCheckpointRun", root)
-    val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log).start().waitFor()
-    assert(exit == 0, s"checkpoint run failed, see $log")
-    val (resumed, groups) = jobGroups(pipelineRows(cfg, points, Some(root)))
-    assert(!groups.exists(_.startsWith("graft-stage-")),
-      s"stages recomputed across processes: $groups")
-    assert(resumed == pipelineRows(cfg, points, None),
-      "rows resumed across processes differ from a fresh run")
+    withTempDir("graft-xproc") { root =>
+      val log = new java.io.File(s"$root.log")
+      log.deleteOnExit()
+      val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++
+        org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray ++
+        Seq("-cp", sys.props("java.class.path"),
+          "graft.PipelineCheckpointRun", root)
+      val exit = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+        .redirectOutput(log).start().waitFor()
+      assert(exit == 0, s"checkpoint run failed, see $log")
+      val (resumed, groups) = jobGroups(pipelineRows(cfg, points, Some(root)))
+      assert(!groups.exists(_.startsWith("graft-stage-")),
+        s"stages recomputed across processes: $groups")
+      assert(resumed == pipelineRows(cfg, points, None),
+        "rows resumed across processes differ from a fresh run")
+    }
   }
 
   test("resume after partial failure: only missing stages recompute") {
-    val root = tempDir("graft-resume").toString
-    val out1 = FeaturePipeline.run(spark, points, "entity_id", "ts",
-      "value", cfg, checkpoint = Some(root))
-      .orderBy($"entity_id", $"ts").collect()
+    withTempDir("graft-resume") { root =>
+      val out1 = FeaturePipeline.run(spark, points, "entity_id", "ts",
+        "value", cfg, checkpoint = Some(root))
+        .orderBy($"entity_id", $"ts").collect()
 
-    // simulate a crash that lost stage 3's output
-    val s3 = new java.io.File(s"$root/s3_vectors")
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete()
+      // simulate a crash that lost stage 3's output
+      val s3 = new java.io.File(s"$root/s3_vectors")
+      def rmrf(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rmrf)
+        f.delete()
+      }
+      rmrf(s3)
+      assert(!s3.exists)
+      val s1Lineage = Pipeline.readLineage(spark, root, "s1_sessionized").get
+
+      val out2 = FeaturePipeline.run(spark, points, "entity_id", "ts",
+        "value", cfg, checkpoint = Some(root))
+        .orderBy($"entity_id", $"ts").collect()
+
+      assert(Pipeline.readLineage(spark, root, "s1_sessionized").get
+        == s1Lineage, "completed stage untouched on resume")
+      assert(out1.map(_.toString).toSeq == out2.map(_.toString).toSeq,
+        "resumed pipeline output identical")
     }
-    rmrf(s3)
-    assert(!s3.exists)
-    val s1Lineage = Pipeline.readLineage(spark, root, "s1_sessionized").get
-
-    val out2 = FeaturePipeline.run(spark, points, "entity_id", "ts",
-      "value", cfg, checkpoint = Some(root))
-      .orderBy($"entity_id", $"ts").collect()
-
-    assert(Pipeline.readLineage(spark, root, "s1_sessionized").get
-      == s1Lineage, "completed stage untouched on resume")
-    assert(out1.map(_.toString).toSeq == out2.map(_.toString).toSeq,
-      "resumed pipeline output identical")
   }
 
   test("the resume query's checkpoints are keyed by the events content: " +
     "rewriting events under the same dir resumes nothing stale") {
     import graft.queries.PipelineQueries.{qFeaturePipeline,
       qFeaturePipelineResume}
-    val dir = tempDir("graft_resume_key").toString
-    // 3 users, 40 events each, 7 h apart: several sessions and windows
-    def write(scale: Double): Unit =
-      spark.range(120).select(
-        (col("id") % 3).as("user_id"),
-        timestamp_micros(lit(1700000000000000L) + col("id") * 25200000000L)
-          .as("ts"),
-        ((col("id") * 37 % 101) / 10.0 * scale).as("value"),
-        col("id").as("event_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    try {
-      write(1.0)
-      val before = qFeaturePipelineResume(spark, dir).collect().toSeq
-      write(10.0)
-      val want = qFeaturePipeline(spark, dir).collect().toSeq
-      val changed = want != before
-      assert(changed, "fixture: scaling the values changed nothing")
-      val fresh = qFeaturePipelineResume(spark, dir).collect().toSeq == want
-      assert(fresh, "resume served checkpoints of the old events files")
-    } finally FileUtils.deleteDirectory(
-      new java.io.File(Pipeline.tmpRoot("ckpt_resume", dir)))
+    withTempDir("graft_resume_key") { dir =>
+      // 3 users, 40 events each, 7 h apart: several sessions and windows
+      def write(scale: Double): Unit =
+        spark.range(120).select(
+          (col("id") % 3).as("user_id"),
+          timestamp_micros(lit(1700000000000000L) + col("id") * 25200000000L)
+            .as("ts"),
+          ((col("id") * 37 % 101) / 10.0 * scale).as("value"),
+          col("id").as("event_id"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      try {
+        write(1.0)
+        val before = qFeaturePipelineResume(spark, dir).collect().toSeq
+        write(10.0)
+        val want = qFeaturePipeline(spark, dir).collect().toSeq
+        val changed = want != before
+        assert(changed, "fixture: scaling the values changed nothing")
+        val fresh = qFeaturePipelineResume(spark, dir).collect().toSeq == want
+        assert(fresh, "resume served checkpoints of the old events files")
+      } finally FileUtils.deleteDirectory(
+        new java.io.File(Pipeline.tmpRoot("ckpt_resume", dir)))
+    }
   }
 
   test("duplicated (entity, ts) rows: threading a tie column makes " +

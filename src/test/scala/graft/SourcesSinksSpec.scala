@@ -1,10 +1,8 @@
 package graft
 
-import graft.core.{Sinks, Tables}
-import org.apache.spark.sql.functions._
+import graft.core.Tables
 
-/** The DSv2 catalog source seam and the bucketed feature-store sink:
-  * full-fidelity round-trips and scan-level partition pruning. */
+/** The DSv2 catalog source seam: a full-fidelity round-trip. */
 class SourcesSinksSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -14,85 +12,51 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("DSv2 catalog round-trip: V2 CTAS through createTable, read back " +
     "as a BatchScan via the Tables.t catalog seam — results identical") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_cat").toString
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.core.GraftParquetCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_cat.root", wh)
-    try {
-      val truth = spark.read.parquet(s"$sf/events.parquet")
-      // genuine V2 CTAS: plans CreateTableAsSelect against the catalog
-      truth.writeTo("graft_cat.db.events").create()
-      assert(new java.io.File(s"$wh/db/events").listFiles()
-        .exists(_.getName.endsWith(".parquet")), "CTAS wrote no files")
-      // the production seam: Tables.t resolves <catalog>.<db>.<name>
-      spark.conf.set("graft.catalog", "graft_cat")
-      spark.conf.set("graft.catalog.db", "db")
-      val back = try Tables.events(spark, "IGNORED_WHEN_CATALOG_SET")
-      finally {
-        spark.conf.unset("graft.catalog")
-        spark.conf.unset("graft.catalog.db")
+    withTempDir("graft_cat") { wh =>
+      spark.conf.set("spark.sql.catalog.graft_cat",
+        classOf[graft.core.GraftParquetCatalog].getName)
+      spark.conf.set("spark.sql.catalog.graft_cat.root", wh)
+      try {
+        val truth = spark.read.parquet(s"$sf/events.parquet")
+        // genuine V2 CTAS: plans CreateTableAsSelect against the catalog
+        truth.writeTo("graft_cat.db.events").create()
+        assert(new java.io.File(s"$wh/db/events").listFiles()
+          .exists(_.getName.endsWith(".parquet")), "CTAS wrote no files")
+        // the production seam: Tables.t resolves <catalog>.<db>.<name>
+        spark.conf.set("graft.catalog", "graft_cat")
+        spark.conf.set("graft.catalog.db", "db")
+        val back = try Tables.events(spark, "IGNORED_WHEN_CATALOG_SET")
+        finally {
+          spark.conf.unset("graft.catalog")
+          spark.conf.unset("graft.catalog.db")
+        }
+        assert(back.schema == truth.schema,
+          s"catalog schema drifted: ${back.schema.toDDL}")
+        // the read is the DSv2 path (BatchScan), not the V1 file scan
+        val plan = back.queryExecution.executedPlan
+        assert(plan.exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.BatchScanExec]),
+          s"catalog read did not plan a DSv2 BatchScan:\n$plan")
+        assert(canon(back) == canon(truth), "catalog round-trip not exact")
+        // catalog surface: list / exists / rename / drop
+        val cat = spark.sessionState.catalogManager.catalog("graft_cat")
+          .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+        val ns = Array("db")
+        val id = org.apache.spark.sql.connector.catalog.Identifier
+          .of(ns, "events")
+        assert(cat.listTables(ns).map(_.name).toSeq == Seq("events"))
+        assert(cat.tableExists(id))
+        val id2 = org.apache.spark.sql.connector.catalog.Identifier
+          .of(ns, "events2")
+        cat.renameTable(id, id2)
+        assert(!cat.tableExists(id) && cat.tableExists(id2))
+        assert(canon(spark.read.table("graft_cat.db.events2")) ==
+          canon(truth), "rename lost rows")
+        assert(cat.dropTable(id2) && !cat.tableExists(id2))
+      } finally {
+        spark.conf.unset("spark.sql.catalog.graft_cat")
+        spark.conf.unset("spark.sql.catalog.graft_cat.root")
       }
-      assert(back.schema == truth.schema,
-        s"catalog schema drifted: ${back.schema.toDDL}")
-      // the read is the DSv2 path (BatchScan), not the V1 file scan
-      val plan = back.queryExecution.executedPlan
-      assert(plan.exists(_.isInstanceOf[
-        org.apache.spark.sql.execution.datasources.v2.BatchScanExec]),
-        s"catalog read did not plan a DSv2 BatchScan:\n$plan")
-      assert(canon(back) == canon(truth), "catalog round-trip not exact")
-      // catalog surface: list / exists / rename / drop
-      val cat = spark.sessionState.catalogManager.catalog("graft_cat")
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
-      val ns = Array("db")
-      val id = org.apache.spark.sql.connector.catalog.Identifier
-        .of(ns, "events")
-      assert(cat.listTables(ns).map(_.name).toSeq == Seq("events"))
-      assert(cat.tableExists(id))
-      val id2 = org.apache.spark.sql.connector.catalog.Identifier
-        .of(ns, "events2")
-      cat.renameTable(id, id2)
-      assert(!cat.tableExists(id) && cat.tableExists(id2))
-      assert(canon(spark.read.table("graft_cat.db.events2")) ==
-        canon(truth), "rename lost rows")
-      assert(cat.dropTable(id2) && !cat.tableExists(id2))
-    } finally {
-      spark.conf.unset("spark.sql.catalog.graft_cat")
-      spark.conf.unset("spark.sql.catalog.graft_cat.root")
     }
-  }
-
-  test("bucketed sink: entity rows co-locate in one bucket dir and an " +
-    "entity scan prunes partitions at the directory level") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val path = s"$dir/events_store"
-    val events = spark.read.parquet(s"$sf/events.parquet")
-    Sinks.writeBucketed(events, path, "user_id", "ts", nBuckets = 8)
-
-    val back = spark.read.parquet(path)
-    assert(back.count() == events.count(), "row count drifted")
-    // every entity maps to exactly one bucket
-    val multi = back.groupBy(col("user_id"))
-      .agg(countDistinct(col("bucket")).as("nb"))
-      .where(col("nb") > 1).count()
-    assert(multi == 0, "an entity spans multiple buckets")
-
-    val anyUser = events.select(col("user_id")).head().get(0)
-    val scan = Sinks.entityScan(spark, path, "user_id", 8, anyUser)
-    val expected = events.where(col("user_id") === lit(anyUser)).count()
-    assert(scan.count() == expected, "pruned scan lost rows")
-    // a lookup literal of a WIDER type must still hash into the right
-    // bucket (murmur3 hashes Int 5 and Long 5 differently — the scan
-    // casts to the stored column type first)
-    val widened = anyUser match {
-      case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue())
-      case other => other
-    }
-    assert(Sinks.entityScan(spark, path, "user_id", 8, widened).count()
-      == expected, "type-widened lookup pruned to the wrong bucket")
-    // the partition predicate must reach the scan (directory pruning)
-    val plan = scan.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("PartitionFilters: [isnotnull(bucket"),
-      s"no partition filter in:\n$plan")
   }
 }

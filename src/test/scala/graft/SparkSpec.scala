@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,13 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   def fixture(name: String): JsonNode = SparkSpec.fixture(name)
+
+  /** `body` run on a fresh temp dir named `prefix<random>`, which is
+    * deleted with all it holds when `body` returns or throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally FileUtils.deleteDirectory(dir)
+  }
 
   def darr(node: JsonNode): IndexedSeq[Double] =
     (0 until node.size()).map { i =>

@@ -98,34 +98,35 @@ class StreamingSpec extends SparkSpec {
   test("streaming gate queries: repeated runs return equal rows and " +
     "leave no memory-sink view or staging dir behind") {
     // a tiny sf dir: 3 documents (one duplicate), 40 events on 3 users
-    val sf = java.nio.file.Files.createTempDirectory("graft_replay").toString
-    Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "e f g h"))
-      .toDF("doc_id", "text").write.parquet(s"$sf/documents.parquet")
-    spark.range(40).select(col("id").as("event_id"),
-      (col("id") % 3).as("user_id"),
-      timestamp_micros(lit(1700000000000000L) + col("id") * 60000000L)
-        .as("ts"),
-      when(col("id") % 4 === 0, "error").otherwise("view").as("event_type"),
-      (col("id") * 0.5).as("value"))
-      .write.parquet(s"$sf/events.parquet")
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def staged(): Set[String] = Option(tmp.list()).toSeq.flatten
-      .filter(n => n.startsWith("graft_") && n.contains("stream")).toSet
-    val before = staged()
-    Seq(graft.queries.StreamQueries.qDedupStream _,
-      graft.queries.StreamQueries.qAsofStream _).foreach { q =>
-      val first = q(spark, sf)
-      val rows = first.collect().toSeq
-      assert(rows.nonEmpty)
-      (2 to 3).foreach(i => assert(q(spark, sf).collect().toSeq == rows,
-        s"call $i returned other rows"))
-      assert(first.collect().toSeq == rows,
-        "the first call's result no longer reads its sink")
+    withTempDir("graft_replay") { sf =>
+      Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "e f g h"))
+        .toDF("doc_id", "text").write.parquet(s"$sf/documents.parquet")
+      spark.range(40).select(col("id").as("event_id"),
+        (col("id") % 3).as("user_id"),
+        timestamp_micros(lit(1700000000000000L) + col("id") * 60000000L)
+          .as("ts"),
+        when(col("id") % 4 === 0, "error").otherwise("view").as("event_type"),
+        (col("id") * 0.5).as("value"))
+        .write.parquet(s"$sf/events.parquet")
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+      def staged(): Set[String] = Option(tmp.list()).toSeq.flatten
+        .filter(n => n.startsWith("graft_") && n.contains("stream")).toSet
+      val before = staged()
+      Seq(graft.queries.StreamQueries.qDedupStream _,
+        graft.queries.StreamQueries.qAsofStream _).foreach { q =>
+        val first = q(spark, sf)
+        val rows = first.collect().toSeq
+        assert(rows.nonEmpty)
+        (2 to 3).foreach(i => assert(q(spark, sf).collect().toSeq == rows,
+          s"call $i returned other rows"))
+        assert(first.collect().toSeq == rows,
+          "the first call's result no longer reads its sink")
+      }
+      val views = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_"))
+      assert(views.isEmpty, s"memory-sink views left: ${views.mkString(", ")}")
+      assert(staged() == before,
+        s"staging dirs left: ${(staged() -- before).mkString(", ")}")
     }
-    val views = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_"))
-    assert(views.isEmpty, s"memory-sink views left: ${views.mkString(", ")}")
-    assert(staged() == before,
-      s"staging dirs left: ${(staged() -- before).mkString(", ")}")
   }
 }
